@@ -1,12 +1,24 @@
-"""Connected components over candidate-pair graphs — the clustering step of
-a complete dedup pipeline.
+"""Graph operators over edge lists, starting with connected components —
+the clustering step of a complete dedup pipeline.
 
 Near-dup detection (MinHash LSH / SimHash / n-gram Jaccard / embedding LSH,
 see :mod:`preprocessor_spark.operators.dedup`) emits PAIRS; turning pairs
 into keep/drop decisions needs the transitive closure: if A~B and B~C, then
 {A,B,C} is one duplicate cluster and exactly one representative survives.
 
-Algorithm: min-label propagation with POINTER JUMPING. Per round:
+Three edge fixpoints — :func:`connected_components`,
+:func:`label_propagation` and :func:`shortest_hops` — share one route
+decision, made by :func:`_solve_edge_fixpoint` against one edge budget,
+``DRIVER_SOLVE_MAX_EDGES``. The edge table is built, persisted and counted
+once. At or under the budget it is collected and solved by a small numpy
+kernel on the driver, which returns the distributed loop's table
+row-for-row: a graph that fits in driver memory costs a few scheduler
+barriers per distributed round but microseconds to solve locally. Above the
+budget the operator's distributed loop runs. Every exit path unpersists the
+edge table, and each call logs its edge count and route at INFO.
+
+The distributed connected-components loop is min-label propagation with
+POINTER JUMPING. Per round:
 
 1. propagate — l(u) ← min(l(u), min over neighbors v of l(v)): one keyed
    join + one groupBy(min), both ordinary hash shuffles;
@@ -35,17 +47,35 @@ per round instead of a join-and-count.
 
 from __future__ import annotations
 
+import logging
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
-from preprocessor_spark.caching import checkpoint_frame, register_persisted
+from preprocessor_spark.caching import (
+    checkpoint_frame,
+    fixpoint_shuffle_scope,
+    register_persisted,
+)
 
-# Per-round vertex-table broadcast budget for the fixpoint loops below —
-# the same dial label_propagation ships with. ~8M nodes × tens of bytes is
-# a few hundred MB broadcast: fine on real executors, and far under the
-# 8 GB / 512M-row broadcast hard cap. Past it every loop degrades to its
-# classic keyed-join (one-shuffle-per-round Pregel) shape.
+_log = logging.getLogger(__name__)
+
+# Edge budget for solving connected_components, label_propagation and
+# shortest_hops on the driver: ~2M edges of two ids is a few tens of MB of
+# Arrow collect and numpy state, far under a driver heap, while every
+# distributed round costs several scheduler barriers. Data-sized edge lists
+# at scale exceed it, so the distributed loops stay the 100 TB path.
+DRIVER_SOLVE_MAX_EDGES = 2_000_000
+
+# Per-round vertex-table broadcast budget for the fixpoint loops below.
+# ~8M nodes × tens of bytes is a few hundred MB broadcast: fine on real
+# executors, and far under the 8 GB / 512M-row broadcast hard cap. Past it
+# every loop degrades to its classic keyed-join (one-shuffle-per-round
+# Pregel) shape.
 _BROADCAST_VERTEX_LIMIT = 8_000_000
 # ...and the floor under which broadcasting is NOT worth it: below ~half a
 # million edges the loop's keyed join (already clamped to a few shuffle
@@ -66,15 +96,14 @@ def _maybe_broadcast(
     its MEASURED row count stays under ``limit`` AND the edge table it
     joins is big enough (``edge_rows`` ≥ _BROADCAST_MIN_EDGES) for the
     avoided per-round edge exchange to beat the broadcast's driver
-    round-trip (the label_propagation / pagerank discipline): the
-    persisted edge table then never re-shuffles inside the loop — the join
-    is a map-side BroadcastHashJoin and the only per-round exchange left
-    is the vertex-bounded aggregate. Both counts come from the loop's own
-    setup/convergence probes, so the decision is runtime-adaptive: at
-    100 TB frontiers the vertex count exceeds the limit and the keyed join
-    stands. Join RESULTS are identical either way; the downstream
-    min/count aggregates are order-independent exact arithmetic, so the
-    fixpoint output is bit-equal under both shapes."""
+    round-trip: the persisted edge table then never re-shuffles inside the
+    loop — the join is a map-side BroadcastHashJoin and the only per-round
+    exchange left is the vertex-bounded aggregate. Both counts come from
+    the loop's own setup/convergence probes, so the decision is
+    runtime-adaptive: at 100 TB frontiers the vertex count exceeds the
+    limit and the keyed join stands. Join RESULTS are identical either
+    way; the downstream min/count aggregates are order-independent exact
+    arithmetic, so the fixpoint output is bit-equal under both shapes."""
     if edge_rows is not None and edge_rows < _BROADCAST_MIN_EDGES:
         return df
     if n_rows is not None and n_rows <= limit:
@@ -82,48 +111,116 @@ def _maybe_broadcast(
     return df
 
 
-def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
-    """Exact (id, component) table for a SMALL materialized symmetric edge
-    list: min-representative union-find with path compression. component =
-    min id reachable from id — the same identity the distributed min-label
-    fixpoint converges to, so the returned table is equal row-for-row.
-    Bounded by ``connected_components(driver_below=...)``; the collect is
-    the only data movement (≤ driver_below rows of two ids)."""
-    from pyspark.sql.types import StructField, StructType
+def _solve_edge_fixpoint(
+    op: str,
+    edges: DataFrame,
+    symmetrize: bool,
+    kernel,
+    fields: list,
+    distributed,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """Route one edge fixpoint to the driver or to its distributed loop.
 
-    id_type = edges.schema["src"].dataType
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    nodes = set()
-    for r in edges.collect():
-        a, b = r["src"], r["dst"]
-        nodes.add(a)
-        nodes.add(b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra  # union by MIN root: the root IS the min id
-    rows = [(x, find(x)) for x in sorted(nodes)]
-    schema = StructType(
-        [StructField("id", id_type, True), StructField("component", id_type, True)]
-    )
-    if rows:
-        import pandas as pd
-
-        # Arrow-path createDataFrame: ships as Arrow batches, not pickled Rows
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["id", "component"]), schema
+    ``edges`` has two id columns (source, destination). With
+    ``symmetrize`` it becomes the symmetric, self-loop-free, distinct edge
+    list; otherwise it is taken as given. The table is persisted and
+    counted once. At or under ``DRIVER_SOLVE_MAX_EDGES`` edges
+    :func:`_driver_solve` runs ``kernel`` and builds the typed output from
+    ``fields``; above it ``distributed(edges, n_edges)`` runs. The edge
+    table is unpersisted on every exit path: both routes return
+    self-contained frames (local data or materialized checkpoints)."""
+    if symmetrize:
+        s, d = edges.columns
+        # ONE explode — a union of two selects would scan (and recompute)
+        # the possibly-expensive input twice before the persist below
+        # materializes. Self-loops drop out (they never change a label).
+        edges = (
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(s, d),
+                        F.struct(F.col(d).alias(s), F.col(s).alias(d)),
+                    )
+                ).alias("e")
+            )
+            .select("e.*")
+            .filter(F.col(s) != F.col(d))
+            .distinct()
         )
-    return spark.createDataFrame(rows, schema)
+    edges = register_persisted(edges.persist())
+    try:
+        n_edges = edges.count()  # materializes the persist; sizes the route
+        route = "driver" if n_edges <= DRIVER_SOLVE_MAX_EDGES else "distributed"
+        _log.info(
+            "%s: %d edges, driver budget %d, route %s", op, n_edges, DRIVER_SOLVE_MAX_EDGES, route
+        )
+        if route == "driver":
+            return _driver_solve(edges, kernel, fields, seeds)
+        return distributed(edges, n_edges)
+    finally:
+        edges.unpersist()
+
+
+def _driver_solve(
+    edges: DataFrame, kernel, fields: list, seeds: DataFrame | None
+) -> DataFrame:
+    """Collect a small edge list (and one-column ``seeds``) as Arrow, map
+    ids to their RANK in native sort order, run
+    ``kernel(src, dst, ids, seed)`` and rebuild a typed frame.
+
+    ``src``/``dst``/``seed`` are rank arrays and ``ids`` holds the ids in
+    rank order, so a min rank is the min id and a rank tie-break is the
+    id tie-break. Native order — int64 numeric, codepoint order for
+    strings — is Spark's BIGINT / UTF8String binary order on these id
+    domains. ``kernel`` returns a column dict in ``fields`` order;
+    ``fields`` lists (name, type), where type None means the edge id type
+    (nullable)."""
+    id_type = edges.schema[0].dataType
+    schema = StructType(
+        [StructField(name, t or id_type, t is None) for name, t in fields]
+    )
+    spark = edges.sparkSession
+    pdf = edges.toPandas().dropna()  # a null endpoint drops the edge
+    cols = [pdf.iloc[:, 0], pdf.iloc[:, 1]]
+    if seeds is not None:
+        cols.append(seeds.toPandas().iloc[:, 0])
+    codes, uniques = pd.factorize(pd.concat(cols, ignore_index=True), sort=False)
+    n = len(uniques)
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    ids = np.asarray(uniques)
+    order = np.argsort(ids, kind="stable")
+    rank = np.empty(n, dtype="int64")
+    rank[order] = np.arange(n, dtype="int64")
+    r = rank[codes]
+    ne = len(pdf)
+    out = kernel(r[:ne], r[ne : 2 * ne], ids[order], r[2 * ne :])
+    # Arrow-path createDataFrame: ships as Arrow batches, not pickled Rows
+    return spark.createDataFrame(pd.DataFrame(out), schema)
+
+
+def _min_label_kernel(src, dst, ids, _seed) -> dict:
+    """Connected components on ranks: every label tree's root is hooked
+    under the smallest root across its (symmetric) edges, then pointer
+    jumping flattens every tree to its root, repeated until nothing
+    changes. Hooks only ever point at smaller ranks inside the same
+    component, and a component with two trees still has an edge that
+    hooks, so the fixpoint labels every node with its component's min
+    rank — the min reachable id, exactly the distributed loop's table.
+    Hooking roots rather than nodes merges whole trees per pass, so long
+    chains take a few passes, not one per hop."""
+    labels = np.arange(len(ids), dtype="int64")
+    while True:
+        prev = labels.copy()
+        np.minimum.at(labels, labels[dst], labels[src])
+        while True:
+            jumped = labels[labels]
+            if np.array_equal(jumped, labels):
+                break
+            labels = jumped
+        if np.array_equal(labels, prev):
+            return {"id": ids, "component": ids[labels]}
 
 
 def connected_components(
@@ -132,7 +229,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iterations: int = 25,
     symmetric_distinct: bool = False,
-    driver_below: int = 200_000,
 ) -> DataFrame:
     """(id, component) for every id appearing in ``pairs``; ``component`` is
     the smallest id reachable from ``id`` (canonical representative).
@@ -146,102 +242,75 @@ def connected_components(
     symmetrized edge SET is identical either way, so every min-label
     round — and therefore the output — is unchanged.
 
-    ``driver_below``: when the MEASURED symmetric edge count is at or
-    under this bound, solve on the driver with a min-representative
-    union-find instead of running the distributed fixpoint — the same
-    runtime-size-gated routing as ``nndescent_knn_graph(exact_below=...)``
-    and the kmeans/PQ driver-side Lloyd's. A dedup pair graph small
-    enough to collect (≤200k rows ≈ a few MB, far under the repo's 1M-row
-    broadcast guards) costs 2-3 synchronous fixpoint rounds × several
-    scheduler barriers each when solved distributively; union-find is
-    microseconds and returns EXACTLY the same table (component = min
-    reachable id — union by min root + path compression computes that
-    identity directly; asserted against the fixpoint in
-    tests/test_operators.py). At scale the gate never fires (edge lists
-    are data-sized) and the fixpoint below is unchanged. Pass 0 to force
-    the distributed path.
+    Route: a symmetric edge list of at most ``DRIVER_SOLVE_MAX_EDGES``
+    edges is solved on the driver by a numpy min-label kernel with
+    pointer jumping, which returns EXACTLY the distributed table; dedup
+    pair graphs are that small, and solving them distributively costs 2-3
+    synchronous rounds × several scheduler barriers each. Larger graphs
+    run the distributed fixpoint (module docstring), whose DECIMAL
+    label-sum certificate needs integral ids: string ids are served up to
+    the budget only.
 
-    Raises if not converged after ``max_iterations`` rounds (log-scale:
-    25 rounds cover diameters ~2^25 with pointer jumping)."""
-    if symmetric_distinct:
-        edges = pairs.select(
-            F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-        )
-    else:
-        # symmetric edge list via ONE explode — a union of two selects
-        # would scan (and recompute) the possibly-expensive pairs input
-        # twice before the persist below materializes. Self-loops drop out
-        # (never change a min).
-        edges = (
-            pairs.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-    edges = register_persisted(edges.persist())
-    n_edges = edges.count()  # materializes the persist; sizes the fixpoint
-
+    The distributed route raises if not converged after
+    ``max_iterations`` rounds (log-scale: 25 rounds cover diameters ~2^25
+    with pointer jumping)."""
     spark = pairs.sparkSession
-    if n_edges <= driver_below:
-        out = _driver_union_find(spark, edges)
-        edges.unpersist()
-        return out
 
-    from preprocessor_spark.caching import fixpoint_shuffle_scope
+    def distributed(edges: DataFrame, n_edges: int) -> DataFrame:
+        with fixpoint_shuffle_scope(spark, n_edges):
+            # round-1 propagate fused into init: with identity labels, the
+            # first round's message min is just min(neighbor id), so start
+            # every node at min(id, min neighbor) directly — one groupBy
+            # instead of a full join+groupBy+jump+checkpoint round
+            # lazy checkpoint + probe: the convergence probe is the action that
+            # materializes each round's checkpoint, so a round costs ONE job
+            # (eager checkpoint + separate probe was two)
+            labels = edges.groupBy(F.col("src").alias("id")).agg(
+                F.least(F.first("src"), F.min("dst")).alias("component")
+            ).transform(lambda df: checkpoint_frame(df, eager=False))
+            n_nodes = labels.count()  # materializes; |V| is constant across rounds
 
-    with fixpoint_shuffle_scope(spark, n_edges):
-        # round-1 propagate fused into init: with identity labels, the
-        # first round's message min is just min(neighbor id), so start
-        # every node at min(id, min neighbor) directly — one groupBy
-        # instead of a full join+groupBy+jump+checkpoint round
-        # lazy checkpoint + probe: the convergence probe is the action that
-        # materializes each round's checkpoint, so a round costs ONE job
-        # (eager checkpoint + separate probe was two)
-        labels = edges.groupBy(F.col("src").alias("id")).agg(
-            F.least(F.first("src"), F.min("dst")).alias("component")
-        ).transform(lambda df: checkpoint_frame(df, eager=False))
-        n_nodes = labels.count()  # materializes; |V| is constant across rounds
+            prev_sum = None
+            for _ in range(max_iterations):
+                # 1. propagate: my label vs my neighbors' labels. The label
+                # table is vertex-sized — broadcast it (runtime-gated on the
+                # measured |V|) so the persisted edge table never re-shuffles;
+                # the vote groupBy partial-aggregates map-side, so its exchange
+                # is vertex-bounded, not |E|-sized.
+                msgs = edges.join(
+                    _maybe_broadcast(labels.withColumnRenamed("id", "src"), n_nodes, n_edges),
+                    "src",
+                ).select(F.col("dst").alias("id"), "component")
+                stage1 = (
+                    labels.unionByName(msgs).groupBy("id").agg(F.min("component").alias("component"))
+                )
+                # 2. pointer jump: follow my label's label (labels are node ids)
+                lut = stage1.select(
+                    F.col("id").alias("cid"), F.col("component").alias("comp2")
+                )
+                jumped = stage1.join(
+                    _maybe_broadcast(lut, n_nodes, n_edges),
+                    stage1["component"] == lut["cid"],
+                    "left",
+                ).select("id", F.coalesce("comp2", "component").alias("component"))
+                labels = jumped.transform(lambda df: checkpoint_frame(df, eager=False))
+                s = labels.agg(
+                    F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+                ).collect()[0]["s"]
+                if s == prev_sum:
+                    return labels
+                prev_sum = s
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} iterations"
+        )
 
-        prev_sum = None
-        for _ in range(max_iterations):
-            # 1. propagate: my label vs my neighbors' labels. The label
-            # table is vertex-sized — broadcast it (runtime-gated on the
-            # measured |V|) so the persisted edge table never re-shuffles;
-            # the vote groupBy partial-aggregates map-side, so its exchange
-            # is vertex-bounded, not |E|-sized.
-            msgs = edges.join(
-                _maybe_broadcast(labels.withColumnRenamed("id", "src"), n_nodes, n_edges),
-                "src",
-            ).select(F.col("dst").alias("id"), "component")
-            stage1 = (
-                labels.unionByName(msgs).groupBy("id").agg(F.min("component").alias("component"))
-            )
-            # 2. pointer jump: follow my label's label (labels are node ids)
-            lut = stage1.select(
-                F.col("id").alias("cid"), F.col("component").alias("comp2")
-            )
-            jumped = stage1.join(
-                _maybe_broadcast(lut, n_nodes, n_edges),
-                stage1["component"] == lut["cid"],
-                "left",
-            ).select("id", F.coalesce("comp2", "component").alias("component"))
-            labels = jumped.transform(lambda df: checkpoint_frame(df, eager=False))
-            s = labels.agg(
-                F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-            if s == prev_sum:
-                edges.unpersist()
-                return labels
-            prev_sum = s
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
+    return _solve_edge_fixpoint(
+        "connected_components",
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        not symmetric_distinct,
+        _min_label_kernel,
+        [("id", None), ("component", None)],
+        distributed,
     )
 
 
@@ -614,81 +683,38 @@ def clustering_coefficient(
     )
 
 
-def _driver_label_propagation(
-    spark, sym: DataFrame, rounds: int
-) -> DataFrame:
-    """Exact synchronous-LPA replay for a SMALL materialized symmetric edge
-    list: the same per-round votes (each undirected neighbor once + the
-    self-vote) and the same deterministic tie-break (votes desc, label asc)
-    as the distributed loop, vectorized in numpy. Label order comes from
-    sorting the node values with their native comparison (int64 numeric /
-    codepoint order for strings — identical to Spark's BIGINT / UTF8String
-    binary order on this engine's id domains), so every round's winner —
-    and therefore the output table — is equal row-for-row (asserted in
-    tests/test_round7_ops.py). Bounded by
-    ``label_propagation(driver_below=...)``; the toPandas of the
-    (already-distinct) edge list is the only data movement."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
+def _lpa_kernel(rounds: int):
+    """Synchronous-LPA replay on ranks: the same per-round votes (each
+    undirected neighbor once + the self-vote) and the same deterministic
+    tie-break (votes desc, label asc) as the distributed loop, vectorized
+    in numpy — every round's winner, and so the table, is equal
+    row-for-row."""
 
-    id_type = sym.schema["u"].dataType
-    pdf = sym.toPandas()
-    pdf = pdf.dropna()  # a null endpoint drops the edge in both paths
-    codes, uniques = pd.factorize(
-        pd.concat([pdf["u"], pdf["v"]], ignore_index=True), sort=False
-    )
-    n = len(uniques)
-    if n == 0:
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("node", id_type, True),
-                    StructField("community", id_type, True),
-                ]
-            ),
-        )
-    vals = np.asarray(uniques)
-    order = np.argsort(vals, kind="stable")  # native type order
-    rank = np.empty(n, dtype="int64")
-    rank[order] = np.arange(n, dtype="int64")
-    half = len(pdf)
-    iu = rank[codes[:half]]
-    iv = rank[codes[half:]]
-    labels = np.arange(n, dtype="int64")
-    self_nodes = np.arange(n, dtype="int64")
-    for _ in range(rounds):
-        vote_node = np.concatenate([iu, self_nodes])
-        vote_lab = np.concatenate([labels[iv], labels])
-        keys = vote_node * n + vote_lab
-        uk, cnt = np.unique(keys, return_counts=True)  # sorted (node, lab)
-        ku = uk // n
-        klab = uk % n
-        # top-1 per node by (votes desc, label asc) without a lexsort:
-        # composite = votes·n + (n-1-label) is max'd per node-segment by
-        # maximum.reduceat, then decoded — the argmax with the exact
-        # tie-break baked into the value
-        composite = cnt * n + (n - 1 - klab)
-        seg = np.ones(len(ku), dtype=bool)
-        seg[1:] = ku[1:] != ku[:-1]
-        starts = np.flatnonzero(seg)
-        best = np.maximum.reduceat(composite, starts)
-        labels = labels.copy()
-        labels[ku[starts]] = (n - 1) - (best % n)
-    sorted_vals = vals[order]
-    schema = StructType(
-        [
-            StructField("node", id_type, True),
-            StructField("community", id_type, True),
-        ]
-    )
-    # Arrow-path createDataFrame (guide §6): a pandas frame ships as Arrow
-    # batches instead of pickled Row objects
-    out_pdf = pd.DataFrame(
-        {"node": sorted_vals, "community": sorted_vals[labels]}
-    )
-    return spark.createDataFrame(out_pdf, schema)
+    def kernel(iu, iv, ids, _seed) -> dict:
+        n = len(ids)
+        labels = np.arange(n, dtype="int64")
+        self_nodes = np.arange(n, dtype="int64")
+        for _ in range(rounds):
+            vote_node = np.concatenate([iu, self_nodes])
+            vote_lab = np.concatenate([labels[iv], labels])
+            keys = vote_node * n + vote_lab
+            uk, cnt = np.unique(keys, return_counts=True)  # sorted (node, lab)
+            ku = uk // n
+            klab = uk % n
+            # top-1 per node by (votes desc, label asc) without a lexsort:
+            # composite = votes·n + (n-1-label) is max'd per node-segment by
+            # maximum.reduceat, then decoded — the argmax with the exact
+            # tie-break baked into the value
+            composite = cnt * n + (n - 1 - klab)
+            seg = np.ones(len(ku), dtype=bool)
+            seg[1:] = ku[1:] != ku[:-1]
+            starts = np.flatnonzero(seg)
+            best = np.maximum.reduceat(composite, starts)
+            labels = labels.copy()
+            labels[ku[starts]] = (n - 1) - (best % n)
+        return {"node": ids, "community": ids[labels]}
+
+    return kernel
 
 
 def label_propagation(
@@ -696,9 +722,7 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 5,
-    broadcast_vertex_limit: int = 8_000_000,
     symmetric_distinct: bool = False,
-    driver_below: int = 4_000_000,
 ) -> DataFrame:
     """Synchronous label-propagation community detection → (node,
     community); community ids are node ids (each community is named after
@@ -713,16 +737,22 @@ def label_propagation(
     ``rounds`` is fixed, not convergence-polled, so the output is a pure
     function of the edge set: stable under repartitioning and replayable.
 
-    Scale shape: the label table is |V| rows — usually orders of magnitude
-    smaller than |E| — so while it fits (``broadcast_vertex_limit`` nodes,
-    counted once up front) each round BROADCASTS the labels onto the
-    persisted symmetric edge list: the edges never shuffle, and the only
-    exchange per round is the partial-aggregated (node, label) vote
-    groupBy plus a |V|-sized top-1 re-agg (``min(struct(-votes, label))``
-    — no sort window). Past the limit the join falls back to keyed
-    hash-join, still one keyed join + one groupBy per round with no driver
-    traffic; ``localCheckpoint`` truncates the iterative lineage exactly
-    like :func:`connected_components`.
+    Route: a symmetric edge list of at most ``DRIVER_SOLVE_MAX_EDGES``
+    edges replays the fixed-round loop on the driver in numpy instead of
+    paying ``rounds`` × (broadcast build + two vote exchanges + eager
+    checkpoint) of scheduler barriers — bit-equal output by the same
+    vote/tie-break arithmetic.
+
+    Distributed scale shape: the label table is |V| rows — usually orders
+    of magnitude smaller than |E| — so while it fits (``_maybe_broadcast``
+    on the |V| counted once up front) each round BROADCASTS the labels
+    onto the persisted symmetric edge list: the edges never shuffle, and
+    the only exchange per round is the partial-aggregated (node, label)
+    vote groupBy plus a |V|-sized top-1 re-agg (``min(struct(-votes,
+    label))`` — no sort window). Past the limit the join falls back to
+    keyed hash-join, still one keyed join + one groupBy per round with no
+    driver traffic; ``localCheckpoint`` truncates the iterative lineage
+    exactly like :func:`connected_components`.
 
     ``symmetric_distinct``: the caller asserts ``edges`` is ALREADY a
     symmetric, self-loop-free, duplicate-free edge list — skip the explode
@@ -730,140 +760,86 @@ def label_propagation(
     the trade-graph query qualifies by construction: distinct BIPARTITE
     (customer, supplier) pairs symmetrize with no possible duplicate or
     loop).
-
-    ``driver_below``: when the MEASURED symmetric edge count fits, replay
-    the fixed-round synchronous loop on the driver
-    (:func:`_driver_label_propagation`) instead of paying ``rounds`` ×
-    (broadcast build + two vote exchanges + eager checkpoint) of scheduler
-    barriers — the same runtime-size-gated routing as
-    ``connected_components(driver_below=...)``, bit-equal output by the
-    same vote/tie-break arithmetic. Pass 0 to force the distributed loop.
     """
-    if symmetric_distinct:
-        sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    else:
-        sym = (
-            edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                        F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                    )
-                ).alias("e")
-            )
-            .select("e.u", "e.v")
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-    sym = register_persisted(sym.persist())
-    n_edges = sym.count()  # materializes the persist; sizes the fixpoint
+    spark = edges.sparkSession
 
-    if n_edges <= driver_below:
-        out = _driver_label_propagation(edges.sparkSession, sym, rounds)
-        sym.unpersist()
-        return out
+    def distributed(sym: DataFrame, n_edges: int) -> DataFrame:
+        with fixpoint_shuffle_scope(spark, n_edges):
+            labels = sym.select(F.col("u").alias("node")).distinct().select(
+                "node", F.col("node").alias("community")
+            ).transform(lambda df: checkpoint_frame(df, eager=False))
+            # one tiny job up front: |V| decides keyed-join vs broadcast rounds
+            n_nodes = labels.count()
 
-    from preprocessor_spark.caching import fixpoint_shuffle_scope
-
-    with fixpoint_shuffle_scope(edges.sparkSession, n_edges):
-        labels = sym.select(F.col("u").alias("node")).distinct().select(
-            "node", F.col("node").alias("community")
-        ).transform(lambda df: checkpoint_frame(df, eager=False))
-        # one tiny job up front: |V| decides keyed-join vs broadcast rounds
-        small_vertex_set = labels.count() <= broadcast_vertex_limit
-
-        for r in range(rounds):
-            lab = F.broadcast(labels) if small_vertex_set else labels
-            incoming = sym.join(
-                lab.select(F.col("node").alias("v"), "community"), "v"
-            ).select(F.col("u").alias("node"), "community")
-            # self-vote folded into the ONE vote aggregation: union the
-            # node's own (node, community) row with the neighbor stream and
-            # count — identical votes to count+union+re-sum but a single
-            # shuffle/agg per round instead of two
-            votes = (
-                incoming.unionByName(labels.select("node", "community"))
-                .groupBy("node", "community")
-                .agg(F.count(F.lit(1)).alias("votes"))
-            )
-            # deterministic top-1 per node WITHOUT a sort window:
-            # min(struct(-votes, community)) == (votes desc, community asc);
-            # partial-aggregates map-side, re-shuffles only |V|·labels rows
-            labels = (
-                votes.groupBy("node")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("votes")).alias("neg_votes"), F.col("community")
-                        )
-                    ).alias("top")
+            for r in range(rounds):
+                lab = _maybe_broadcast(labels, n_nodes, n_edges)
+                incoming = sym.join(
+                    lab.select(F.col("node").alias("v"), "community"), "v"
+                ).select(F.col("u").alias("node"), "community")
+                # self-vote folded into the ONE vote aggregation: union the
+                # node's own (node, community) row with the neighbor stream and
+                # count — identical votes to count+union+re-sum but a single
+                # shuffle/agg per round instead of two
+                votes = (
+                    incoming.unionByName(labels.select("node", "community"))
+                    .groupBy("node", "community")
+                    .agg(F.count(F.lit(1)).alias("votes"))
                 )
-                .select("node", F.col("top.community").alias("community"))
-            )
-            # eager per-round materialization: measured FASTER than
-            # every-other-round persist-then-checkpoint (the off-round frame
-            # is referenced twice next round — join + self-vote union — and
-            # the double recompute costs more than a |V|-sized checkpoint
-            # job; A/B at sf0.1: ~11.5 s vs ~14.3 s). EAGER on purpose:
-            # the next round references labels twice (broadcast build +
-            # self-vote union) with no convergence probe to merge into —
-            # the round-12 lazy-checkpoint A/B measured eager 6.0 s vs
-            # lazy 8.2 s solo for communities_lpa, the opposite of the
-            # probe-merged fixpoints above.
-            labels = labels.transform(checkpoint_frame)
-    return labels
+                # deterministic top-1 per node WITHOUT a sort window:
+                # min(struct(-votes, community)) == (votes desc, community asc);
+                # partial-aggregates map-side, re-shuffles only |V|·labels rows
+                labels = (
+                    votes.groupBy("node")
+                    .agg(
+                        F.min(
+                            F.struct(
+                                (-F.col("votes")).alias("neg_votes"), F.col("community")
+                            )
+                        ).alias("top")
+                    )
+                    .select("node", F.col("top.community").alias("community"))
+                )
+                # EAGER per-round checkpoint on purpose: the next round
+                # references labels twice (broadcast build + self-vote union)
+                # with no convergence probe to merge into. A/B-measured
+                # faster than every-other-round persist-then-checkpoint
+                # (~11.5 s vs ~14.3 s at sf0.1: the double recompute costs
+                # more than a |V|-sized checkpoint job) and than a lazy
+                # checkpoint (communities_lpa 6.0 s vs 8.2 s solo) — the
+                # opposite of the probe-merged fixpoints.
+                labels = labels.transform(checkpoint_frame)
+        return labels
+
+    return _solve_edge_fixpoint(
+        "label_propagation",
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        not symmetric_distinct,
+        _lpa_kernel(rounds),
+        [("node", None), ("community", None)],
+        distributed,
+    )
 
 
-def _driver_bfs(
-    spark, e: DataFrame, seeds: DataFrame, seed_col: str, max_hops: int
-) -> DataFrame:
-    """Exact multi-source BFS replay for a SMALL materialized edge list:
-    level-synchronous frontier expansion in numpy. Hop distances are exact
-    integers and the min-plus fixpoint is confluent, so the table equals
-    the distributed loop's row-for-row (asserted in tests). Node universe =
-    edge endpoints ∪ seeds, exactly like the distributed init (an isolated
-    seed reports 0). Bounded by ``shortest_hops(driver_below=...)``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
+def _bfs_kernel(max_hops: int):
+    """Multi-source BFS replay on ranks: level-synchronous frontier
+    expansion. Hop distances are exact integers and the min-plus fixpoint
+    is confluent, so the table equals the distributed loop's row-for-row.
+    Node universe = edge endpoints ∪ seeds, exactly like the distributed
+    init (an isolated seed reports 0)."""
 
-    id_type = e.schema["s"].dataType
-    epdf = e.toPandas()
-    spdf = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .where(F.col("node").isNotNull())
-        .distinct()
-        .toPandas()
-    )
-    codes, uniques = pd.factorize(
-        pd.concat([epdf["s"], epdf["d"], spdf["node"]], ignore_index=True),
-        sort=False,
-    )
-    n = len(uniques)
-    schema = StructType(
-        [
-            StructField("node", id_type, True),
-            StructField("hops", IntegerType(), False),
-        ]
-    )
-    if n == 0:
-        return spark.createDataFrame([], schema)
-    ne = len(epdf)
-    iu = codes[:ne]
-    iv = codes[ne : 2 * ne]
-    iseed = codes[2 * ne :]
-    INF = np.iinfo(np.int64).max
-    dist = np.full(n, INF, dtype="int64")
-    dist[iseed] = 0
-    for level in range(max_hops):
-        active = dist[iu] == level
-        if not active.any():
-            break
-        np.minimum.at(dist, iv[active], level + 1)
-    reached = dist < INF
-    vals = np.asarray(uniques)[reached]
-    out = pd.DataFrame({"node": vals, "hops": dist[reached].astype("int32")})
-    return spark.createDataFrame(out, schema)
+    def kernel(iu, iv, ids, iseed) -> dict:
+        INF = np.iinfo(np.int64).max
+        dist = np.full(len(ids), INF, dtype="int64")
+        dist[iseed] = 0
+        for level in range(max_hops):
+            active = dist[iu] == level
+            if not active.any():
+                break
+            np.minimum.at(dist, iv[active], level + 1)
+        reached = dist < INF
+        return {"node": ids[reached], "hops": dist[reached].astype("int32")}
+
+    return kernel
 
 
 def shortest_hops(
@@ -873,7 +849,6 @@ def shortest_hops(
     dst: str = "dst",
     seed_col: str = "node",
     max_hops: int = 10,
-    driver_below: int = 2_000_000,
 ) -> DataFrame:
     """Multi-source BFS hop distances — (node, hops) for every node
     reachable from ``seeds`` within ``max_hops`` directed edges (pass a
@@ -889,63 +864,66 @@ def shortest_hops(
     frontier is empty — BFS never revisits at larger d, so the integer
     sum certificate is monotone).
 
+    Route: a distinct directed edge list of at most
+    ``DRIVER_SOLVE_MAX_EDGES`` edges is replayed on the driver by a numpy
+    frontier expansion — exact integer hops over a confluent fixpoint, so
+    the table is identical with zero per-round scheduler barriers.
+
     VALUE-oracle-able despite being iterative: hop distances are exact
     integers and the fixpoint is confluent (min-plus is idempotent /
     commutative), so DuckDB replays it with a bounded WITH RECURSIVE walk
     + MIN(d) — the first of the repo's iterative operators with a full
     SQL twin.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).where(
-        F.col("s").isNotNull() & F.col("d").isNotNull()
-    ).distinct()
-    e = register_persisted(e.persist())
-    n_edges = e.count()
-
     spark = edges.sparkSession
-    if n_edges <= driver_below:
-        # size-gated driver replay (the connected_components / LPA
-        # discipline): hop distances are exact integers with a confluent
-        # min-plus fixpoint — zero per-round scheduler barriers, identical
-        # table. Pass driver_below=0 to force the distributed loop.
-        out = _driver_bfs(spark, e, seeds, seed_col, max_hops)
-        e.unpersist()
-        return out
+    seed_ids = (
+        seeds.select(F.col(seed_col).alias("node"))
+        .where(F.col("node").isNotNull())
+        .distinct()
+    )
 
-    from preprocessor_spark.caching import fixpoint_shuffle_scope
-    with fixpoint_shuffle_scope(spark, n_edges):
-        dist = (
-            seeds.select(F.col(seed_col).alias("node"))
-            .where(F.col("node").isNotNull())
-            .distinct()
-            .select("node", F.lit(0).alias("hops"))
-            .transform(lambda df: checkpoint_frame(df, eager=False))
-        )
-        n_dist = dist.count()  # materializes the lazy checkpoint
-        prev_sum, prev_cnt = None, None
-        for _ in range(max_hops):
-            # frontier table is vertex-sized: broadcast it (gated on the
-            # probe's measured count) so the persisted edge table never
-            # re-shuffles; the min groupBy partial-aggregates map-side, so
-            # its exchange is vertex-bounded. Lazy checkpoint + probe = one
-            # job per round.
-            msgs = e.join(
-                _maybe_broadcast(dist.withColumnRenamed("node", "s"), n_dist, n_edges), "s"
-            ).select(F.col("d").alias("node"), (F.col("hops") + 1).alias("hops"))
-            dist = (
-                dist.unionByName(msgs)
-                .groupBy("node")
-                .agg(F.min("hops").alias("hops"))
-                .transform(lambda df: checkpoint_frame(df, eager=False))
+    def distributed(e: DataFrame, n_edges: int) -> DataFrame:
+        with fixpoint_shuffle_scope(spark, n_edges):
+            dist = seed_ids.select("node", F.lit(0).alias("hops")).transform(
+                lambda df: checkpoint_frame(df, eager=False)
             )
-            probe = dist.agg(
-                F.count(F.lit(1)).alias("c"), F.sum("hops").alias("s")
-            ).collect()[0]
-            if (probe["c"], probe["s"]) == (prev_cnt, prev_sum):
-                break
-            prev_cnt, prev_sum = probe["c"], probe["s"]
-            n_dist = probe["c"]
-    e.unpersist()
-    return dist
+            n_dist = dist.count()  # materializes the lazy checkpoint
+            prev_sum, prev_cnt = None, None
+            for _ in range(max_hops):
+                # frontier table is vertex-sized: broadcast it (gated on the
+                # probe's measured count) so the persisted edge table never
+                # re-shuffles; the min groupBy partial-aggregates map-side, so
+                # its exchange is vertex-bounded. Lazy checkpoint + probe = one
+                # job per round.
+                msgs = e.join(
+                    _maybe_broadcast(dist.withColumnRenamed("node", "s"), n_dist, n_edges), "s"
+                ).select(F.col("d").alias("node"), (F.col("hops") + 1).alias("hops"))
+                dist = (
+                    dist.unionByName(msgs)
+                    .groupBy("node")
+                    .agg(F.min("hops").alias("hops"))
+                    .transform(lambda df: checkpoint_frame(df, eager=False))
+                )
+                probe = dist.agg(
+                    F.count(F.lit(1)).alias("c"), F.sum("hops").alias("s")
+                ).collect()[0]
+                if (probe["c"], probe["s"]) == (prev_cnt, prev_sum):
+                    break
+                prev_cnt, prev_sum = probe["c"], probe["s"]
+                n_dist = probe["c"]
+        return dist
+
+    return _solve_edge_fixpoint(
+        "shortest_hops",
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        .where(F.col("s").isNotNull() & F.col("d").isNotNull())
+        .distinct(),
+        False,
+        _bfs_kernel(max_hops),
+        [("node", None), ("hops", IntegerType())],
+        distributed,
+        seeds=seed_ids,
+    )
 
 
 def link_prediction_scores(

@@ -21,3 +21,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def fixpoint_route(monkeypatch):
+    """Force the graph edge fixpoints (connected_components,
+    label_propagation, shortest_hops) onto one route for the rest of the
+    test: ``fixpoint_route("distributed")`` or ``fixpoint_route("driver")``.
+    Works by moving the one edge budget, ``DRIVER_SOLVE_MAX_EDGES``; an
+    empty edge list rides the driver route under either setting."""
+    from preprocessor_spark.operators import graph
+
+    budgets = {"distributed": 0, "driver": 10**9}
+
+    def force(route: str) -> None:
+        monkeypatch.setattr(graph, "DRIVER_SOLVE_MAX_EDGES", budgets[route])
+
+    return force

@@ -382,10 +382,10 @@ def test_persist_scope_nests_and_is_optional(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_connected_components_matches_union_find(spark, sf_dir):
-    """Min-label propagation must agree with a driver-side union-find on the
+def test_connected_components_matches_union_find(spark, sf_dir, fixpoint_route):
+    """Min-label propagation must agree with a reference union-find on the
     same pair set (chains, not just cliques: threshold low enough that
-    transitivity matters)."""
+    transitivity matters), on both routes."""
     from preprocessor_spark import persist_scope
     from preprocessor_spark.operators.dedup import ngram_jaccard_pairs
     from preprocessor_spark.operators.graph import connected_components
@@ -394,10 +394,13 @@ def test_connected_components_matches_union_find(spark, sf_dir):
     with persist_scope():
         pairs = ngram_jaccard_pairs(d, "text", "doc_id", shingle_n=3, threshold=0.3)
         pair_rows = [(r["id_a"], r["id_b"]) for r in pairs.select("id_a", "id_b").collect()]
-        got = {
-        r["id"]: r["component"]
-        for r in connected_components(pairs, driver_below=0).collect()
-    }
+        got_by_route = {}
+        for route in ("distributed", "driver"):
+            fixpoint_route(route)
+            got_by_route[route] = {
+                r["id"]: r["component"]
+                for r in connected_components(pairs).collect()
+            }
 
     parent: dict[int, int] = {}
 
@@ -418,25 +421,26 @@ def test_connected_components_matches_union_find(spark, sf_dir):
         members.setdefault(find(x), []).append(x)
     want = {x: min(members[find(x)]) for x in parent}
     assert len(pair_rows) > 0
-    assert got == want
+    assert got_by_route == {"distributed": want, "driver": want}
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, fixpoint_route):
     """A pure chain (worst diameter per edge count) must still collapse to
     one component with the min id as representative."""
     from preprocessor_spark.operators.graph import connected_components
 
+    fixpoint_route("distributed")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(10, 20)], "id_a bigint, id_b bigint"
     )
     out = {
         r["id"]: r["component"]
-        for r in connected_components(pairs, driver_below=0).collect()
+        for r in connected_components(pairs).collect()
     }
     assert out == {i: 10 for i in range(10, 21)}
 
 
-def test_cc_symmetric_contract_matches_default(spark):
+def test_cc_symmetric_contract_matches_default(spark, fixpoint_route):
     """``symmetric_distinct=True`` (caller asserts a pre-symmetrized,
     distinct, self-loop-free edge list — the dbscan core-subgraph case)
     must return EXACTLY the default path's output: the symmetrized edge
@@ -454,21 +458,20 @@ def test_cc_symmetric_contract_matches_default(spark):
             F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
         )
     ).distinct()
+    fixpoint_route("distributed")
     want = sorted(
         (r["id"], r["component"])
-        for r in connected_components(sym, driver_below=0).collect()
+        for r in connected_components(sym).collect()
     )
     got = sorted(
         (r["id"], r["component"])
-        for r in connected_components(
-            sym, symmetric_distinct=True, driver_below=0
-        ).collect()
+        for r in connected_components(sym, symmetric_distinct=True).collect()
     )
     assert got == want
     assert dict(got) == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, fixpoint_route):
     """Opting in to reliable checkpoints (RELIABLE_CHECKPOINT_CONF +
     setCheckpointDir) must (a) produce identical components, (b) actually
     write per-round checkpoint files, and (c) still truncate lineage.
@@ -492,9 +495,10 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
             checkpoint_frame(pairs)
         ckdir = str(tmp_path / "reliable_ck")
         spark.sparkContext.setCheckpointDir(ckdir)
+        fixpoint_route("distributed")
         out = {
             r["id"]: r["component"]
-            for r in connected_components(pairs, driver_below=0).collect()
+            for r in connected_components(pairs).collect()
         }
         assert out == want
         written = [
@@ -2074,12 +2078,12 @@ def test_group_hash_split_no_leakage(spark, sf_dir):
     assert a == b
 
 
-def test_cc_driver_gate_matches_distributed_fixpoint(spark):
-    """The size-gated driver union-find (``driver_below``) must return
-    EXACTLY the distributed min-label fixpoint's table — same ids, same
-    components, same schema — on a graph mixing chains (transitivity),
-    cliques, and isolated pairs, under both the default and the
-    ``symmetric_distinct`` contract."""
+def test_cc_driver_gate_matches_distributed_fixpoint(spark, fixpoint_route):
+    """The driver route's min-label kernel must return EXACTLY the
+    distributed min-label fixpoint's table — same ids, same components,
+    same schema — on a graph mixing chains (transitivity), cliques, and
+    isolated pairs, under both the default and the ``symmetric_distinct``
+    contract."""
     from pyspark.sql import functions as F
 
     from preprocessor_spark.operators.graph import connected_components
@@ -2090,13 +2094,15 @@ def test_cc_driver_gate_matches_distributed_fixpoint(spark):
         + [(7, 3)],  # isolated pair, reversed order
         "id_a bigint, id_b bigint",
     )
+    fixpoint_route("distributed")
     want = sorted(
         (r["id"], r["component"])
-        for r in connected_components(pairs, driver_below=0).collect()
+        for r in connected_components(pairs).collect()
     )
+    fixpoint_route("driver")
     got = sorted(
         (r["id"], r["component"])
-        for r in connected_components(pairs, driver_below=10**6).collect()
+        for r in connected_components(pairs).collect()
     )
     assert got == want
     assert dict(got)[3] == 3 and dict(got)[7] == 3
@@ -2106,14 +2112,12 @@ def test_cc_driver_gate_matches_distributed_fixpoint(spark):
     ).distinct()
     got_sym = sorted(
         (r["id"], r["component"])
-        for r in connected_components(
-            sym, symmetric_distinct=True, driver_below=10**6
-        ).collect()
+        for r in connected_components(sym, symmetric_distinct=True).collect()
     )
     assert got_sym == want
     # schema parity: the driver path must return the same column names and
     # id-typed columns the fixpoint does
-    out = connected_components(pairs, driver_below=10**6)
+    out = connected_components(pairs)
     assert [f.name for f in out.schema.fields] == ["id", "component"]
     assert {f.dataType.simpleString() for f in out.schema.fields} == {"bigint"}
 

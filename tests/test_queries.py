@@ -102,6 +102,30 @@ def test_query_runs(spark, name):
     assert len(df.schema.fields) > 0
 
 
+# Every registry query whose graph step goes through the edge-fixpoint
+# router (operators/graph.py); at sf0.1 all of them ride the driver route.
+GATED_FIXPOINT_QUERIES = [
+    "dedup_connected_components",
+    "dedup_minhash_corpus",
+    "dbscan_embeddings",
+    "image_phash_neardup",
+    "semantic_dedup_embeddings",
+    "communities_lpa",
+    "graph_hops_custsupp",
+]
+
+
+@pytest.mark.parametrize("name", GATED_FIXPOINT_QUERIES)
+def test_gated_query_routes_agree(spark, fixpoint_route, name):
+    """The same query must return the same table on the driver route and on
+    the distributed route that runs at scale."""
+    out = {}
+    for route in ("driver", "distributed"):
+        fixpoint_route(route)
+        out[route] = QUERIES[name](spark, SF_DIR).toPandas()
+    _compare(out["distributed"], out["driver"], name)
+
+
 def test_entry(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -285,20 +285,14 @@ class TestLabelPropagation:
         # community names are member ids
         assert left.pop() in range(5) and right.pop() in range(100, 105)
 
-    def test_repartition_determinism(self, spark):
+    def test_repartition_determinism(self, spark, fixpoint_route):
         from preprocessor_spark.operators.graph import label_propagation
 
+        fixpoint_route("distributed")
         e = self._edges(spark)
-        a = sorted(
-            map(tuple, label_propagation(e, rounds=4, driver_below=0).collect())
-        )
+        a = sorted(map(tuple, label_propagation(e, rounds=4).collect()))
         b = sorted(
-            map(
-                tuple,
-                label_propagation(
-                    e.repartition(7), rounds=4, driver_below=0
-                ).collect(),
-            )
+            map(tuple, label_propagation(e.repartition(7), rounds=4).collect())
         )
         assert a == b
 
@@ -312,7 +306,7 @@ class TestLabelPropagation:
         out = label_propagation(e, rounds=3).collect()
         assert len({r.community for r in out}) == 1
 
-    def test_driver_gate_matches_distributed_loop(self, spark):
+    def test_driver_gate_matches_distributed_loop(self, spark, fixpoint_route):
         """The size-gated driver replay must return EXACTLY the distributed
         synchronous loop's table — same nodes, same communities — on the
         bridged-cliques graph (long ids) and on a string-keyed bipartite
@@ -322,29 +316,17 @@ class TestLabelPropagation:
         from preprocessor_spark.operators.graph import label_propagation
 
         e = self._edges(spark)
-        want = sorted(
-            map(tuple, label_propagation(e, rounds=5, driver_below=0).collect())
-        )
-        got = sorted(
-            map(
-                tuple,
-                label_propagation(e, rounds=5, driver_below=10**6).collect(),
-            )
-        )
-        assert got == want
         es = e.select(
             F.concat(F.lit("c"), F.col("src")).alias("src"),
             F.concat(F.lit("s"), F.col("dst")).alias("dst"),
         )
-        want_s = sorted(
-            map(tuple, label_propagation(es, rounds=5, driver_below=0).collect())
-        )
-        got_s = sorted(
-            map(
-                tuple,
-                label_propagation(es, rounds=5, driver_below=10**6).collect(),
-            )
-        )
+        fixpoint_route("distributed")
+        want = sorted(map(tuple, label_propagation(e, rounds=5).collect()))
+        want_s = sorted(map(tuple, label_propagation(es, rounds=5).collect()))
+        fixpoint_route("driver")
+        got = sorted(map(tuple, label_propagation(e, rounds=5).collect()))
+        assert got == want
+        got_s = sorted(map(tuple, label_propagation(es, rounds=5).collect()))
         assert got_s == want_s
         # symmetric_distinct contract: pre-symmetrized input, same table
         sym = es.unionByName(
@@ -353,18 +335,17 @@ class TestLabelPropagation:
         got_sym = sorted(
             map(
                 tuple,
-                label_propagation(
-                    sym, rounds=5, symmetric_distinct=True, driver_below=10**6
-                ).collect(),
+                label_propagation(sym, rounds=5, symmetric_distinct=True).collect(),
             )
         )
         assert got_sym == want_s
 
-    def test_no_cartesian(self, spark):
+    def test_no_cartesian(self, spark, fixpoint_route):
         from preprocessor_spark.operators.graph import label_propagation
 
+        fixpoint_route("distributed")
         plan = (
-            label_propagation(self._edges(spark), rounds=1, driver_below=0)
+            label_propagation(self._edges(spark), rounds=1)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

@@ -343,7 +343,7 @@ def test_als_layout_hoist_bitwise_equal(spark, monkeypatch):
     assert np.array_equal(base.item_ids, hoisted.item_ids)
 
 
-def test_bfs_driver_gate_matches_distributed_loop(spark):
+def test_bfs_driver_gate_matches_distributed_loop(spark, fixpoint_route):
     """The size-gated driver BFS replay must return EXACTLY the
     distributed fixpoint's table — same reached set, same hop counts,
     same schema — including isolated seeds and the max_hops truncation."""
@@ -355,11 +355,10 @@ def test_bfs_driver_gate_matches_distributed_loop(spark):
     for seed_rows, hops in (([(1,), (10,)], 10), ([(1,), (10,)], 2),
                             ([(1,), (5,)], 10), ([(99,)], 3)):
         seeds = spark.createDataFrame(seed_rows, "node long")
-        want = sorted(
-            map(tuple, shortest_hops(e, seeds, max_hops=hops,
-                                     driver_below=0).collect())
-        )
-        got_df = shortest_hops(e, seeds, max_hops=hops, driver_below=10**6)
+        fixpoint_route("distributed")
+        want = sorted(map(tuple, shortest_hops(e, seeds, max_hops=hops).collect()))
+        fixpoint_route("driver")
+        got_df = shortest_hops(e, seeds, max_hops=hops)
         got = sorted(map(tuple, got_df.collect()))
         assert got == want, (seed_rows, hops)
     assert [f.name for f in got_df.schema.fields] == ["node", "hops"]
