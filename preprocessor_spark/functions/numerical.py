@@ -110,19 +110,41 @@ def fill_expr(col: Column, strategy, scaling: str, stats: dict) -> Column:
     return F.coalesce(col, F.lit(float(fill)))
 
 
-def forward_fill_expr(col: Column, order_col: str, partition_by: list[str] | None = None) -> Column:
+def _order_window(
+    order_col: str,
+    partition_by: list[str] | None,
+    tiebreak_col: str | None,
+    reverse: bool = False,
+):
+    """Window ordered by (``order_col``, ``tiebreak_col``), ascending or
+    reversed, per ``partition_by`` key when given (one global window
+    otherwise)."""
+    keys = [order_col] if tiebreak_col is None else [order_col, tiebreak_col]
+    order = [F.col(k).desc() if reverse else F.col(k).asc() for k in keys]
+    return (Window.partitionBy(*partition_by) if partition_by else Window).orderBy(*order)
+
+
+def _running(w):
+    return w.rowsBetween(Window.unboundedPreceding, 0)
+
+
+def forward_fill_expr(
+    col: Column,
+    order_col: str,
+    partition_by: list[str] | None = None,
+    tiebreak_col: str | None = None,
+) -> Column:
     """last non-null over preceding rows (SURVEY §2.5).
 
     With ``partition_by`` (a series id) this is a per-series window that
     scales; without it the window is global (single partition) — fine for
-    parity tests, documented 100 TB caveat.
+    parity tests, documented 100 TB caveat. Pass ``tiebreak_col`` when
+    ``order_col`` has ties: without it tied rows are laid out in whatever
+    order the sort leaves them.
     """
-    w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    if partition_by:
-        w = Window.partitionBy(*partition_by).orderBy(order_col).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-    return F.last(col, ignorenulls=True).over(w)
+    return F.last(col, ignorenulls=True).over(
+        _running(_order_window(order_col, partition_by, tiebreak_col))
+    )
 
 
 def backward_fill_expr(
@@ -143,15 +165,9 @@ def backward_fill_expr(
     may lay ties out differently (nondeterministic fills at tied rows). The
     Preprocessor's internal callers pass a unique synthetic row id.
     """
-    order = [F.col(order_col).desc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).desc())
-    w = (
-        Window.partitionBy(*partition_by).orderBy(*order)
-        if partition_by
-        else Window.orderBy(*order)
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    return F.last(col, ignorenulls=True).over(w)
+    return F.last(col, ignorenulls=True).over(
+        _running(_order_window(order_col, partition_by, tiebreak_col, reverse=True))
+    )
 
 
 def interpolate_expr(
@@ -171,40 +187,16 @@ def interpolate_expr(
     partition: prev comes from a forward running scan and next from a
     reverse one, and duplicate keys without a tiebreaker let the two sorts
     disagree on tie layout (inconsistent prev/next at tied rows). The
-    Preprocessor passes a unique (datetime, synthetic row id) struct.
+    Preprocessor passes a unique (datetime, synthetic row id) pair.
     """
-
-    def win(reverse: bool = False):
-        if reverse:
-            order = [F.col(order_col).desc()]
-            if tiebreak_col is not None:
-                order.append(F.col(tiebreak_col).desc())
-        else:
-            order = [F.col(order_col).asc()]
-            if tiebreak_col is not None:
-                order.append(F.col(tiebreak_col).asc())
-        w = (
-            Window.partitionBy(*partition_by).orderBy(*order)
-            if partition_by
-            else Window.orderBy(*order)
-        )
-        return w.rowsBetween(Window.unboundedPreceding, 0)
-
+    w = _order_window(order_col, partition_by, tiebreak_col)
     # both directions are RUNNING frames (the reverse-ordered window stands
     # in for [0, unboundedFollowing], which Spark executes O(n²) — see
     # backward_fill_expr)
-    w_prev = win()
-    w_next = win(reverse=True)
+    w_prev = _running(w)
+    w_next = _running(_order_window(order_col, partition_by, tiebreak_col, reverse=True))
 
-    pos_order = [F.col(order_col).asc()]
-    if tiebreak_col is not None:
-        pos_order.append(F.col(tiebreak_col).asc())
-    pos = F.row_number().over(
-        Window.partitionBy(*partition_by).orderBy(*pos_order)
-        if partition_by
-        else Window.orderBy(*pos_order)
-    )
-    pos_col = pos.cast("double")
+    pos_col = F.row_number().over(w).cast("double")
     prev_val = F.last(col, ignorenulls=True).over(w_prev)
     next_val = F.last(col, ignorenulls=True).over(w_next)
     prev_pos = F.last(F.when(col.isNotNull(), pos_col), ignorenulls=True).over(w_prev)
@@ -268,7 +260,9 @@ def apply_order_dependent_fills(
         for c, strat in fills.items():
             col = F.col(c)
             if strat == "forward":
-                exprs[c] = F.coalesce(col, forward_fill_expr(col, order_col, partition_by))
+                exprs[c] = F.coalesce(
+                    col, forward_fill_expr(col, order_col, partition_by, tiebreak_col)
+                )
             elif strat == "backward":
                 exprs[c] = F.coalesce(
                     col, backward_fill_expr(col, order_col, partition_by, tiebreak_col)
@@ -304,11 +298,9 @@ def apply_order_dependent_fills(
     else:
         bkt = F.lit(0)
 
-    order = [okey.asc(), F.col(tiebreak_col).asc()] if tiebreak_col else [okey.asc()]
-    rorder = [okey.desc(), F.col(tiebreak_col).desc()] if tiebreak_col else [okey.desc()]
-    wb = Window.partitionBy("__bkt").orderBy(*order)
-    w_run = wb.rowsBetween(Window.unboundedPreceding, 0)
-    w_rev = Window.partitionBy("__bkt").orderBy(*rorder).rowsBetween(Window.unboundedPreceding, 0)
+    wb = _order_window(order_col, ["__bkt"], tiebreak_col)
+    w_run = _running(wb)
+    w_rev = _running(_order_window(order_col, ["__bkt"], tiebreak_col, reverse=True))
 
     dfb = df.withColumn("__bkt", bkt).withColumn("__lrn", F.row_number().over(wb))
 

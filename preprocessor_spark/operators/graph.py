@@ -40,9 +40,10 @@ time explodes (the classic Spark iterative-algorithm trap). The default is
 ``caching.RELIABLE_CHECKPOINT_CONF`` session conf + a checkpoint dir to
 make every fixpoint in this module survive executor loss on a real
 cluster — localCheckpoint blocks die with their executor and a lost block
-kills the job. Convergence is detected from the label-sum: labels only
-ever decrease, so an unchanged sum IS the fixpoint — one tiny aggregate
-per round instead of a join-and-count.
+kills the job. Convergence is detected from each node's label change:
+the round's union already holds the node's own row, which carries its
+label into the round, and the probe counts nodes whose label moved — one
+count per round instead of a join-and-count, for any orderable id type.
 """
 
 from __future__ import annotations
@@ -247,9 +248,9 @@ def connected_components(
     pointer jumping, which returns EXACTLY the distributed table; dedup
     pair graphs are that small, and solving them distributively costs 2-3
     synchronous rounds × several scheduler barriers each. Larger graphs
-    run the distributed fixpoint (module docstring), whose DECIMAL
-    label-sum certificate needs integral ids: string ids are served up to
-    the budget only.
+    run the distributed fixpoint (module docstring), which stops once a
+    round changes no label. Both routes take any orderable id type,
+    strings included.
 
     The distributed route raises if not converged after
     ``max_iterations`` rounds (log-scale: 25 rounds cover diameters ~2^25
@@ -270,7 +271,6 @@ def connected_components(
             ).transform(lambda df: checkpoint_frame(df, eager=False))
             n_nodes = labels.count()  # materializes; |V| is constant across rounds
 
-            prev_sum = None
             for _ in range(max_iterations):
                 # 1. propagate: my label vs my neighbors' labels. The label
                 # table is vertex-sized — broadcast it (runtime-gated on the
@@ -280,9 +280,14 @@ def connected_components(
                 msgs = edges.join(
                     _maybe_broadcast(labels.withColumnRenamed("id", "src"), n_nodes, n_edges),
                     "src",
-                ).select(F.col("dst").alias("id"), "component")
+                ).select(F.col("dst").alias("id"), "component", F.lit(None).alias("prev"))
+                # the node's own row carries its label into the round as
+                # ``prev`` (msgs carry none), for the convergence probe
                 stage1 = (
-                    labels.unionByName(msgs).groupBy("id").agg(F.min("component").alias("component"))
+                    labels.withColumn("prev", F.col("component"))
+                    .unionByName(msgs)
+                    .groupBy("id")
+                    .agg(F.min("component").alias("component"), F.max("prev").alias("prev"))
                 )
                 # 2. pointer jump: follow my label's label (labels are node ids)
                 lut = stage1.select(
@@ -292,14 +297,11 @@ def connected_components(
                     _maybe_broadcast(lut, n_nodes, n_edges),
                     stage1["component"] == lut["cid"],
                     "left",
-                ).select("id", F.coalesce("comp2", "component").alias("component"))
-                labels = jumped.transform(lambda df: checkpoint_frame(df, eager=False))
-                s = labels.agg(
-                    F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-                ).collect()[0]["s"]
-                if s == prev_sum:
+                ).select("id", F.coalesce("comp2", "component").alias("component"), "prev")
+                rounded = jumped.transform(lambda df: checkpoint_frame(df, eager=False))
+                labels = rounded.select("id", "component")
+                if rounded.filter(F.col("component") != F.col("prev")).count() == 0:
                     return labels
-                prev_sum = s
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} iterations"
         )

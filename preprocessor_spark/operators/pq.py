@@ -314,6 +314,12 @@ def ivfpq_assign_encode(
             }
         )
 
+    # non-deterministic marking (as dedup.py's _jaccard): a probe-cell
+    # filter on __cell otherwise pushes under the projection and the
+    # optimizer DUPLICATES the UDF, encoding every corpus row twice. The
+    # function is pure; the marking only stops that re-evaluation.
+    _assign_enc = _assign_enc.asNondeterministic()
+
     base = _normalized(corpus, vec_col, id_col, "neighbor_id", "__cv")
     return base.select(
         "neighbor_id", _assign_enc(F.col("__cv")).alias("__ac")

@@ -12,9 +12,11 @@ PySpark DataFrame API with a Spark-shaped execution model:
   the whole table and loops per column (`preprocessor.py:290-300`).
 - **transform** is a single narrow stage of column expressions (no shuffle,
   no Python) except when order-dependent ops are requested: datetime
-  interpolation / forward / backward / interpolate fills need a total order
-  (global sort — the reference does the same, `datetime_transformer.py:98`).
-  Pass ``partition_by`` to scope those windows to a series key so they scale.
+  interpolation / forward / backward / interpolate fills need a total order.
+  They run in one pass over the reference's order — the first datetime
+  column, then ingest order (`datetime_transformer.py:98`) — as
+  range-bucketed windows with a carry across bucket edges, or per series
+  key with ``partition_by``.
 - **inverse_transform** is again a pure expression chain.
 
 Fitted state is JSON-serializable (``save``/``load``) — the reference has no
@@ -442,9 +444,14 @@ class Preprocessor:
             single_value_columns=single_value_columns,
             get_discarded_info=p["get_discarded_info"],
         )
-        self.discarded = (list(discarded), dict(rare_labels))  # reference attribute parity
-        # reference attribute parity (preprocessor.py:97-98, README:147)
-        self.single_value_columns = dict(single_value_columns)
+        self._set_parity_attributes()
+
+    def _set_parity_attributes(self) -> None:
+        """Reference attribute parity (preprocessor.py:97-98, README:147),
+        derived from the fitted state so fit and load agree."""
+        st = self.state
+        self.discarded = (list(st.discarded_features), dict(st.rare_labels))
+        self.single_value_columns = dict(st.single_value_columns)
 
     # ------------------------------------------------------- helpers
 
@@ -577,9 +584,12 @@ class Preprocessor:
     def transform(self, data: DataFrame) -> DataFrame:
         """Pipeline order preserved from preprocessor.py:341-461:
         shrink → drop discarded → datetime → numerical → boolean →
-        one-hot → target. Everything is one expression chain; the only
-        shuffle is the (parity-mandated) sort when datetime features exist
-        or an order-dependent fill is requested."""
+        one-hot → target. Everything is one expression chain, plus one
+        order-dependent fill pass (N.apply_order_dependent_fills: an
+        approxQuantile job, a range-bucket shuffle and a broadcast carry
+        fix-up, or per-key windows with ``partition_by``) when datetime
+        features exist or num_fill_null is forward/backward/interpolate,
+        and a final sort by the first datetime column."""
         st = self.state
         # unseen_labels='error' policy (reference preprocessor.py:434-437):
         # warn when the new data carries categorical content outside the
@@ -588,11 +598,9 @@ class Preprocessor:
         if st.unseen_labels == "error" and st.categorical_features:
             self._warn_unseen_labels(data)
         row_order = "__row_order"
-        needs_order = bool(st.datetime_features) or st.num_fill_null in (
-            "forward",
-            "backward",
-            "interpolate",
-        )
+        first_dt = st.datetime_features[0] if st.datetime_features else None
+        order_strategy = st.num_fill_null in ("forward", "backward", "interpolate")
+        needs_order = bool(first_dt) or order_strategy
         if needs_order and data.isStreaming:
             # every other step is a pure fitted-state projection and streams
             # as-is; order-dependent steps need a total order that a stream
@@ -627,59 +635,46 @@ class Preprocessor:
         if present_discards:
             data = data.drop(*present_discards)
 
-        # 3. datetime path — datetime_transformer.py:94-111
-        order_cols: list = []
-        if st.datetime_features:
+        # 3. order-dependent fills, one pass in the reference's order: it
+        # sorts by the first datetime column (datetime_transformer.py:98),
+        # then interpolates datetimes and fills numerics. Ties fall back to
+        # ingest order. Numerics are clamped first (fills see clamped values).
+        order_fill = order_strategy and bool(st.numerical_features)
+        fills = {c: "interpolate" for c in st.datetime_features}
+        if first_dt:
             data = self._epoch_converted(data, st.datetime_cols)
-            first_dt = st.datetime_features[0]
-            order_cols = [F.col(first_dt), F.col(row_order)]
-            # linear interpolation of nulls over the time-sorted order
-            # (composite key = (first datetime, ingest order) for stable ties)
-            # scale-safe path: without partition_by this runs the
-            # range-partitioned two-pass carry (per-bucket O(n) windows +
-            # broadcast boundary fix-up) instead of a single-partition
-            # global window — same total order (first_dt, row_order), same
-            # values, parallel execution.
+        if order_fill:
+            data = data.withColumns(
+                {c: N.clamp_inf(F.col(c).cast("double")) for c in st.numerical_features}
+            )
+            fills.update({c: st.num_fill_null for c in st.numerical_features})
+        if fills:
             data = N.apply_order_dependent_fills(
                 data,
-                {c: "interpolate" for c in st.datetime_features},
-                order_col=first_dt,
-                tiebreak_col=row_order,
+                fills,
+                order_col=first_dt or row_order,
+                tiebreak_col=row_order if first_dt else None,
                 partition_by=st.partition_by,
             )
-            # scale epoch seconds — datetime_transformer.py:101-110
-            dt_scaled = {}
-            for c in st.datetime_features:
-                stats = st.datetime_cols[c].stats
-                if st.scaling in ("normalize", "quantile", "kbins"):
-                    dt_scaled[c] = N.normalize_expr(F.col(c), stats)
-                elif st.scaling == "standardize":
-                    dt_scaled[c] = N.standardize_expr(F.col(c), stats)
-            if dt_scaled:
-                data = data.withColumns(dt_scaled)
 
-        # 4. numerical path — numerical_transformer.py:105-176
+        # 4. datetime scaling — datetime_transformer.py:101-110
+        dt_scaled = {}
+        for c in st.datetime_features:
+            stats = st.datetime_cols[c].stats
+            if st.scaling in ("normalize", "quantile", "kbins"):
+                dt_scaled[c] = N.normalize_expr(F.col(c), stats)
+            elif st.scaling == "standardize":
+                dt_scaled[c] = N.standardize_expr(F.col(c), stats)
+        if dt_scaled:
+            data = data.withColumns(dt_scaled)
+
+        # 5. numerical path — numerical_transformer.py:105-176
         if st.numerical_features:
-            order_dependent = st.num_fill_null in ("forward", "backward", "interpolate")
-            if order_dependent:
-                # clamp first (fills see clamped values), then the
-                # scale-safe fill pass (range-partitioned two-pass carry
-                # when partition_by is absent; per-key windows otherwise)
-                data = data.withColumns(
-                    {c: N.clamp_inf(F.col(c).cast("double")) for c in st.numerical_features}
-                )
-                data = N.apply_order_dependent_fills(
-                    data,
-                    {c: st.num_fill_null for c in st.numerical_features},
-                    order_col=row_order,
-                    partition_by=st.partition_by,
-                )
             num_exprs = {}
             for c in st.numerical_features:
-                if order_dependent:
-                    col = F.col(c)
-                else:
-                    col = N.clamp_inf(F.col(c).cast("double"))
+                col = F.col(c)
+                if not order_fill:
+                    col = N.clamp_inf(col.cast("double"))
                     col = N.fill_expr(col, st.num_fill_null, st.scaling, st.numeric_stats[c])
                 if st.scaling == "normalize":
                     col = N.normalize_expr(col, st.numeric_stats[c])
@@ -697,13 +692,13 @@ class Preprocessor:
                 }
                 data = data.withColumns(q_exprs)
 
-        # 5. boolean → tinyint — preprocessor.py:418-421
+        # 6. boolean → tinyint — preprocessor.py:418-421
         if st.boolean_features:
             data = data.withColumns(
                 {c: F.col(c).cast("tinyint") for c in st.boolean_features}
             )
 
-        # 6. one-hot — categorical_transformer.py:20-70: non-categorical
+        # 7. one-hot — categorical_transformer.py:20-70: non-categorical
         # columns first (current order), then fitted dummies in fit order.
         if st.categorical_features:
             non_cat = [c for c in data.columns if c not in st.categorical_features and c != row_order]
@@ -715,7 +710,7 @@ class Preprocessor:
                 keep.append(F.col(row_order))
             data = data.select(*keep)
 
-        # 7. target — preprocessor.py:445-456
+        # 8. target — preprocessor.py:445-456
         if st.target_column is not None and st.target_column in data.columns:
             tcol = F.col(st.target_column)
             if st.ml_task == "classification":
@@ -728,8 +723,8 @@ class Preprocessor:
 
         # parity: reference sorts the whole output by the first datetime
         # column (datetime_transformer.py:98)
-        if st.datetime_features:
-            data = data.orderBy(*order_cols)
+        if first_dt:
+            data = data.orderBy(first_dt, row_order)
         if needs_order:
             data = data.drop(row_order)
         return data
@@ -856,7 +851,7 @@ class Preprocessor:
         with open(path) as f:
             obj.state = FittedState.from_json(f.read())
         obj.time_id = None
-        obj.discarded = (list(obj.state.discarded_features), dict(obj.state.rare_labels))
+        obj._set_parity_attributes()
         return obj
 
     # ------------------------------------------------------- ts features

@@ -127,6 +127,72 @@ def test_partitioned_order_fill(spark):
     assert by_series["b"] == [7.0, 7.0]
 
 
+def _time_shuffled_frame(n=60, seed=11):
+    """Timestamps shuffled against ingest order, five rows per instant on
+    average, three series and a numeric column with interior nulls."""
+    rng = np.random.default_rng(seed)
+    pdf = pd.DataFrame(
+        {
+            "k": np.arange(n, dtype="int64"),
+            "series": rng.choice(["a", "b", "c"], size=n),
+            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.integers(0, 12, n), unit="h"),
+            "x": rng.normal(size=n),
+        }
+    )
+    pdf.loc[rng.random(n) < 0.35, "x"] = np.nan
+    return pdf
+
+
+@pytest.mark.parametrize("partition_by", [None, ["series"]], ids=["global", "series"])
+@pytest.mark.parametrize("strategy", ["forward", "backward", "interpolate"])
+def test_numeric_fills_follow_time_order(spark, strategy, partition_by):
+    """The reference sorts the table by the first datetime column before
+    filling numerics (datetime_transformer.py:98), so forward/backward/
+    interpolate fills follow time order, with ingest order among rows of
+    one instant — on the global and on the per-series route."""
+    pdf = _time_shuffled_frame()
+    prep = Preprocessor(
+        spark.createDataFrame(pdf),
+        num_fill_null=strategy,
+        excluded_col=["k", "series"],
+        partition_by=partition_by,
+    )
+    out = prep.transform(spark.createDataFrame(pdf)).toPandas().sort_values("k")
+
+    fill = {
+        "forward": lambda s: s.ffill(),
+        "backward": lambda s: s.bfill(),
+        "interpolate": lambda s: s.interpolate(limit_area="inside"),
+    }[strategy]
+    ref = pdf.sort_values("ts", kind="stable")
+    want = ref.groupby("series")["x"].transform(fill) if partition_by else fill(ref["x"])
+    np.testing.assert_allclose(
+        out["x"].to_numpy(dtype="float64"), want.sort_index().to_numpy(), rtol=1e-12
+    )
+
+
+def test_transform_makes_one_fill_pass(spark, monkeypatch):
+    """Datetime interpolation and the numeric fill share one
+    apply_order_dependent_fills pass: one persisted window frame."""
+    from preprocessor_spark import caching
+
+    df = spark.createDataFrame(_time_shuffled_frame())
+    prep = Preprocessor(df, num_fill_null="interpolate", excluded_col=["k", "series"])
+    persisted = []
+
+    def record(frame):
+        persisted.append(frame)
+        return frame
+
+    monkeypatch.setattr(caching, "register_persisted", record)
+    try:
+        prep.transform(df)
+        assert len(persisted) == 1
+    finally:
+        for frame in persisted:
+            frame.unpersist()
+
+
 def test_backward_fill_tied_keys_with_tiebreak(spark):
     """Duplicate order keys + tiebreak_col: the reverse scan mirrors the
     forward order exactly, so fills at tied rows are deterministic."""

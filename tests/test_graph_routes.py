@@ -94,17 +94,17 @@ def test_empty_edge_list(spark):
 
 
 def test_cc_string_ids(spark, fixpoint_route):
-    """String ids on the driver route: the representative is the min id in
+    """String ids on both routes: the representative is the min id in
     codepoint order (Spark's UTF8String order) — "B" < "a" and
-    "a10" < "a9". The distributed loop's DECIMAL label-sum certificate
-    needs integral ids, so strings are served up to the budget only."""
-    fixpoint_route("driver")
+    "a10" < "a9"."""
     pairs = spark.createDataFrame(
         [("a9", "a10"), ("a10", "b"), ("a", "B"), ("z", "y")],
         "id_a string, id_b string",
     )
-    out = graph.connected_components(pairs)
-    assert [f.dataType.simpleString() for f in out.schema.fields] == ["string"] * 2
-    assert dict(map(tuple, out.collect())) == {
-        "a9": "a10", "a10": "a10", "b": "a10", "a": "B", "B": "B", "z": "y", "y": "y"
-    }
+    for route in ROUTES:
+        fixpoint_route(route)
+        out = graph.connected_components(pairs)
+        assert [f.dataType.simpleString() for f in out.schema.fields] == ["string"] * 2
+        assert dict(map(tuple, out.collect())) == {
+            "a9": "a10", "a10": "a10", "b": "a10", "a": "B", "B": "B", "z": "y", "y": "y"
+        }, route

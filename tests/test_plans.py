@@ -584,3 +584,13 @@ def test_delta_scan_pushes_residual_predicate(spark, tmp_path):
     plan = formatted_plan(df)
     assert "PushedFilters: [" in plan, plan
     assert "GreaterThanOrEqual(o_orderdate" in plan, plan
+
+
+@pytest.mark.parametrize("query", ["knn_ivfpq", "knn_ivfpq_refined"])
+def test_ivfpq_encodes_corpus_once(spark, query):
+    """The fused cell-routing + PQ-encoding UDF runs once per corpus row:
+    the probe-cell filter must not push under its projection, which would
+    duplicate the ArrowEvalPython node (one evaluation above the filter,
+    one below it)."""
+    plan = formatted_plan(getattr(em, query)(spark, SF))
+    assert plan.count("Arguments: [_assign_enc(") == 1, plan

@@ -333,6 +333,7 @@ def test_discarded_info_survives_save_load(spark, tmp_path):
     prep.save(p)
     prep2 = Preprocessor.load(p)
     assert prep2.get_single_valued_columns() == {"con": 3.0}
+    assert prep2.single_value_columns == {"con": 3.0}
     assert prep2.get_discarded_features_reason() == {"con": "contains a single value"}
 
 
