@@ -2970,12 +2970,10 @@ def knn_bruteforce(spark, sf_dir):
     from preprocessor_spark.operators.similarity import cosine_topk
 
     e = _t(spark, sf_dir, "embeddings")
-    # engine="arrow": query matrix via explicit sc.broadcast (bounded, the
-    # same movement a BroadcastExchange does) + one mapInPandas corpus scan
-    # with tie-break-faithful per-batch top-k pruning — zero shuffles
-    out = cosine_topk(
-        e, e.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=5, engine="arrow"
-    )
+    # query matrix via explicit sc.broadcast (bounded, the same movement a
+    # BroadcastExchange does) + one mapInPandas corpus scan with
+    # tie-break-faithful per-batch top-k pruning — zero shuffles
+    out = cosine_topk(e, e.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=5)
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
     )
@@ -3024,8 +3022,7 @@ def ranking_eval_same_source(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     res = cosine_topk(
-        e, e.filter(F.col("vec_id") < 30), "embedding", "vec_id",
-        k=10, engine="arrow",
+        e, e.filter(F.col("vec_id") < 30), "embedding", "vec_id", k=10
     ).select("query_id", F.col("neighbor_id").alias("doc_id"), "rank")
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     q = d.where(F.col("doc_id") < 30).select(
@@ -3094,14 +3091,14 @@ def knn_graph_nndescent(spark, sf_dir):
     scale_smoke.py), while NN-descent does O(N·(ρk)²·d) per round via
     neighbors-of-neighbors candidate generation, hash-bucket seeding, and
     bounded per-node merges — every stage a keyed shuffle, no cross
-    products (plan-asserted). Below exact_below=4096 vectors the builder
-    routes to the blocked exact GEMM (pynndescent-style small-N switch —
-    the iterative machinery costs more than the answer there), so sf0.1
-    rides the exact path and derived sf1+ exercises NN-descent proper.
-    Rows-only (approximate by contract); tests/test_nndescent.py pins a
-    ≥0.9 recall floor vs brute force on the FORCED iterative path
-    (exact_below=0), repartition determinism, the duplicated-corpus clique
-    bound, and exact-route equivalence."""
+    products (plan-asserted). At or under nndescent.EXACT_MAX_VECTORS
+    (4096) vectors the builder routes to the exact brute-force scan
+    (pynndescent-style small-N switch — the iterative machinery costs more
+    than the answer there), so sf0.1 rides the exact path and derived sf1+
+    exercises NN-descent proper. Rows-only (approximate by contract);
+    tests/test_nndescent.py pins a ≥0.9 recall floor vs brute force on the
+    forced iterative path, repartition determinism, the duplicated-corpus
+    clique bound, and exact-route equivalence."""
     from preprocessor_spark.caching import persist_scope
     from preprocessor_spark.operators.nndescent import nndescent_knn_graph
 
@@ -3614,7 +3611,7 @@ def mmr_rerank_docs(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     cands = cosine_topk(
-        e, e.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=8, engine="arrow"
+        e, e.filter(F.col("vec_id") < 10), "embedding", "vec_id", k=8
     ).select("query_id", "neighbor_id", F.col("cosine").alias("relevance"))
     out = mmr_rerank(cands, e, k=4, lam=0.7)
     return out.select(
@@ -4869,12 +4866,10 @@ def communities_lpa(spark, sf_dir):
 def pagerank_custsupp(spark, sf_dir):
     """PageRank over the customer→supplier trade graph (distinct pairs
     from orders⋈lineitem; node ids prefixed so the two key spaces can't
-    collide) — the exact-replay variant (operators/graph.py
-    pagerank_exact): rank mass on the int64 10^15 grid makes the per-dst
-    contribution sum order-free, so the DuckDB oracle replays all 5 power
-    iterations bit-for-bit (VALUE-oracled this round; the float pagerank
-    stays pytest-graded against the numpy reference)."""
-    from preprocessor_spark.operators.graph import pagerank_exact
+    collide) via operators/graph.py pagerank: rank mass on the int64
+    10^15 grid makes the per-dst contribution sum order-free, so the DuckDB
+    oracle replays all 5 power iterations bit-for-bit."""
+    from preprocessor_spark.operators.graph import pagerank
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -4892,7 +4887,7 @@ def pagerank_custsupp(spark, sf_dir):
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
         )
     )
-    out = pagerank_exact(edges, iterations=5)
+    out = pagerank(edges, iterations=5)
     node_str = F.when(
         F.col("node") % 2 == 0, F.concat(F.lit("c"), F.expr("node DIV 2"))
     ).otherwise(F.concat(F.lit("s"), F.expr("node DIV 2")))
@@ -7483,7 +7478,7 @@ def _image_features_oracle_sql() -> str:
 
 
 def _pagerank_oracle_sql(iterations: int = 5, damping: float = 0.85) -> str:
-    """Unrolled replay of graph.pagerank_exact over the customer→supplier
+    """Unrolled replay of graph.pagerank over the customer→supplier
     trade graph: rank mass on the int64 10^15 grid makes the per-dst
     contribution sum order-free; every float op is a fixed-order IEEE
     expression on identical doubles (literals embedded via repr)."""

@@ -119,6 +119,15 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     total = round(sum(timings.values()), 3)
+    # what the session was given, against what the process may use (the
+    # same fields perfbench/run.py records)
+    sc = spark.sparkContext
+    cpus = re.fullmatch(r"local\[(\d+)\]", sc.master)
+    parallelism = {
+        "cpus_requested": int(cpus.group(1)) if cpus else None,
+        "default_parallelism": sc.defaultParallelism,
+        "nproc": len(os.sched_getaffinity(0)),
+    }
     full = {
         "metric": "headline_suite_wall_clock",
         "value": total,
@@ -136,6 +145,7 @@ def main() -> None:
         # committed recording content-wise (file mtime is just
         # checkout order after a fresh clone)
         "recorded_unix": int(time.time()),
+        **parallelism,
     }
     print(json.dumps(full))
     # LAST line: compact self-describing summary (total + slowest 10) —
@@ -153,6 +163,7 @@ def main() -> None:
                 "queries": slowest,
                 "note": "slowest-10 shown; full per-query JSON on the previous stdout line and committed under bench_results/",
                 "recorded_unix": full["recorded_unix"],
+                **parallelism,
             }
         )
     )

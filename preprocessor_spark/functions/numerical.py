@@ -215,7 +215,6 @@ def apply_order_dependent_fills(
     order_col: str,
     tiebreak_col: str | None = None,
     partition_by: list[str] | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Apply forward/backward/interpolate fills over a total order, at scale.
 
@@ -232,7 +231,7 @@ def apply_order_dependent_fills(
     cannot survive a 100× scale-up. Instead this runs a range-partitioned
     two-pass carry:
 
-    1. one ``approxQuantile`` pass fits ``num_buckets``−1 boundaries on
+    1. one ``approxQuantile`` pass fits P−1 boundaries on
        ``order_col``; each row gets a bucket id via a boundary comparison
        (nulls → bucket 0, matching asc-nulls-first semantics; tied keys
        never split across buckets);
@@ -246,7 +245,7 @@ def apply_order_dependent_fills(
        window formulation.
 
     Cost: one extra stats pass + one tiny broadcast join, in exchange for
-    the fill stage scaling linearly with cores. Bucket count defaults to
+    the fill stage scaling linearly with cores. The bucket count P is
     ``spark.sql.shuffle.partitions``.
     """
     bad = set(fills.values()) - {"forward", "backward", "interpolate"}
@@ -272,7 +271,7 @@ def apply_order_dependent_fills(
         return df.withColumns(exprs)
 
     spark = df.sparkSession
-    p = int(num_buckets or spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     out_cols = df.columns
 
     # -- pass 1: range boundaries on the order key (null-safe; approxQuantile
@@ -455,72 +454,64 @@ def sentinel_to_null_expr(col: Column, scaling: str, stats: dict) -> Column:
 # Fit: quantile landmarks via approxQuantile (one pass, driver-held).
 # Apply: piecewise-linear CDF interpolation + inverse normal CDF inside an
 # Arrow-batched pandas UDF (the only Python on the hot path; norm.ppf has no
-# Spark SQL closed form).
+# Spark SQL closed form). The normal CDF/PPF pair below inverts itself to
+# double precision, so inverse_transform undoes transform.
 # --------------------------------------------------------------------------
 
 BOUNDS_THRESHOLD = 1e-7
 
-try:  # scipy is not guaranteed in this container; fall back to numpy approximations
-    from scipy.stats import norm as _scipy_norm
+_erfc = np.vectorize(math.erfc, otypes=["float64"])
 
-    def _norm_ppf(p):
-        return _scipy_norm.ppf(p)
 
-    def _norm_cdf(x):
-        return _scipy_norm.cdf(x)
+def _norm_cdf(x):
+    """Normal CDF from the stdlib's erfc (double precision in both tails,
+    where ``1 - erfc`` forms would cancel)."""
+    return 0.5 * _erfc(-np.asarray(x, dtype="float64") / math.sqrt(2.0))
 
-except Exception:  # pragma: no cover - environment dependent
-    import numpy as _np
 
-    def _norm_ppf(p):
-        """Acklam's rational approximation of the inverse normal CDF
-        (public domain; |rel err| < 1.15e-9 — well inside the reference
-        round-trip tolerance of 1e-3)."""
-        p = _np.asarray(p, dtype="float64")
-        a = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
-             1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
-        b = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
-             6.680131188771972e01, -1.328068155288572e01]
-        c = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
-             -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
-        d = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
-             3.754408661907416e00]
-        plow, phigh = 0.02425, 1 - 0.02425
-        out = _np.full_like(p, _np.nan)
-        lo = (p > 0) & (p < plow)
-        hi = (p > phigh) & (p < 1)
-        mid = (p >= plow) & (p <= phigh)
-        if lo.any():
-            q = _np.sqrt(-2 * _np.log(p[lo]))
-            out[lo] = (((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-                (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-            )
-        if hi.any():
-            q = _np.sqrt(-2 * _np.log(1 - p[hi]))
-            out[hi] = -(((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-                (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-            )
-        if mid.any():
-            q = p[mid] - 0.5
-            r = q * q
-            out[mid] = (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * q / (
-                ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1
-            )
-        out[p == 0] = -_np.inf
-        out[p == 1] = _np.inf
-        return out
-
-    def _norm_cdf(x):
-        """Vectorized erf-based normal CDF (Abramowitz & Stegun 7.1.26,
-        |err| < 1.5e-7)."""
-        x = _np.asarray(x, dtype="float64")
-        z = x / math.sqrt(2.0)
-        sign = _np.sign(z)
-        z = _np.abs(z)
-        t = 1.0 / (1.0 + 0.3275911 * z)
-        poly = t * (0.254829592 + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))))
-        erf = 1.0 - poly * _np.exp(-z * z)
-        return 0.5 * (1.0 + sign * erf)
+def _norm_ppf(p):
+    """Inverse normal CDF: Acklam's rational approximation (public domain,
+    |rel err| < 1.15e-9) refined by one Halley step against
+    :func:`_norm_cdf`, so ``_norm_cdf(_norm_ppf(p))`` returns p to double
+    precision and the inverse transform undoes the forward one."""
+    p = np.asarray(p, dtype="float64")
+    a = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
+         1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
+    b = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
+         6.680131188771972e01, -1.328068155288572e01]
+    c = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
+         -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
+    d = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
+         3.754408661907416e00]
+    plow, phigh = 0.02425, 1 - 0.02425
+    out = np.full_like(p, np.nan)
+    lo = (p > 0) & (p < plow)
+    hi = (p > phigh) & (p < 1)
+    mid = (p >= plow) & (p <= phigh)
+    if lo.any():
+        q = np.sqrt(-2 * np.log(p[lo]))
+        out[lo] = (((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
+            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
+        )
+    if hi.any():
+        q = np.sqrt(-2 * np.log(1 - p[hi]))
+        out[hi] = -(((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
+            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
+        )
+    if mid.any():
+        q = p[mid] - 0.5
+        r = q * q
+        out[mid] = (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * q / (
+            ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1
+        )
+    fin = np.isfinite(out)
+    if fin.any():
+        x = out[fin]
+        u = (_norm_cdf(x) - p[fin]) * math.sqrt(2 * math.pi) * np.exp(0.5 * x * x)
+        out[fin] = x - u / (1 + 0.5 * x * u)
+    out[p == 0] = -np.inf
+    out[p == 1] = np.inf
+    return out
 
 
 def fit_quantile_landmarks(df: DataFrame, cols: list[str], n_quantiles: int) -> dict[str, list[float]]:
@@ -551,18 +542,24 @@ def make_quantile_transform_udf(landmarks: list[float], inverse: bool = False):
             fwd = np.interp(x, q, refs)
             bwd = np.interp(-x, -q[::-1], -refs[::-1])
             p = 0.5 * (fwd - bwd)
-            out = np.asarray(_norm_ppf(np.clip(p, BOUNDS_THRESHOLD, 1 - BOUNDS_THRESHOLD)), dtype="float64")
+            out = _norm_ppf(np.clip(p, BOUNDS_THRESHOLD, 1 - BOUNDS_THRESHOLD))
             out[isnan] = np.nan
             return pd.Series(out)
 
         return _udf
 
+    # the forward map clips p to [BOUNDS_THRESHOLD, 1 - BOUNDS_THRESHOLD];
+    # outputs at those bounds snap back to the end landmarks, as sklearn's
+    # inverse does, instead of interpolating 1e-7 short of them
+    z_lo, z_hi = _norm_ppf([BOUNDS_THRESHOLD, 1 - BOUNDS_THRESHOLD]) + [1e-12, -1e-12]
+
     @pandas_udf("double")
     def _inv_udf(s: pd.Series) -> pd.Series:
         x = s.to_numpy(dtype="float64", na_value=np.nan)
         isnan = np.isnan(x)
-        p = np.asarray(_norm_cdf(x), dtype="float64")
-        out = np.interp(p, refs, q)
+        out = np.interp(_norm_cdf(x), refs, q)
+        out[x <= z_lo] = q[0]
+        out[x >= z_hi] = q[-1]
         out[isnan] = np.nan
         return pd.Series(out)
 

@@ -6,8 +6,8 @@ these are Spark-first designs per the project north star:
 - exact_dedup          — hash-groupBy; one shuffle on the content hash.
 - minhash_lsh_pairs    — shingle → minhash signature → banded LSH buckets →
                          candidate pairs (+ optional exact-Jaccard verify).
-                         All JVM expressions: xxhash64 + higher-order array
-                         functions; no Python on the hot path.
+                         Signatures come from one Arrow-batched numpy
+                         kernel; banding and verification are JVM joins.
 - ngram_jaccard_pairs  — exact n-gram Jaccard via inverted shingle index
                          (explode → self-join on shingle → count agg).
 - simhash              — 64-bit simhash via an Arrow-batched pandas UDF
@@ -64,61 +64,12 @@ def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles_expr(text_col, n: int = 5):
-    """Word n-gram shingle array (distinct), all JVM-side.
-
-    transform over a sliding index range + array_distinct; lowercased,
-    whitespace-tokenized.
-    """
-    toks = F.split(F.lower(text_col), r"\s+")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    idx = F.sequence(F.lit(0), k - 1)
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
-
-
-def _minhash_sig_expr(shingle_col, num_hashes: int, seed: int = 42):
-    """num_hashes-wide minhash signature as an array<bigint> expression.
-
-    h_i(s) = (a_i * h(s) + b_i) mod p minimized over shingles, evaluated as
-    ONE fold so the shingle/hash subtree runs once per row: hash shingles
-    once, expand each hash to its num_hashes permutations (nested transform
-    over a literal parameter array), then elementwise-min aggregate.
-    Naively emitting num_hashes separate array_min expressions re-evaluates
-    the whole shingle pipeline per hash function (higher-order exprs are
-    interpreted with no CSE) — measured 60× slower.
-    """
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-    params = F.array(
-        *[
-            F.struct(F.lit(int(a[i])).alias("a"), F.lit(int(b[i])).alias("b"))
-            for i in range(num_hashes)
-        ]
-    )
-    # base hash reduced mod p first so every product fits in a long
-    hs = F.transform(shingle_col, lambda s: F.abs(F.xxhash64(s)) % F.lit(_MERSENNE))
-    per_shingle = F.transform(
-        hs, lambda h: F.transform(params, lambda p: (h * p["a"] + p["b"]) % F.lit(_MERSENNE))
-    )
-    return F.aggregate(
-        per_shingle,
-        F.array_repeat(F.lit(_MERSENNE).cast("bigint"), num_hashes),
-        lambda acc, x: F.zip_with(acc, x, lambda m, v: F.least(m, v)),
-    )
-
-
 def minhash_signature_udf(num_hashes: int, shingle_n: int, seed: int = 42):
     """Arrow-batched pandas UDF computing the minhash signature with
     vectorized numpy: per doc, blake2b-hash each word-n-gram shingle, then
-    one (S×num_hashes) modmul + column-min.
-
-    Chosen over the pure-expression variant (``_minhash_sig_expr``) for the
-    hot path: Spark's higher-order array functions evaluate interpreted with
-    no common-subexpression elimination, measured ~20× slower than this
-    Arrow/numpy kernel at equal output.
+    one (S×num_hashes) modmul + column-min. Spark's higher-order array
+    functions evaluate interpreted with no common-subexpression elimination,
+    measured ~20× slower than this Arrow/numpy kernel at equal output.
     """
     import hashlib
 
@@ -163,7 +114,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 5,
     threshold: float | None = 0.8,
     max_bucket: int = 1000,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -176,10 +126,7 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     """
     r = num_hashes // bands
-    if engine == "pandas":
-        sig = minhash_signature_udf(num_hashes, shingle_n)(F.col(text_col))
-    else:
-        sig = _minhash_sig_expr(shingles_expr(F.col(text_col), shingle_n), num_hashes)
+    sig = minhash_signature_udf(num_hashes, shingle_n)(F.col(text_col))
     # referenced by the band explode AND both verification joins — persist so
     # the signature kernel runs once per row, not three times; lifetime is
     # caller-managed via persist_scope (see preprocessor_spark.caching)
@@ -419,11 +366,11 @@ def minhash_dedup_corpus(
 def hashed_shingles_udf(shingle_n: int = 5):
     """Shingle → sorted distinct int64 hash array (blake2b/8B), Arrow-batched.
 
-    Same tokenization as ``shingles_expr`` (regex ``\\s+`` split on lowercased
-    text, full n-grams, plus the whole text when shorter). Hashing shrinks
-    everything downstream: the inverted index shuffles int64s instead of
-    strings, the cached arrays are fixed-width, and verification is a
-    vectorized sorted-array intersection. Jaccard over hashes equals Jaccard
+    Tokenization: regex ``\\s+`` split on lowercased text, full n-grams,
+    plus the whole text when shorter. Hashing shrinks everything
+    downstream: the inverted index shuffles int64s instead of strings, the
+    cached arrays are fixed-width, and verification is a vectorized
+    sorted-array intersection. Jaccard over hashes equals Jaccard
     over shingles up to 64-bit collisions (P < 1e-11 at 10^6 distinct
     shingles per doc-pair universe).
     """
@@ -789,7 +736,6 @@ def embedding_neardup_pairs(
     bands: int = 4,
     seed: int = 7,
     brute_force: bool = False,
-    engine: str = "numpy",
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Cosine near-duplicate pairs over an array<float> embedding column.
@@ -802,12 +748,11 @@ def embedding_neardup_pairs(
     recall ≈ 1−(1−0.54)⁴ ≈ 0.95 — versus 0.29 for a single 8-bit bucket.
     ``brute_force=True`` skips bucketing (exact, quadratic — small inputs).
 
-    engine="numpy" (default): normalization + all band keys come from ONE
-    Arrow-batched pandas UDF (a B×d @ d×P matmul + sign-bit packing per
-    batch) and pair verification is a batched dot-product UDF — measured ~8×
-    faster than the interpreted higher-order-function folds, which evaluate
-    each of the n_planes aggregate subtrees per row with no CSE.
-    engine="expr": pure JVM column expressions, zero Python.
+    Normalization and all band keys come from ONE Arrow-batched pandas UDF
+    (a B×d @ d×P matmul + sign-bit packing per batch) and pair verification
+    is a batched dot-product UDF — measured ~8× faster than interpreted
+    higher-order-function folds, which evaluate each of the n_planes
+    aggregate subtrees per row with no CSE.
 
     ``collapse_exact`` (default): byte-identical vectors group on a content
     hash first; LSH banding + both verify joins run on one representative
@@ -846,7 +791,7 @@ def embedding_neardup_pairs(
             m.unpersist()
             return embedding_neardup_pairs(
                 df, vec_col, id_col, threshold, n_planes, bands, seed,
-                brute_force=False, engine=engine, collapse_exact=False,
+                brute_force=False, collapse_exact=False,
             )
         reps = m.groupBy("__g").agg(F.min("__mid").alias("__rid"))
         rep_rows = df.join(
@@ -854,7 +799,7 @@ def embedding_neardup_pairs(
         ).select(id_col, vec_col)
         rep_pairs = embedding_neardup_pairs(
             rep_rows, vec_col, id_col, threshold, n_planes, bands, seed,
-            brute_force=False, engine=engine, collapse_exact=False,
+            brute_force=False, collapse_exact=False,
         )
         ga = reps.select(F.col("__rid").alias("id_a"), F.col("__g").alias("__ga"))
         gb = reps.select(F.col("__rid").alias("id_b"), F.col("__g").alias("__gb"))
@@ -888,88 +833,8 @@ def embedding_neardup_pairs(
             .filter(F.lit(threshold <= 1.0))
         )
         return within.unionByName(cross)
-    if engine == "numpy":
-        return _embedding_neardup_numpy(
-            df, vec_col, id_col, threshold, n_planes, bands, seed, brute_force
-        )
-
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm = F.sqrt(F.aggregate(vec_d, F.lit(0.0), lambda acc, x: acc + x * x))
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.transform(vec_d, lambda x: x / norm).alias("__v"),
-    )
-    cos = F.aggregate(
-        F.zip_with(F.col("a.__v"), F.col("b.__v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    if brute_force:
-        a, b = base.alias("a"), base.alias("b")
-        return (
-            a.join(b, F.col("a.__id") < F.col("b.__id"))
-            .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"), cos.alias("cosine"))
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    dim = len(df.select(vec_col).first()[0])
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim)
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with("__v", F.array(*[F.lit(float(v)) for v in planes[i]]), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for i in range(n_planes)
-    ]
-    r = n_planes // bands
-    entries = base.select(
-        "__id",
-        "__v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.concat(*bits[bi * r : (bi + 1) * r]).alias("bkey"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("__id", "__v", "bb.band", "bb.bkey")
-    a, b = entries.alias("a"), entries.alias("b")
-    # id-only candidates deduped BEFORE the cosine verify: true near-dups
-    # collide in most bands, so verifying pre-dedup evaluates the cosine
-    # (and ships the vectors) once per matching band for exactly the hot
-    # pairs (same ordering as the minhash/ngram candidate paths)
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    v_a = base.select(F.col("__id").alias("id_a"), F.col("__v").alias("__va"))
-    v_b = base.select(F.col("__id").alias("id_b"), F.col("__v").alias("__vb"))
-    pair_cos = F.aggregate(
-        F.zip_with(F.col("__va"), F.col("__vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(v_a, "id_a")
-        .join(v_b, "id_b")
-        .select("id_a", "id_b", pair_cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+    return _embedding_neardup_numpy(
+        df, vec_col, id_col, threshold, n_planes, bands, seed, brute_force
     )
 
 
@@ -1099,7 +964,10 @@ def _embedding_neardup_numpy(
     base = register_persisted(base.persist())
     entries = base.select("__id", F.posexplode("__keys").alias("band", "bkey"))
     a, b = entries.alias("a"), entries.alias("b")
-    # id-only candidate dedup BEFORE verification (see expr engine note)
+    # id-only candidates deduped BEFORE the cosine verify: true near-dups
+    # collide in most bands, so verifying pre-dedup evaluates the cosine
+    # (and ships the vectors) once per matching band for exactly the hot
+    # pairs (same ordering as the minhash/ngram candidate paths)
     cand = (
         a.join(
             b,

@@ -340,7 +340,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    skew_salt: int | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list — the link-graph quality signal
     web-corpus pipelines weight documents by (domain/page authority).
@@ -350,121 +349,12 @@ def pagerank(
 
         r'(v) = (1-d)/N + d * (Σ_{u→v} r(u)/deg(u) + dangling_mass/N)
 
-    The iteration loop costs ZERO edge shuffles: the (deduped) edge table
-    is hash-partitioned on ``dst`` ONCE up front and persisted, the |V|-row
-    rank/share table is broadcast into the per-iteration join (rank tables
-    are vertex-sized — tiny next to edges), and the contributions
-    ``groupBy(dst)`` reuses the stored partitioning, so Catalyst plans it
-    without an Exchange. Per round the only materialization is the
-    ``localCheckpoint`` of the new |V|-row rank table (the same
-    iterative-lineage trap as connected_components above).
-
-    Returns (node, rank); ranks sum to 1 (tested). Deterministic up to
-    float summation order — rows-only territory, graded by invariant +
-    reference-implementation tests rather than a value oracle.
-
-    100 TB: when |V| outgrows the broadcast budget, flip the per-iteration
-    join to a shuffle join — the edge side is already partitioned and the
-    plan degrades to the classic one-shuffle-per-iteration Pregel shape.
-    Iterations are a constant (~10 is the conventional budget for ranking
-    signals).
-
-    ``skew_salt``: power-law graphs concentrate in-degree — a dst holding
-    ~30% of edges pins ~30% of every iteration's aggregation into the one
-    partition the dst-keyed layout assigns it. ``skew_salt=s`` partitions
-    the edge table by (dst, hash(src) mod s) instead, spreading a hot dst
-    over s partitions (measured in tests: max-partition edge share drops
-    to ~1/s of the hot key's), and computes contributions as a two-stage
-    aggregate — partial sum per (dst, salt) reusing the stored
-    partitioning (no extra edge Exchange), then a final sum over the tiny
-    (|dst|·s)-row partials. Ranks are identical up to float summation
-    order (equivalence-tested against the numpy oracle at 1e-9).
-    """
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    if skew_salt:
-        base = base.withColumn(
-            "__salt", F.pmod(F.hash("src"), F.lit(int(skew_salt)))
-        ).repartition(n_part, "dst", "__salt")
-    else:
-        base = base.repartition(n_part, "dst")
-    e = register_persisted(base.persist())
-    out_deg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("__deg")
-    )
-    # static vertex table: every node with its out-degree (0 for dangling)
-    nodes = register_persisted(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(out_deg, on="node", how="left")
-        .fillna({"__deg": 0})
-        .persist()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    ranks = nodes.select(
-        "node", "__deg", F.lit(1.0 / n_nodes).alias("rank")
-    ).transform(checkpoint_frame)
-
-    for _ in range(iterations):
-        shares = ranks.select(
-            "node",
-            F.when(F.col("__deg") > 0, F.col("rank") / F.col("__deg")).alias("__share"),
-            F.when(F.col("__deg") == 0, F.col("rank")).otherwise(F.lit(0.0)).alias("__dangling"),
-        )
-        # dangling nodes (no out-edges) leak their rank; redistribute it
-        dangling = shares.agg(F.sum("__dangling").alias("__dm"))
-        joined = e.join(
-            F.broadcast(shares.where(F.col("__share").isNotNull())
-                        .select(F.col("node").alias("src"), "__share")),
-            on="src",
-        )
-        if skew_salt:
-            # partial per (dst, salt) reuses the stored partitioning; the
-            # final agg shuffles only |dst|·salt partial rows
-            contribs = (
-                joined.groupBy("dst", "__salt")
-                .agg(F.sum("__share").alias("__p"))
-                .groupBy("dst")
-                .agg(F.sum("__p").alias("__in"))
-            )
-        else:
-            contribs = (
-                joined.groupBy("dst")  # reuses e's dst partitioning: no Exchange
-                .agg(F.sum("__share").alias("__in"))
-            )
-        ranks = (
-            nodes.join(F.broadcast(contribs.withColumnRenamed("dst", "node")), on="node", how="left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "__deg",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("__in"), F.lit(0.0)) + F.col("__dm") / n_nodes)
-                ).alias("rank"),
-            )
-            .transform(checkpoint_frame)
-        )
-    return ranks.select("node", "rank")
-
-
-def pagerank_exact(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 5,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Exact-replay PageRank: rank mass lives on an int64 10^15 grid, so
-    the one order-dependent operation — summing contributions per dst —
-    becomes an order-free integer sum, and every remaining float op is a
-    fixed-order IEEE expression on identical doubles. A DuckDB oracle
-    replays the whole power iteration bit-for-bit (the LPA/BFS
-    integer-fixpoint discipline; see __spark_entry__._pagerank_oracle_sql).
+    Rank mass lives on an int64 10^15 grid, so the one order-dependent
+    operation — summing contributions per dst — becomes an order-free
+    integer sum, and every remaining float op is a fixed-order IEEE
+    expression on identical doubles. A DuckDB oracle replays the whole
+    power iteration bit-for-bit (the LPA/BFS integer-fixpoint discipline;
+    see __spark_entry__._pagerank_oracle_sql).
 
     Per iteration (all quantities integer unless noted):
 
@@ -474,11 +364,18 @@ def pagerank_exact(
         q'(v)    = floor( (1-d)·(10^15/N)
                           + d·(double(in(v)) + double(dm)/N) + 0.5 )
 
-    Same zero-edge-shuffle shape as :func:`pagerank` (edges partitioned on
-    dst once, vertex-sized rank table broadcast per round). Output rank =
-    double(q)/10^15 — within 1e-15·iterations of the float power method.
-    The float :func:`pagerank` stays the production path for callers that
-    want mass conservation to the last ulp.
+    Output rank = double(q)/10^15 — within 1e-15·iterations of the float
+    power method; ranks sum to 1 within that grid error.
+
+    The iteration loop costs ZERO edge shuffles: the (deduped) edge table
+    is hash-partitioned on ``dst`` ONCE up front and persisted, the |V|-row
+    rank/share table is broadcast into the per-iteration join, and the
+    contributions ``groupBy(dst)`` reuses the stored partitioning, so
+    Catalyst plans it without an Exchange. Each round's |V|-row rank table
+    is checkpointed lazily (the iterative-lineage trap of
+    connected_components above). When |V| outgrows the broadcast budget the
+    per-iteration join becomes a shuffle join and the plan degrades to the
+    classic one-shuffle-per-iteration Pregel shape.
     """
     n_part = edges.sparkSession.sparkContext.defaultParallelism
     base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()

@@ -1,7 +1,7 @@
 """NN-Descent: distributed approximate k-NN graph construction.
 
 `operators/graph.py`'s triangle/PageRank analytics consume a kNN graph, and
-the exact builder (`similarity.cosine_topk` all-pairs GEMM) is O(N²·d) by
+the exact builder (`similarity.cosine_topk` all-pairs scan) is O(N²·d) by
 definition — fine at 20k vectors, impossible at 100 TB. NN-Descent (Dong,
 Moses & Li, WWW 2011: "Efficient K-Nearest Neighbor Graph Construction for
 Generic Similarity Measures") converges to a high-recall kNN graph in a few
@@ -43,6 +43,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+# At or under this many vectors the iterative machinery costs more than the
+# answer: the exact brute-force scan (`similarity.cosine_topk`) is both
+# faster AND recall-1.0 there, so route to it (pynndescent does the same
+# below its tree threshold). Tests set it to 0 to force NN-descent.
+EXACT_MAX_VECTORS = 4096
+# While N fits, the per-round scoring joins broadcast the vector table
+# instead of shuffling the pair stream; past it the keyed joins engage.
+BROADCAST_MAX_VECTORS = 2_000_000
 
 
 def _cosine_pairs_udf():
@@ -108,34 +117,24 @@ def nndescent_knn_graph(
     k: int = 10,
     rounds: int = 3,
     rho: float = 2.0,
-    exact_below: int = 4096,
-    broadcast_vector_limit: int = 2_000_000,
 ) -> DataFrame:
     """Approximate directed kNN graph: (src, dst, sim, rank), k rows per
     node. ``rounds`` fixed (not convergence-polled) for plan determinism;
     3 rounds reach >0.9 recall on clustered corpora (Dong et al. report
-    ~5 rounds to 0.99 on uniform data).
-
-    ``exact_below``: below this N the iterative machinery costs more than
-    the answer — the blocked exact GEMM (`similarity.cosine_topk`) is both
-    faster AND recall-1.0 there, so route to it (pynndescent does the
-    same below its tree threshold). Pass 0 to force the iterative path
-    (the recall/determinism tests do). ``broadcast_vector_limit``: while N
-    fits, the per-round scoring joins broadcast the vector table instead
-    of shuffling the pair stream — past it the keyed joins engage."""
+    ~5 rounds to 0.99 on uniform data). Inputs of at most
+    ``EXACT_MAX_VECTORS`` rows take the exact route instead, and the
+    scoring joins broadcast the vectors up to ``BROADCAST_MAX_VECTORS``."""
     import math
 
     from preprocessor_spark.operators.similarity import _bucket_expr
 
     n = vectors.count()
-    if n <= exact_below:
+    if n <= EXACT_MAX_VECTORS:
         from preprocessor_spark.operators.similarity import cosine_topk
 
         # self-exclusion, 1e-6-rounded (cosine desc, id asc) ranking, and
         # the rank column all match the iterative path's output contract
-        return cosine_topk(
-            vectors, vectors, vec_col, id_col, k=k, engine="arrow"
-        ).select(
+        return cosine_topk(vectors, vectors, vec_col, id_col, k=k).select(
             F.col("query_id").alias("src"),
             F.col("neighbor_id").alias("dst"),
             F.round("cosine", 6).alias("sim"),
@@ -143,7 +142,7 @@ def nndescent_knn_graph(
         )
 
     cap = max(int(rho * k), k + 1)
-    bcast = n <= broadcast_vector_limit
+    bcast = n <= BROADCAST_MAX_VECTORS
     dim = len(vectors.select(vec_col).first()[0])
 
     # --- seeding: sign-LSH buckets put SIMILAR vectors together (the

@@ -20,7 +20,7 @@ Pieces:
   ``LUT[q, j, c] = <q_j, codebook[j][c]>``. The LUT tensor (Q × m × 256
   float32) broadcasts; the encoded corpus streams through one
   ``mapInPandas`` with per-batch top-k pruning — the same zero-shuffle
-  shape as ``cosine_topk(engine="arrow")``, but each corpus row moves
+  shape as ``cosine_topk``, but each corpus row moves
   m bytes instead of 4·d.
 - :func:`pq_save` / :func:`pq_load` — float64 parquet round-trip of the
   codebooks; a reloaded model encodes and searches bit-identically.
@@ -185,7 +185,7 @@ def pq_search_adc(
     per subspace; asserted ≤1e-12 in tests).
 
     The query side collects under the same 1M-row fail-fast guard as
-    ``cosine_topk(engine="arrow")`` — the identical driver→executor
+    ``cosine_topk`` — the identical driver→executor
     movement a broadcast join performs — and the corpus streams through
     ONE mapInPandas with per-batch pruning: only batches × Q × k candidate
     rows reach the final ranking window. Ties break on the 1e-6-rounded
@@ -341,15 +341,14 @@ def ivfpq_search(
     n_probe: int = 3,
     code_col: str = "pq_code",
     exclude_self: bool = True,
-    prune_cells: bool = True,
     refine: DataFrame | None = None,
     refine_factor: int = 4,
 ) -> DataFrame:
     """The standard IVF-PQ search: each query ADC-scans ONLY its n_probe
     nearest cells' codes. Queries explode to probed cells and equi-join
     the index on the cell id (the same bucket-join shape as
-    ``similarity.ivf_search``, with the same optional isin pushdown that
-    becomes static partition pruning on a ``partitionBy("__cell")``
+    ``similarity.ivf_search``, with the same probed-cell isin pushdown
+    that becomes static partition pruning on a ``partitionBy("__cell")``
     layout); scores are the broadcast-LUT gather; top-k is a bounded keyed
     window. With ``n_probe >= n_cells`` the result equals the exhaustive
     :func:`pq_search_adc` exactly (asserted in tests).
@@ -364,22 +363,21 @@ def ivfpq_search(
     from preprocessor_spark.caching import register_persisted
     from preprocessor_spark.operators.similarity import _nearest_cells_udf
 
+    # one row per query: the collect below moves |Q| vectors, and the
+    # probe join side explodes the cached cell lists
     q = _normalized(queries, vec_col, id_col, "query_id", "__qv").withColumn(
-        "__cell",
-        F.explode(F.slice(_nearest_cells_udf(cents)(F.col("__qv")), 1, n_probe)),
+        "__cells", F.slice(_nearest_cells_udf(cents)(F.col("__qv")), 1, n_probe)
     )
     q = register_persisted(q.persist())
-    # ONE collect serves the LUT build AND the probe-cell pushdown (was
-    # two driver jobs over the same cached frame)
-    allrows = q.limit(1_000_001 * max(n_probe, 1)).collect()
-    by_qid: dict = {}
-    for r in allrows:
-        by_qid.setdefault(r["query_id"], r["__qv"])
-    if len(by_qid) > 1_000_000:
+    # ONE collect serves the LUT build AND the probe-cell pushdown
+    qrows = q.limit(1_000_001).collect()
+    if len(qrows) > 1_000_000:
         raise ValueError("ivfpq_search: query side exceeds the 1M-row guard")
-    if prune_cells:
-        probed = sorted({r["__cell"] for r in allrows})
-        index = index.filter(F.col("__cell").isin(probed))
+    by_qid: dict = {}
+    for r in qrows:
+        by_qid.setdefault(r["query_id"], r["__qv"])
+    probed = sorted({c for r in qrows for c in r["__cells"]})
+    index = index.filter(F.col("__cell").isin(probed))
 
     m, n_codes, dsub = books.shape
     qids = np.array(sorted(by_qid), dtype="int64")
@@ -388,7 +386,8 @@ def ivfpq_search(
     pos = {int(i): n for n, i in enumerate(qids)}
     bc = index.sparkSession.sparkContext.broadcast((pos, lut))
 
-    joined = index.join(q.select("query_id", "__cell"), "__cell").select(
+    probes = q.select("query_id", F.explode("__cells").alias("__cell"))
+    joined = index.join(probes, "__cell").select(
         "query_id", "neighbor_id", code_col
     )
     if exclude_self:

@@ -289,13 +289,11 @@ def bm25_search_index(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    prune_buckets: bool = True,
 ) -> DataFrame:
-    """Score a query against a standing index. ``prune_buckets`` pushes
-    the query terms' bucket ids as an ``isin`` on the partition column
-    BEFORE the row filter — static partition pruning on a loaded index
-    (file-list-asserted in tests); results are identical with it off.
-    Scoring replays bm25_scores' exact expression tree over the stored
+    """Score a query against a standing index. The query terms' bucket ids
+    are pushed as an ``isin`` on the partition column BEFORE the row filter
+    — static partition pruning on a loaded index (file-list-asserted in
+    tests). Scoring replays bm25_scores' exact expression tree over the stored
     integers + the two deterministic scalars, so index search == direct
     search after the 6-dp rank rounding."""
     if not query_terms:
@@ -309,13 +307,12 @@ def bm25_search_index(
         .distinct()
         .collect()
     )
-    p = index.postings
-    d = index.dfs
-    if prune_buckets:
-        p = p.filter(F.col("__tb").isin(bkts))
-        d = d.filter(F.col("__tb").isin(bkts))
-    p = p.filter(F.col("__term").isin(terms))
-    d = d.filter(F.col("__term").isin(terms)).select("__term", "__df")
+    p = index.postings.filter(F.col("__tb").isin(bkts)).filter(F.col("__term").isin(terms))
+    d = (
+        index.dfs.filter(F.col("__tb").isin(bkts))
+        .filter(F.col("__term").isin(terms))
+        .select("__term", "__df")
+    )
     scored = (
         p.join(F.broadcast(d), "__term")
         .withColumn(

@@ -2,11 +2,11 @@
 
 North-star extension (no reference counterpart). Two paths:
 
-- ``cosine_topk`` — brute-force exact top-k: the (small) query set joins the
-  corpus via ``F.broadcast`` (no driver collect), dots are computed per Arrow
-  batch with one vectorized einsum, rank with a per-query window. The corpus
-  side streams — scales to any corpus size as long as the query set
-  broadcasts.
+- ``cosine_topk`` — brute-force exact top-k: the (small) query matrix is
+  broadcast to executors, the corpus streams through one Arrow scan that
+  runs a GEMM per batch and keeps each query's per-batch top-k, and a
+  per-query window ranks the survivors. Scales to any corpus size as long
+  as the query set broadcasts.
 - ``lsh_cosine_topk`` — random-hyperplane LSH with multiprobe: corpus rows
   hash to sign buckets; each query probes its own bucket plus all buckets at
   Hamming distance ≤ ``probe_hamming``. Recall/cost dial for 100 TB corpora.
@@ -47,150 +47,94 @@ def cosine_topk(
     id_col: str,
     k: int = 5,
     exclude_self: bool = True,
-    engine: str = "broadcast",
 ) -> DataFrame:
     """Exact brute-force cosine top-k. Ties broken by neighbor id for
     determinism (cosine rounded to 1e-6 before ranking so float jitter
-    cannot flip ranks between runs/engines).
+    cannot flip ranks between runs).
 
-    engine="broadcast" (default): both sides are L2-normalized JVM-side,
-    corpus rows group into ~512-row blocks (one keyed shuffle) and the whole
-    query set rides along each block as ONE broadcast row (never through the
-    driver — no ``collect`` anywhere in the plan). Each block row runs a
-    single numpy GEMM (block×d @ d×Q) and emits only skinny
-    (query_id, neighbor_id, cosine) rows, so Arrow transfer is corpus-once
-    plus queries-per-block — not per-pair. The corpus side streams: scales
-    to any corpus size as long as the query set broadcasts (the same bound
-    every broadcast join has).
-    engine="arrow" : the query matrix ships to executors as an explicit
-    ``sc.broadcast`` — the IDENTICAL driver→executor movement a
-    BroadcastExchange performs for a broadcast join, bounded here by a
-    fail-fast guard on the query count — and the corpus streams through
-    ONE ``mapInPandas`` pass with per-batch top-k pruning. Zero shuffles,
-    zero extra jobs (no block count, no collect_list); only
-    batches × Q × k candidate rows reach the final ranking window.
-    engine="expr": pure zip_with/aggregate column expressions, no Python.
+    Both sides are L2-normalized JVM-side. The query matrix ships to
+    executors as an explicit ``sc.broadcast`` — the same driver→executor
+    movement a BroadcastExchange performs for a broadcast join, bounded
+    here by a fail-fast guard on the query count — and the corpus streams
+    through ONE ``mapInPandas`` pass that runs a B×d @ d×Q GEMM per Arrow
+    batch and keeps each query's per-batch top-k. Zero shuffles, no
+    extra jobs; only batches × Q × k candidate rows reach the final
+    ranking window.
+
+    The scan emits bigint ids, so a non-integral id column takes an exact
+    fallback instead: a broadcast join with the dot product as a
+    zip_with/aggregate column expression.
     """
-    if engine in ("broadcast", "arrow") and not isinstance(
-        corpus.schema[id_col].dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        engine = "expr"  # GEMM paths emit bigint ids; exact fallback otherwise
-    if engine == "arrow":
-        c = _normalized(corpus, vec_col, id_col, "neighbor_id", "__cv")
-        q = _normalized(queries, vec_col, id_col, "query_id", "__qv")
-        qrows = q.limit(1_000_001).collect()
-        if len(qrows) > 1_000_000:
-            raise ValueError(
-                "cosine_topk engine='arrow': query side exceeds the 1M-row "
-                "broadcast guard — swap sides or use the blocked engine"
-            )
-        qids = np.array([r["query_id"] for r in qrows], dtype="int64")
-        qmat = np.array([r["__qv"] for r in qrows], dtype="float64").T  # d×Q
-        bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
-
-        def _scan(batches):
-            bqids, bqmat = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.array(pdf["__cv"].tolist(), dtype="float64")
-                sims = m @ bqmat  # B×Q
-                nids = pdf["neighbor_id"].to_numpy()
-                if exclude_self:
-                    sims = sims.copy()
-                    sims[nids[:, None] == bqids[None, :]] = -np.inf
-                # per-batch prune with the SAME tie-break the final window
-                # uses (rounded cosine desc, neighbor id asc) — an
-                # argpartition on raw sims could drop the global tie-winner
-                # at the boundary when cosines collide exactly
-                kk = min(k, sims.shape[0])
-                rs = np.round(sims, 6)
-                qcols, ncols, scols = [], [], []
-                for j in range(len(bqids)):
-                    order = np.lexsort((nids, -rs[:, j]))[:kk]
-                    sel = sims[order, j]
-                    fin = np.isfinite(sel)
-                    qcols.append(np.full(int(fin.sum()), bqids[j], dtype="int64"))
-                    ncols.append(nids[order][fin])
-                    scols.append(sel[fin])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(qcols),
-                        "neighbor_id": np.concatenate(ncols),
-                        "cosine": np.concatenate(scols),
-                    }
-                )
-
-        pruned = c.mapInPandas(_scan, "query_id bigint, neighbor_id bigint, cosine double")
-        w = Window.partitionBy("query_id").orderBy(
-            F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            pruned.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-        )
-    if engine == "broadcast":
-        c = _normalized(corpus, vec_col, id_col, "neighbor_id", "__cv")
-        q = _normalized(queries, vec_col, id_col, "query_id", "__qv")
-        n_blocks = max(1, min(256, -(-c.count() // 512)))
-        cblocks = (
-            c.withColumn("__bid", F.abs(F.xxhash64("neighbor_id")) % n_blocks)
-            .groupBy("__bid")
-            .agg(F.collect_list("neighbor_id").alias("nids"), F.collect_list("__cv").alias("cvs"))
-        )
-        qagg = q.agg(F.collect_list("query_id").alias("qids"), F.collect_list("__qv").alias("qvs"))
-        joined = cblocks.crossJoin(F.broadcast(qagg))
-
-        def _gemm(batches):
-            for pdf in batches:
-                frames = []
-                for nids, cvs, qids, qvs in zip(
-                    pdf["nids"], pdf["cvs"], pdf["qids"], pdf["qvs"]
-                ):
-                    sims = np.array(list(cvs), dtype="float64") @ np.array(
-                        list(qvs), dtype="float64"
-                    ).T  # B×Q
-                    b, qn = sims.shape
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.tile(np.asarray(qids, dtype="int64"), b),
-                                "neighbor_id": np.repeat(np.asarray(nids, dtype="int64"), qn),
-                                "cosine": sims.ravel(),
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        exploded = joined.mapInPandas(_gemm, "query_id bigint, neighbor_id bigint, cosine double")
-        if exclude_self:
-            exploded = exploded.filter(F.col("query_id") != F.col("neighbor_id"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            exploded.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank")
-        )
-
     c = _normalized(corpus, vec_col, id_col, "neighbor_id", "__cv")
     q = _normalized(queries, vec_col, id_col, "query_id", "__qv")
-    joined = c.join(F.broadcast(q), F.lit(True))
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    sim = _dot(F.col("__qv"), F.col("__cv"))
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
     )
+    if isinstance(
+        corpus.schema[id_col].dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ):
+        scored = _scan_topk(c, q, k, exclude_self)
+    else:
+        joined = c.join(F.broadcast(q), F.lit(True))
+        if exclude_self:
+            joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+        scored = joined.select(
+            "query_id", "neighbor_id", _dot(F.col("__qv"), F.col("__cv")).alias("cosine")
+        )
     return (
-        joined.select("query_id", "neighbor_id", sim.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
+
+
+def _scan_topk(c: DataFrame, q: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """Per-batch top-k candidates of :func:`cosine_topk`'s Arrow scan:
+    (query_id, neighbor_id, cosine) from normalized corpus ``c``
+    (neighbor_id, __cv) and queries ``q`` (query_id, __qv)."""
+    qrows = q.limit(1_000_001).collect()
+    if len(qrows) > 1_000_000:
+        raise ValueError(
+            "cosine_topk: query side exceeds the 1M-row broadcast guard — swap sides"
+        )
+    qids = np.array([r["query_id"] for r in qrows], dtype="int64")
+    qmat = np.array([r["__qv"] for r in qrows], dtype="float64").T  # d×Q
+    bc = c.sparkSession.sparkContext.broadcast((qids, qmat))
+
+    def _scan(batches):
+        bqids, bqmat = bc.value
+        for pdf in batches:
+            if not len(pdf) or not len(bqids):
+                continue
+            m = np.array(pdf["__cv"].tolist(), dtype="float64")
+            sims = m @ bqmat  # B×Q
+            nids = pdf["neighbor_id"].to_numpy()
+            if exclude_self:
+                sims = sims.copy()
+                sims[nids[:, None] == bqids[None, :]] = -np.inf
+            # per-batch prune with the SAME tie-break the final window
+            # uses (rounded cosine desc, neighbor id asc) — an
+            # argpartition on raw sims could drop the global tie-winner
+            # at the boundary when cosines collide exactly
+            kk = min(k, sims.shape[0])
+            rs = np.round(sims, 6)
+            qcols, ncols, scols = [], [], []
+            for j in range(len(bqids)):
+                order = np.lexsort((nids, -rs[:, j]))[:kk]
+                sel = sims[order, j]
+                fin = np.isfinite(sel)
+                qcols.append(np.full(int(fin.sum()), bqids[j], dtype="int64"))
+                ncols.append(nids[order][fin])
+                scols.append(sel[fin])
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(qcols),
+                    "neighbor_id": np.concatenate(ncols),
+                    "cosine": np.concatenate(scols),
+                }
+            )
+
+    return c.mapInPandas(_scan, "query_id bigint, neighbor_id bigint, cosine double")
 
 
 def ivf_train_centroids(
@@ -287,26 +231,22 @@ def ivf_search(
     k: int = 5,
     n_probe: int = 3,
     exclude_self: bool = True,
-    prune_cells: bool = True,
 ) -> DataFrame:
     """Search a built/loaded IVF index: queries explode to their n_probe
     nearest cells and equi-join the assignments on cell id.
 
-    ``prune_cells`` (default): the distinct probed cell ids (bounded by
-    the number of cells, never by query count) are collected and pushed as
-    an ``isin`` filter on the index side BEFORE the join — on an index
-    loaded from the ``partitionBy("__cell")`` parquet layout this becomes
-    static partition pruning, so the scan touches ONLY the probed cells'
-    directories (file-list-asserted in tests). Results are identical with
-    it off (the equi-join already drops other cells); the flag exists so
-    the plan-shape claim stays testable."""
+    The distinct probed cell ids (bounded by the number of cells, never by
+    query count) are collected and pushed as an ``isin`` filter on the
+    index side BEFORE the join — on an index loaded from the
+    ``partitionBy("__cell")`` parquet layout this becomes static partition
+    pruning, so the scan touches ONLY the probed cells' directories
+    (file-list-asserted in tests)."""
     q = _normalized(queries, vec_col, id_col, "query_id", "__qv").withColumn(
         "__cell", F.explode(F.slice(_nearest_cells_udf(cents)(F.col("__qv")), 1, n_probe))
     )
-    if prune_cells:
-        q = register_persisted(q.persist())
-        probed = sorted(r["__cell"] for r in q.select("__cell").distinct().collect())
-        index = index.filter(F.col("__cell").isin(probed))
+    q = register_persisted(q.persist())
+    probed = sorted(r["__cell"] for r in q.select("__cell").distinct().collect())
+    index = index.filter(F.col("__cell").isin(probed))
     joined = index.join(q, "__cell")
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))

@@ -52,7 +52,7 @@ def main() -> None:
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
 
     t0 = time.time()
-    truth_df = cosine_topk(emb, queries, "embedding", "vec_id", k=K, engine="arrow")
+    truth_df = cosine_topk(emb, queries, "embedding", "vec_id", k=K)
     truth: dict[int, set] = {}
     for r in truth_df.collect():
         truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])

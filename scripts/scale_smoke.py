@@ -109,7 +109,8 @@ EXPECTED_SUPRALINEAR = {
     # phash_neardup_pairs.
     "knn_graph_nndescent": (
         "algorithm switch, not a scaling defect: at sf0.1 (2k vectors, "
-        "below exact_below=4096) the builder rides the blocked exact GEMM; "
+        "within nndescent.EXACT_MAX_VECTORS=4096) the builder rides the "
+        "exact brute-force scan; "
         "derived sf1 (20k) crosses onto the iterative NN-descent path whose "
         "per-round cost is linear but whose constant includes ~8 keyed "
         "shuffles/round — the wall ratio compares two different engines"

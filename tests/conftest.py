@@ -38,3 +38,18 @@ def fixpoint_route(monkeypatch):
         monkeypatch.setattr(graph, "DRIVER_SOLVE_MAX_EDGES", budgets[route])
 
     return force
+
+
+@pytest.fixture
+def nndescent_route(monkeypatch):
+    """Force ``nndescent_knn_graph`` onto one route for the rest of the
+    test: ``nndescent_route("iterative")`` or ``nndescent_route("exact")``.
+    Works by moving the small-input cutoff, ``EXACT_MAX_VECTORS``."""
+    from preprocessor_spark.operators import nndescent
+
+    cutoffs = {"iterative": 0, "exact": 10**9}
+
+    def force(route: str) -> None:
+        monkeypatch.setattr(nndescent, "EXACT_MAX_VECTORS", cutoffs[route])
+
+    return force

@@ -248,18 +248,19 @@ def test_bucketed_fill_matches_global_window(spark, strategy):
     including FP) to the single-partition global-window formulation."""
     from pyspark.sql import Window
 
+    from preprocessor_spark.caching import _conf_scope
     from preprocessor_spark.functions import numerical as N
 
     df = _fill_frame(spark)
-    got = (
-        N.apply_order_dependent_fills(
-            df, {"v": strategy}, order_col="okey", tiebreak_col="rid", num_buckets=16
+    # the bucket count is the session's shuffle partition count
+    with _conf_scope(spark, "spark.sql.shuffle.partitions", "16"):
+        got = (
+            N.apply_order_dependent_fills(df, {"v": strategy}, order_col="okey", tiebreak_col="rid")
+            .select("rid", "v")
+            .toPandas()
+            .sort_values("rid")
+            .reset_index(drop=True)
         )
-        .select("rid", "v")
-        .toPandas()
-        .sort_values("rid")
-        .reset_index(drop=True)
-    )
     col = F.col("v")
     if strategy == "forward":
         ref = F.coalesce(col, N.forward_fill_expr(col, "okey", None))
@@ -281,14 +282,16 @@ def test_bucketed_fill_plan_is_parallel(spark):
     """The fill stage must NOT plan Exchange SinglePartition: the windows
     run per range-bucket (hash exchange), which is the property that
     survives a 100× scale-up."""
+    from preprocessor_spark.caching import _conf_scope
     from preprocessor_spark.functions import numerical as N
     from preprocessor_spark.plans import formatted_plan
 
     df = _fill_frame(spark, n=5_000)
-    out = N.apply_order_dependent_fills(
-        df, {"v": "interpolate"}, order_col="okey", tiebreak_col="rid", num_buckets=16
-    )
-    plan = formatted_plan(out)
+    with _conf_scope(spark, "spark.sql.shuffle.partitions", "16"):
+        out = N.apply_order_dependent_fills(
+            df, {"v": "interpolate"}, order_col="okey", tiebreak_col="rid"
+        )
+        plan = formatted_plan(out)
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(__bkt" in plan, plan
     assert "BroadcastHashJoin" in plan, plan  # the P-row carry fix-up

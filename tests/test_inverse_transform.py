@@ -130,3 +130,19 @@ def test_roundtrip_boolean(spark):
     assert set(out["b"].unique()) <= {0, 1}
     restored = prep.inverse_transform(prep.transform(df)).toPandas()
     assert restored.sort_values("x")["b"].tolist() == pdf["b"].tolist()
+
+
+def test_quantile_roundtrip_heavy_tail(spark):
+    """A Student-t(3) column has sparse tails, so the landmark gaps there
+    are wide and any mismatch between the normal CDF and PPF is multiplied
+    by (n_quantiles - 1) x gap on the way back. Every row, the column's
+    min and max included, must round-trip within the reference's 1e-3; the
+    CDF/PPF pair inverts to double precision, so the check is 1e-9, which
+    a mismatched pair fails long before it breaks the contract."""
+    x = np.random.default_rng(501).standard_t(3, 11_500)
+    pdf = pd.DataFrame({"rid": np.arange(len(x)), "t3": x})
+    df = spark.createDataFrame(pdf)
+    prep = Preprocessor(df, scaling="quantile", num_fill_null="mean", excluded_col=["rid"])
+    back = prep.inverse_transform(prep.transform(df)).toPandas().sort_values("rid")
+    err = np.abs(back["t3"].to_numpy() - x)
+    assert err.max() < 1e-9, (int((err >= 1e-9).sum()), float(err.max()))

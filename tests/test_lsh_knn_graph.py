@@ -36,7 +36,7 @@ def test_recall_floor_vs_exact(spark, emb):
         emb, "embedding", "vec_id", k=5, n_tables=16, n_bits=5, dim=64, seed=97
     )
     approx = {(r.query_id, r.neighbor_id) for r in got.collect()}
-    exact = cosine_topk(emb, emb, "embedding", "vec_id", k=5, engine="arrow")
+    exact = cosine_topk(emb, emb, "embedding", "vec_id", k=5)
     truth = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     recall = len(approx & truth) / len(truth)
     assert recall >= 0.5, f"recall@5 {recall:.3f} below floor"

@@ -27,13 +27,10 @@ def _clustered_vectors(n=120, d=16, n_clusters=6, seed=3):
 
 
 @pytest.fixture(scope="module")
-def graph_and_truth(spark):
+def clustered(spark):
     rows = _clustered_vectors()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     k = 5
-    graph = nndescent_knn_graph(df, "embedding", "vec_id", k=k, rounds=3, exact_below=0)
-    got = graph.collect()
-
     mat = np.array([r[1] for r in rows])
     unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     sims = unit @ unit.T
@@ -42,6 +39,14 @@ def graph_and_truth(spark):
         i: set(np.argsort(-np.round(sims[i], 6), kind="stable")[:k])
         for i in range(len(rows))
     }
+    return df, k, truth
+
+
+@pytest.fixture
+def graph_and_truth(clustered, nndescent_route):
+    df, k, truth = clustered
+    nndescent_route("iterative")
+    got = nndescent_knn_graph(df, "embedding", "vec_id", k=k, rounds=3).collect()
     return df, k, got, truth
 
 
@@ -70,40 +75,43 @@ def test_rank_orders_by_sim_desc(graph_and_truth):
         assert sims == sorted(sims, reverse=True), src
 
 
-def test_no_cartesian_and_bounded_pairs(spark):
+def test_no_cartesian_and_bounded_pairs(spark, nndescent_route):
+    nndescent_route("iterative")
     rows = _clustered_vectors(n=40)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    graph = nndescent_knn_graph(df, "embedding", "vec_id", k=4, rounds=1, exact_below=0)
+    graph = nndescent_knn_graph(df, "embedding", "vec_id", k=4, rounds=1)
     plan = graph._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_repartition_determinism(spark):
+def test_repartition_determinism(spark, nndescent_route):
+    nndescent_route("iterative")
     rows = _clustered_vectors(n=60, seed=9)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     a = sorted(
-        tuple(r) for r in nndescent_knn_graph(df, "embedding", "vec_id", k=4, rounds=2, exact_below=0).collect()
+        tuple(r) for r in nndescent_knn_graph(df, "embedding", "vec_id", k=4, rounds=2).collect()
     )
     b = sorted(
         tuple(r)
         for r in nndescent_knn_graph(
-            df.repartition(7), "embedding", "vec_id", k=4, rounds=2, exact_below=0
+            df.repartition(7), "embedding", "vec_id", k=4, rounds=2
         ).collect()
     )
     assert a == b
 
 
-def test_identical_vector_cliques_stay_bounded(spark):
+def test_identical_vector_cliques_stay_bounded(spark, nndescent_route):
     """Duplicated corpora (the sf1-derived stress) make identical-vector
     groups; the cap must keep per-node candidate work bounded, and each
     duplicate must still find its twins at sim 1.0."""
+    nndescent_route("iterative")
     rows = []
     for g in range(5):
         base = [float(x) for x in np.eye(8)[g % 8]]
         for c in range(10):
             rows.append((g * 10 + c, base))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    graph = nndescent_knn_graph(df, "embedding", "vec_id", k=5, rounds=2, exact_below=0)
+    graph = nndescent_knn_graph(df, "embedding", "vec_id", k=5, rounds=2)
     got = graph.collect()
     for r in got:
         if r.rank <= 5:
@@ -121,10 +129,12 @@ def test_identical_vector_cliques_stay_bounded(spark):
     assert same_clique_hits >= 0.95
 
 
-def test_exact_small_n_route_matches_bruteforce(graph_and_truth):
-    """Below exact_below the builder routes to the blocked exact GEMM
-    (pynndescent-style): identical output contract, recall exactly 1.0."""
-    df, k, _, truth = graph_and_truth
+def test_exact_small_n_route_matches_bruteforce(clustered, nndescent_route):
+    """At or under EXACT_MAX_VECTORS the builder routes to the exact
+    brute-force scan (pynndescent-style): identical output contract,
+    recall exactly 1.0."""
+    df, k, truth = clustered
+    nndescent_route("exact")
     got = nndescent_knn_graph(df, "embedding", "vec_id", k=k).collect()
     by_src = {}
     for r in got:

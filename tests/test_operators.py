@@ -63,15 +63,6 @@ def test_minhash_finds_near_dups(docs):
     assert not any(3 in p or 4 in p for p in found)
 
 
-def test_minhash_expr_engine_agrees(docs):
-    """The pure-expression signature engine finds the same exact-dup pair."""
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", num_hashes=32, bands=8, threshold=0.9, engine="expr"
-    ).toPandas()
-    found = {tuple(r) for r in pairs[["id_a", "id_b"]].itertuples(index=False)}
-    assert (0, 1) in found
-
-
 def test_ngram_jaccard(docs):
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.5).toPandas()
     pairs = pairs.set_index(["id_a", "id_b"])

@@ -132,8 +132,8 @@ class TestWebPPrefixHardening:
 
 
 class TestExactReplayFits:
-    """The exact-replay kmeans / pagerank variants must agree with their
-    float production twins to grid precision, and be layout-invariant."""
+    """The exact-replay kmeans / pagerank fits must agree with a float
+    computation to grid precision, and be layout-invariant."""
 
     def test_kmeans_exact_close_to_float_and_layout_invariant(self, spark):
         import numpy as np
@@ -161,17 +161,17 @@ class TestExactReplayFits:
 
     def test_pagerank_exact_matches_float_to_grid_precision(self, spark):
         from preprocessor_spark.caching import persist_scope
-        from preprocessor_spark.operators.graph import pagerank, pagerank_exact
+        from preprocessor_spark.operators.graph import pagerank
+        from tests.test_round5b_ops import _pagerank_numpy
 
         edge_list = [
             ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
             ("e", "d"), ("e", "c"), ("f", "a"), ("a", "g"),
         ]
         df = spark.createDataFrame(edge_list, "src string, dst string")
+        f = _pagerank_numpy(edge_list, 8, 0.85)
         with persist_scope():
-            f = {r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()}
-        with persist_scope():
-            q = {r["node"]: r["rank"] for r in pagerank_exact(df, iterations=8).collect()}
+            q = {r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()}
         assert set(f) == set(q)
         for nd in f:
             # 1e-15 grid + 8 iterations of floor-rounding ≪ 1e-9
@@ -181,15 +181,15 @@ class TestExactReplayFits:
 
     def test_pagerank_exact_layout_invariant(self, spark):
         from preprocessor_spark.caching import persist_scope
-        from preprocessor_spark.operators.graph import pagerank_exact
+        from preprocessor_spark.operators.graph import pagerank
 
         edge_list = [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")] * 3
         df1 = spark.createDataFrame(edge_list, "src string, dst string")
         df2 = spark.createDataFrame(edge_list[::-1], "src string, dst string").repartition(11)
         with persist_scope():
-            r1 = sorted((r["node"], r["rank"]) for r in pagerank_exact(df1, iterations=6).collect())
+            r1 = sorted((r["node"], r["rank"]) for r in pagerank(df1, iterations=6).collect())
         with persist_scope():
-            r2 = sorted((r["node"], r["rank"]) for r in pagerank_exact(df2, iterations=6).collect())
+            r2 = sorted((r["node"], r["rank"]) for r in pagerank(df2, iterations=6).collect())
         assert r1 == r2  # bit-identical under any layout
 
 

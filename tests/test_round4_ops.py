@@ -1023,30 +1023,38 @@ def test_transform_with_state_equals_group_state_twin(spark, tmp_path):
     assert (m.sum_value == m.sum_value_exp).all()
 
 
-def test_cosine_topk_engines_agree(spark):
-    """All three exact engines (blocked-GEMM broadcast, sc.broadcast arrow
-    scan, pure-expr) must produce identical top-k — including the per-batch
-    prune's tie-break at the boundary."""
+def test_cosine_topk_engines_agree(spark, sf_dir):
+    """The Arrow scan (integral ids) and the expression fallback that a
+    non-integral id column selects must produce identical top-k —
+    including the per-batch prune's tie-break at the boundary. String ids
+    are zero-padded so their order is the integer order."""
     from preprocessor_spark.operators.similarity import cosine_topk
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 8)
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+
+    def as_str(df):
+        return df.select(F.format_string("%08d", "vec_id").alias("vec_id"), "embedding")
 
     def canon(df):
         return sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"], round(r["cosine"], 6))
+            (int(r["query_id"]), r["rank"], int(r["neighbor_id"]), round(r["cosine"], 6))
             for r in df.collect()
         )
 
-    a = canon(cosine_topk(e, q, "embedding", "vec_id", k=5, engine="broadcast"))
-    b = canon(cosine_topk(e, q, "embedding", "vec_id", k=5, engine="arrow"))
-    assert a == b
+    def both(corpus, queries):
+        scan = cosine_topk(corpus, queries, "embedding", "vec_id", k=5)
+        expr = cosine_topk(as_str(corpus), as_str(queries), "embedding", "vec_id", k=5)
+        assert "MapInPandas" in scan._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in expr._jdf.queryExecution().executedPlan().toString()
+        return canon(scan), canon(expr)
+
+    q = e.filter(F.col("vec_id") < 8)
+    a, b = both(e, q)
+    assert a == b and len(a) == 8 * 5
     # tie stress: duplicated embeddings force exact cosine collisions
     dup = e.limit(20).select((F.col("vec_id") + 1000).alias("vec_id"), "embedding")
-    e2 = e.select("vec_id", "embedding").unionByName(dup)
-    a2 = canon(cosine_topk(e2, q, "embedding", "vec_id", k=5, engine="broadcast"))
-    b2 = canon(cosine_topk(e2, q, "embedding", "vec_id", k=5, engine="arrow"))
-    assert a2 == b2
+    a2, b2 = both(e.unionByName(dup), q)
+    assert a2 == b2 and len(a2) == 8 * 5
 
 
 def test_cosine_topk_arrow_guard(spark):
@@ -1054,11 +1062,19 @@ def test_cosine_topk_arrow_guard(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     plan = (
-        cosine_topk(e, e.limit(5), "embedding", "vec_id", k=3, engine="arrow")
+        cosine_topk(e, e.limit(5), "embedding", "vec_id", k=3)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # one scan, no shuffle before the ranking window's own exchange
     assert plan.count("Scan parquet") == 1
+
+
+def test_cosine_topk_empty_queries(spark, sf_dir):
+    """An empty query set yields an empty top-k, not a shape error."""
+    from preprocessor_spark.operators.similarity import cosine_topk
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    assert cosine_topk(e, e.filter(F.col("vec_id") < 0), "embedding", "vec_id", k=3).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -1140,9 +1156,7 @@ def test_semantic_dedup_collapse_equals_uncollapsed(spark):
     salted with verbatim embedding duplicates."""
     from preprocessor_spark.operators.semdedup import semantic_dedup
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     dups = e.filter(F.col("vec_id") % 4 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )

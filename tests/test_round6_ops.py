@@ -1,12 +1,14 @@
 """Round-6 operator tests: streaming WARC parsing, Avro data source,
 tsfresh-parity relevance filter, embed-neardup collapse, IVF pruning
-proof, PageRank skew evidence."""
+proof."""
 
 from __future__ import annotations
 
 import gzip
+import re
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -221,86 +223,6 @@ class TestStreamingWebPipeline:
         assert all(chars > 0 for _, chars in stats.values())
 
 
-class TestPageRankSkew:
-    def test_salted_pagerank_spreads_hot_dst_and_matches_oracle(self, spark):
-        """Planted power-law graph: one dst holds ~30% of edges. Measured
-        facts, not timing: (a) the dst-keyed layout pins >=30% of edges in
-        one partition while the salted (dst, salt) layout bounds the max
-        partition near the hot key's share / salt; (b) salted ranks match
-        the unsalted ranks AND the numpy power iteration at 1e-9."""
-        import numpy as np
-
-        from preprocessor_spark.caching import persist_scope
-        from preprocessor_spark.operators.graph import pagerank
-        from tests.test_round5b_ops import _pagerank_numpy
-
-        rng = np.random.RandomState(9)
-        hot = "HUB"
-        edge_list = []
-        for i in range(900):
-            edge_list.append((f"u{i}", hot))  # ~30% of edges hit one dst
-        for i in range(2100):
-            edge_list.append((f"u{rng.randint(1200)}", f"v{rng.randint(400)}"))
-        edge_list.append((hot, "v0"))  # hub links out: not dangling
-        edge_list = list(dict.fromkeys(edge_list))  # the op dedups anyway
-        df = spark.createDataFrame(edge_list, "src string, dst string")
-        n_part = spark.sparkContext.defaultParallelism
-        n_edges = len(edge_list)
-
-        # (a) layout measurement — same transforms the operator applies
-        base = df.distinct()
-        plain_sizes = (
-            base.repartition(n_part, "dst")
-            .groupBy(F.spark_partition_id().alias("p"))
-            .count()
-            .collect()
-        )
-        salt = 8
-        salted_sizes = (
-            base.withColumn("__salt", F.pmod(F.hash("src"), F.lit(salt)))
-            .repartition(n_part, "dst", "__salt")
-            .groupBy(F.spark_partition_id().alias("p"))
-            .count()
-            .collect()
-        )
-        hot_edges = sum(1 for s, d in edge_list if d == hot)
-        max_plain = max(r["count"] for r in plain_sizes)
-        max_salted = max(r["count"] for r in salted_sizes)
-        assert hot_edges >= 0.28 * n_edges
-        assert max_plain >= hot_edges  # hot dst pinned into one partition
-        assert max_salted < max_plain  # overall skew strictly reduced
-        # the direct claim: the hot key itself is no longer pinned — its
-        # edges land across salt buckets, max per partition a fraction of
-        # the key's total
-        hot_spread = (
-            base.withColumn("__salt", F.pmod(F.hash("src"), F.lit(salt)))
-            .repartition(n_part, "dst", "__salt")
-            .where(F.col("dst") == hot)
-            .groupBy(F.spark_partition_id().alias("p"))
-            .count()
-            .collect()
-        )
-        assert len(hot_spread) >= 4  # spread over several partitions
-        assert max(r["count"] for r in hot_spread) <= 0.5 * hot_edges
-
-        # (b) equivalence: salted == unsalted == numpy oracle
-        with persist_scope():
-            plain = {
-                r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()
-            }
-        with persist_scope():
-            salted = {
-                r["node"]: r["rank"]
-                for r in pagerank(df, iterations=8, skew_salt=salt).collect()
-            }
-        want = _pagerank_numpy(edge_list, 8, 0.85)
-        assert set(plain) == set(salted) == set(want)
-        for nd in want:
-            assert abs(salted[nd] - want[nd]) < 1e-9
-            assert abs(salted[nd] - plain[nd]) < 1e-9
-        assert abs(sum(salted.values()) - 1.0) < 1e-9
-
-
 class TestIvfPartitionPruning:
     def test_probe_reads_only_probed_cell_files(self, spark, tmp_path):
         """The saved-index claim made measurable: a 2-probe search of a
@@ -330,9 +252,25 @@ class TestIvfPartitionPruning:
 
         q = corpus.filter(F.col("vec_id") < 3)
         got = ivf_search(loaded, cents2, q, "embedding", "vec_id", k=4, n_probe=2)
-        want = ivf_search(
-            loaded, cents2, q, "embedding", "vec_id", k=4, n_probe=2,
-            prune_cells=False,
+        # reference: the same probes through a plain unpruned equi-join
+        from preprocessor_spark.operators.similarity import (
+            _dot,
+            _nearest_cells_udf,
+            _normalized,
+        )
+
+        qx = _normalized(q, "embedding", "vec_id", "query_id", "__qv").withColumn(
+            "__cell", F.explode(F.slice(_nearest_cells_udf(cents2)(F.col("__qv")), 1, 2))
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.round("cosine", 6).desc(), F.col("neighbor_id").asc()
+        )
+        want = (
+            loaded.join(qx, "__cell")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id", _dot(F.col("__qv"), F.col("__cv")).alias("cosine"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 4)
         )
         canon = lambda df: sorted(  # noqa: E731
             (r["query_id"], r["rank"], r["neighbor_id"], round(r["cosine"], 9))
@@ -342,8 +280,6 @@ class TestIvfPartitionPruning:
 
         # file-level pruning proof: the probed-cells filter over the
         # partitioned layout must touch only those cells' directories
-        from preprocessor_spark.operators.similarity import _nearest_cells_udf
-
         probe_rows = (
             q.select(
                 F.explode(
@@ -358,6 +294,13 @@ class TestIvfPartitionPruning:
             r["__cell"] for r in loaded.select("__cell").distinct().collect()
         )
         assert len(probed) < len(all_cells), "fixture must leave unprobed cells"
+        # the search itself pushes exactly those cells into the scan
+        from preprocessor_spark.plans import formatted_plan
+
+        cells = ",".join(str(c) for c in probed)
+        assert re.search(
+            rf"PartitionFilters: \[__cell#\d+ IN \({cells}\)", formatted_plan(got)
+        ), formatted_plan(got)
         files = [
             r["f"]
             for r in loaded.filter(F.col("__cell").isin(probed))
@@ -736,8 +679,8 @@ class TestEmbedNeardupCollapse:
     def test_collapsed_equals_uncollapsed_on_duplicated_corpus(self, spark):
         """collapse_exact is an equivalence, not an approximation:
         identical vectors share band keys, so rep-level LSH + group
-        expansion emits EXACTLY the member-level pair set, for both
-        engines, on a corpus with 4-way exact duplication plus near-dups."""
+        expansion emits EXACTLY the member-level pair set, on a corpus
+        with 4-way exact duplication plus near-dups."""
         import numpy as np
 
         from preprocessor_spark.operators.dedup import embedding_neardup_pairs
@@ -758,24 +701,23 @@ class TestEmbedNeardupCollapse:
                 vid += 1
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-        for engine in ("numpy", "expr"):
-            got = sorted(
-                (r["id_a"], r["id_b"], round(r["cosine"], 9))
-                for r in embedding_neardup_pairs(
-                    df, "embedding", "vec_id", threshold=0.9,
-                    n_planes=16, bands=4, engine=engine, collapse_exact=True,
-                ).collect()
-            )
-            want = sorted(
-                (r["id_a"], r["id_b"], round(r["cosine"], 9))
-                for r in embedding_neardup_pairs(
-                    df, "embedding", "vec_id", threshold=0.9,
-                    n_planes=16, bands=4, engine=engine, collapse_exact=False,
-                ).collect()
-            )
-            assert got == want and len(got) > 0, engine
-            # duplication actually exercised: within-group 1.0 pairs exist
-            assert any(c == 1.0 for _, _, c in got)
+        got = sorted(
+            (r["id_a"], r["id_b"], round(r["cosine"], 9))
+            for r in embedding_neardup_pairs(
+                df, "embedding", "vec_id", threshold=0.9,
+                n_planes=16, bands=4, collapse_exact=True,
+            ).collect()
+        )
+        want = sorted(
+            (r["id_a"], r["id_b"], round(r["cosine"], 9))
+            for r in embedding_neardup_pairs(
+                df, "embedding", "vec_id", threshold=0.9,
+                n_planes=16, bands=4, collapse_exact=False,
+            ).collect()
+        )
+        assert got == want and len(got) > 0
+        # duplication actually exercised: within-group 1.0 pairs exist
+        assert any(c == 1.0 for _, _, c in got)
 
     def test_thin_corpus_bypass_identical_output(self, spark):
         """On an all-distinct corpus the ≥98%-distinct probe bypasses the
@@ -1159,7 +1101,7 @@ class TestProductQuantization:
         enc = pq_encode(emb, books, "embedding", "vec_id")
         queries = emb.limit(20)
         approx = pq_search_adc(enc, books, queries, "embedding", "vec_id", k=10).toPandas()
-        exact = cosine_topk(emb, queries, "embedding", "vec_id", k=10, engine="arrow").toPandas()
+        exact = cosine_topk(emb, queries, "embedding", "vec_id", k=10).toPandas()
         hits = tot = 0
         for qid, g in exact.groupby("query_id"):
             truth = set(g.neighbor_id)
@@ -2162,26 +2104,27 @@ class TestBm25IndexLifecycle:
     def test_bucket_pruning_reads_only_query_term_partitions(
         self, spark, tmp_path
     ):
-        """File-level proof: with pruning on, the postings scan touches
-        only the query terms' __tb directories, and pruning does not
-        change the answer."""
+        """File-level proof: the pruned postings scan touches only the
+        query terms' __tb directories, and the pruned index search returns
+        the direct (unindexed) search's answer."""
+        from preprocessor_spark.caching import persist_scope
         from preprocessor_spark.operators.search import (
             _term_bucket,
             bm25_build_index,
             bm25_load_index,
             bm25_save_index,
             bm25_search_index,
+            bm25_topk,
         )
 
         docs = self._docs(spark)
         bm25_save_index(bm25_build_index(docs, n_buckets=16), str(tmp_path / "ix"))
         loaded = bm25_load_index(spark, str(tmp_path / "ix"))
         q = ["spark", "frequency"]
-        on = [tuple(r) for r in bm25_search_index(loaded, q, k=7).collect()]
-        off = [
-            tuple(r)
-            for r in bm25_search_index(loaded, q, k=7, prune_buckets=False).collect()
-        ]
+        cols = ("doc_id", "n_matched_terms", "score")
+        on = [tuple(r[c] for c in cols) for r in bm25_search_index(loaded, q, k=7).collect()]
+        with persist_scope():
+            off = [tuple(r[c] for c in cols) for r in bm25_topk(docs, q, k=7).collect()]
         assert on == off and len(on) >= 4
         bkts = sorted(
             r["b"]
@@ -2190,6 +2133,12 @@ class TestBm25IndexLifecycle:
             .distinct()
             .collect()
         )
+        # the search itself pushes exactly those buckets into both scans
+        from preprocessor_spark.plans import formatted_plan
+
+        plan = formatted_plan(bm25_search_index(loaded, q, k=7))
+        in_bkts = rf"PartitionFilters: \[__tb#\d+ IN \({','.join(str(b) for b in bkts)}\)\]"
+        assert len(re.findall(in_bkts, plan)) == 2, plan
         pruned = loaded.postings.filter(F.col("__tb").isin(bkts))
         files = [
             r["f"]
