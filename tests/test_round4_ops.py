@@ -1151,7 +1151,7 @@ def test_decode_image_dispatches_gif():
     assert out.shape == (9, 9) and out.dtype == np.float32
 
 
-def test_semantic_dedup_collapse_equals_uncollapsed(spark):
+def test_semantic_dedup_collapse_equals_uncollapsed(spark, sf_dir):
     """Exact-vector collapse must be invisible: same kept set on a corpus
     salted with verbatim embedding duplicates."""
     from preprocessor_spark.operators.semdedup import semantic_dedup
