@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import bulk
+
 NULL_LABEL = "None"
 OTHER_LABEL = "other"
 
@@ -54,7 +56,7 @@ def shrink_expr(col: Column, rare_values: list[str]) -> Column:
     rare = [v for v in rare_values if v is not None]
     if not rare:
         return cleaned
-    return F.when(cleaned.isin(*rare), F.lit(OTHER_LABEL)).otherwise(cleaned)
+    return F.when(bulk.isin(cleaned, rare), F.lit(OTHER_LABEL)).otherwise(cleaned)
 
 
 def onehot_exprs(col_name: str, values: list[str]) -> list[Column]:

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import bulk
+
 INF_THRESHOLD = 1e308
 FILL_STRATEGIES = {
     "none",
@@ -88,7 +90,7 @@ def sentinel_restore_threshold(scaling: str, stats: dict) -> float:
 def fill_expr(col: Column, strategy, scaling: str, stats: dict) -> Column:
     """Fill expression for scalar strategies (mean/min/max/zero/one/literal/
     "none"-sentinel). Order-dependent strategies (forward/backward/
-    interpolate) are handled by :func:`apply_order_dependent_fill`."""
+    interpolate) are handled by :func:`apply_order_dependent_fills`."""
     if isinstance(strategy, (int, float)) and not isinstance(strategy, bool):
         fill = float(strategy)
     elif strategy == "mean":
@@ -228,25 +230,30 @@ def apply_order_dependent_fills(
 
     Without it, a global ``Window.orderBy`` would plan EXCHANGE
     SinglePartition: one task scans everything, the one formulation that
-    cannot survive a 100× scale-up. Instead this runs a range-partitioned
-    two-pass carry:
+    cannot survive a 100× scale-up. Instead this runs a range-bucketed
+    two-pass carry whose buckets are the output partitions:
 
-    1. one ``approxQuantile`` pass fits P−1 boundaries on
-       ``order_col``; each row gets a bucket id via a boundary comparison
-       (nulls → bucket 0, matching asc-nulls-first semantics; tied keys
-       never split across buckets);
-    2. the O(n) running-frame fills run PER BUCKET — a normal hash
-       exchange, every core busy;
+    1. one aggregate job reads the row count and ``percentile_approx``
+       edges on ``order_col``. The bucket count P is the row count times
+       the schema's default row size over
+       ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the byte target
+       AQE coalesces shuffles to), clamped to [1,
+       ``spark.sql.shuffle.partitions``]; P−1 of the edges split the keys.
+       Each row gets a bucket id by edge comparison (nulls → bucket 0,
+       matching asc-nulls-first; tied keys never split across buckets);
+    2. ``repartitionById`` puts bucket k in partition k, and the O(n)
+       running-frame fills run per bucket on that exchange; each partition
+       is then sorted by (``order_col``, ``tiebreak_col``) and persisted;
     3. a per-bucket aggregate (count, edge non-null values + positions —
        map-side combined, P output rows) feeds a driver-side prefix scan
        that computes each bucket's carry-in from earlier/later buckets,
        re-joined via broadcast. Global row position = bucket offset +
        local row_number, so interpolation is bit-identical to the global
-       window formulation.
+       window formulation for any choice of edges.
 
-    Cost: one extra stats pass + one tiny broadcast join, in exchange for
-    the fill stage scaling linearly with cores. The bucket count P is
-    ``spark.sql.shuffle.partitions``.
+    The result is therefore already in (``order_col``, ``tiebreak_col``)
+    order, partition by partition: collecting it, or any narrow projection
+    of it, needs no sort. A later shuffle does not keep that order.
     """
     bad = set(fills.values()) - {"forward", "backward", "interpolate"}
     if bad:
@@ -271,28 +278,34 @@ def apply_order_dependent_fills(
         return df.withColumns(exprs)
 
     spark = df.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
     out_cols = df.columns
 
-    # -- pass 1: range boundaries on the order key (null-safe; approxQuantile
-    # ignores nulls). Duplicate boundaries (skewed/constant keys) collapse.
+    # -- pass 1: row count and range edges in one aggregate (percentile_approx
+    # ignores nulls). The edges sit on a 1/p_max grid; the P−1 nearest to
+    # k/P are used, and duplicates (skewed or constant keys) collapse.
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if p_max > 1:
+        grid = bulk.doubles_lit([i / p_max for i in range(1, p_max)])
+        aggs.append(F.percentile_approx(order_col, grid, 100).alias("q"))
+    stats = df.agg(*aggs).collect()[0]
+    jvm = spark.sparkContext._jvm
+    advisory = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    row_bytes = df._jdf.schema().defaultSize()
+    p = max(1, min(p_max, -(-stats["n"] * row_bytes // advisory)))
     bounds: list[float] = []
-    if p > 1:
-        probs = [i / p for i in range(1, p)]
-        qs = df.stat.approxQuantile(order_col, probs, 0.01)
-        seen: set[float] = set()
-        for q in qs:
-            if q is not None and q not in seen:
-                seen.add(q)
-                bounds.append(q)
-        bounds.sort()
+    if p > 1 and stats["q"] is not None:
+        picked = {float(stats["q"][round(k * p_max / p) - 1]) for k in range(1, p)}
+        bounds = sorted(picked)
 
     okey = F.col(order_col)
     if bounds:
-        # bucket id = #boundaries strictly below the key; equal keys always
+        # bucket id = #edges strictly below the key; equal keys always
         # share a bucket. O(len(bounds)) per row, no deep when-nesting.
         bkt = F.when(okey.isNull(), F.lit(0)).otherwise(
-            F.size(F.filter(F.array(*[F.lit(float(b)) for b in bounds]), lambda t: okey > t))
+            F.size(F.filter(bulk.doubles_lit(bounds), lambda t: okey > t))
         )
     else:
         bkt = F.lit(0)
@@ -301,7 +314,11 @@ def apply_order_dependent_fills(
     w_run = _running(wb)
     w_rev = _running(_order_window(order_col, ["__bkt"], tiebreak_col, reverse=True))
 
-    dfb = df.withColumn("__bkt", bkt).withColumn("__lrn", F.row_number().over(wb))
+    dfb = (
+        df.withColumn("__bkt", bkt)
+        .repartitionById(p, "__bkt")
+        .withColumn("__lrn", F.row_number().over(wb))
+    )
 
     # -- pass 2: within-bucket running fills (all O(n) frames; the reverse
     # window stands in for [0, unboundedFollowing] which Spark runs O(n²))
@@ -327,11 +344,15 @@ def apply_order_dependent_fills(
             aux_aggs.append(F.min_by(F.col(f"__np_{c}"), F.col("__lrn")).alias(f"__firstp_{c}"))
     # persist the windowed frame: the aux aggregate (eager, below) and the
     # final fix-up join both consume it — without the cache the whole
-    # upstream chain (parse/convert/clamp) recomputes per consumer. Scope
-    # the lifetime via preprocessor_spark.caching.persist_scope.
+    # upstream chain (parse/convert/clamp) recomputes per consumer. The
+    # sort puts each partition back in ascending order after the reversed
+    # windows. Scope the lifetime via preprocessor_spark.caching.persist_scope.
     from preprocessor_spark.caching import register_persisted
 
-    dfw = register_persisted(dfb.withColumns(win_exprs).persist())
+    keys = [order_col] if tiebreak_col is None else [order_col, tiebreak_col]
+    dfw = register_persisted(
+        dfb.withColumns(win_exprs).sortWithinPartitions("__bkt", *keys).persist()
+    )
 
     # -- pass 3: P-row edge table → driver prefix scan → broadcast fix-up
     aux_rows = sorted(dfw.groupBy("__bkt").agg(*aux_aggs).collect(), key=lambda r: r["__bkt"])
@@ -515,12 +536,10 @@ def _norm_ppf(p):
 
 
 def fit_quantile_landmarks(df: DataFrame, cols: list[str], n_quantiles: int) -> dict[str, list[float]]:
-    """One approxQuantile call for all columns (single pass over the data)."""
-    import numpy as np
-
-    probs = list(np.linspace(0.0, 1.0, n_quantiles))
-    res = df.stat.approxQuantile(cols, probs, 1e-4)
-    return {c: [float(v) for v in q] for c, q in zip(cols, res)}
+    """One approxQuantile call for all columns (single pass over the data),
+    its probabilities and landmarks moved across py4j as bytes."""
+    res = bulk.approx_quantile(df, cols, np.linspace(0.0, 1.0, n_quantiles), 1e-4)
+    return dict(zip(cols, res))
 
 
 def make_quantile_transform_udf(landmarks: list[float], inverse: bool = False):

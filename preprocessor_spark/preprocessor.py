@@ -5,18 +5,22 @@ Re-expresses the reference's ``Preprocessor``
 PySpark DataFrame API with a Spark-shaped execution model:
 
 - **fit** runs a bounded number of Spark jobs — one multi-aggregate pass for
-  all numeric/datetime statistics, one stacked groupBy-count pass for all
-  categorical value counts, one approxQuantile pass when quantile/kbins
-  scaling is requested — and stores the results as small driver-side fitted
-  state (per-column scalars + label lists). The reference instead collects
-  the whole table and loops per column (`preprocessor.py:290-300`).
+  all numeric/datetime statistics, one stacked groupBy-count pass (read by
+  one collect) for all categorical value counts, one approxQuantile pass
+  when quantile/kbins scaling is requested — and stores the results as
+  small driver-side fitted state (per-column scalars + label lists). The
+  reference instead collects the whole table and loops per column
+  (`preprocessor.py:290-300`). Label lists and landmark arrays cross py4j
+  in bulk (``functions/bulk.py``), never one call per value.
 - **transform** is a single narrow stage of column expressions (no shuffle,
   no Python) except when order-dependent ops are requested: datetime
   interpolation / forward / backward / interpolate fills need a total order.
   They run in one pass over the reference's order — the first datetime
   column, then ingest order (`datetime_transformer.py:98`) — as
   range-bucketed windows with a carry across bucket edges, or per series
-  key with ``partition_by``.
+  key with ``partition_by``. The buckets are the output partitions, in
+  order and each sorted, which is the reference's output sort; only the
+  per-key route sorts again.
 - **inverse_transform** is again a pure expression chain.
 
 Fitted state is JSON-serializable (``save``/``load``) — the reference has no
@@ -39,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions import bulk
 from .functions import categorical as C
 from .functions import datetime_fn as D
 from .functions import numerical as N
@@ -316,15 +321,23 @@ class Preprocessor:
                 .groupBy("kv.c", "kv.v")
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            w = Window.partitionBy("c").orderBy(F.desc("cnt"), F.asc_nulls_first("v"))
-            ranked = counts.withColumn("__r", F.row_number().over(w))
-            summary = counts.groupBy("c").agg(
-                F.count(F.lit(1)).alias("n_values"), F.max("cnt").alias("max_cnt")
+            # per-column label count and top count ride along as windows
+            # over the same partitioning, so one collect reads one shuffle
+            by_c = Window.partitionBy("c")
+            ranked = counts.withColumns(
+                {
+                    "__r": F.row_number().over(
+                        by_c.orderBy(F.desc("cnt"), F.asc_nulls_first("v"))
+                    ),
+                    "n_values": F.count(F.lit(1)).over(by_c),
+                    "max_cnt": F.max("cnt").over(by_c),
+                }
             )
-            col_summary = {r["c"]: (int(r["n_values"]), int(r["max_cnt"])) for r in summary.collect()}
             top = ranked.filter(F.col("__r") <= MAX_COLLECT_LABELS).collect()
+            col_summary: dict[str, tuple[int, int]] = {}
             by_col: dict[str, list] = {c: [] for c in categorical_features}
             for r in top:
+                col_summary.setdefault(r["c"], (int(r["n_values"]), int(r["max_cnt"])))
                 by_col[r["c"]].append((r["v"], int(r["cnt"])))
 
             for c in categorical_features:
@@ -359,13 +372,13 @@ class Preprocessor:
                         f"\n{c} has {n_values} distinct labels; storing kept set ({len(kept)}) instead of rare list"
                     )
                 # fitted one-hot labels: post-clean/shrink label set, sorted
+                rare_set = set(rare_labels.get(c, ()))
+                kept_set = set(kept_labels[c]) if c in kept_labels else None
                 mapped: set[str] = set()
                 for v, cnt in pairs:
                     if v is None or v in ("", " "):
                         mapped.add(C.NULL_LABEL)
-                    elif (c in rare_labels and v in set(rare_labels[c])) or (
-                        c in kept_labels and v not in set(kept_labels[c])
-                    ):
+                    elif v in rare_set or (kept_set is not None and v not in kept_set):
                         mapped.add(C.OTHER_LABEL)
                     else:
                         mapped.add(v)
@@ -396,9 +409,9 @@ class Preprocessor:
             else:
                 import numpy as np
 
-                probs = [float(x) for x in np.linspace(0, 1, p["n_bins"] + 1)[1:-1]]
-                res = filled.stat.approxQuantile(numerical_features, probs, 1e-4)
-                kbins_splits = {c: [float(v) for v in q] for c, q in zip(numerical_features, res)}
+                probs = np.linspace(0, 1, p["n_bins"] + 1)[1:-1]
+                res = bulk.approx_quantile(filled, numerical_features, probs, 1e-4)
+                kbins_splits = dict(zip(numerical_features, res))
 
         # -- target encoder (preprocessor.py:184-194)
         target_labels = None
@@ -553,10 +566,11 @@ class Preprocessor:
         for c in st.categorical_features:
             if c in st.kept_labels or c not in data.columns:
                 continue
+            # a null rare label is no label: nulls are never reported
             known = (set(st.categories.get(c, [])) - placeholders) | set(
                 st.rare_labels.get(c, [])
             )
-            checks.append((c, sorted(known)))
+            checks.append((c, sorted(known - {None})))
         if not checks:
             return
         kvs = F.array(
@@ -569,7 +583,7 @@ class Preprocessor:
         for c, known in checks:
             unseen_here = F.col("v").isNotNull() & ~F.col("v").isin("", " ")
             if known:
-                unseen_here &= ~F.col("v").isin(*known)
+                unseen_here &= ~bulk.isin(F.col("v"), known)
             cond = cond | ((F.col("c") == c) & unseen_here)
         rows = flat.where(cond).distinct().limit(MAX_UNSEEN_REPORT).collect()
         if rows:
@@ -585,11 +599,18 @@ class Preprocessor:
         """Pipeline order preserved from preprocessor.py:341-461:
         shrink → drop discarded → datetime → numerical → boolean →
         one-hot → target. Everything is one expression chain, plus one
-        order-dependent fill pass (N.apply_order_dependent_fills: an
-        approxQuantile job, a range-bucket shuffle and a broadcast carry
-        fix-up, or per-key windows with ``partition_by``) when datetime
-        features exist or num_fill_null is forward/backward/interpolate,
-        and a final sort by the first datetime column."""
+        order-dependent fill pass (N.apply_order_dependent_fills: a
+        count-and-edges aggregate job, one bucket shuffle and a broadcast
+        carry fix-up, or per-key windows with ``partition_by``) when
+        datetime features exist or num_fill_null is forward/backward/
+        interpolate.
+
+        Output order matches the reference's sort by the first datetime
+        column (``datetime_transformer.py:98``), ties in ingest order. The
+        bucketed pass leaves the rows in that order physically, so it holds
+        for ``collect``/``toPandas``/writes of the returned frame but not
+        across a later shuffle of it; with ``partition_by`` the output is
+        sorted explicitly."""
         st = self.state
         # unseen_labels='error' policy (reference preprocessor.py:434-437):
         # warn when the new data carries categorical content outside the
@@ -623,7 +644,7 @@ class Preprocessor:
                 cleaned = C.clean_expr(F.col(c))
                 keep = set(st.kept_labels[c]) | {C.NULL_LABEL, C.OTHER_LABEL}
                 shrink_exprs[c] = F.when(
-                    ~cleaned.isin(*sorted(keep)), F.lit(C.OTHER_LABEL)
+                    ~bulk.isin(cleaned, sorted(keep)), F.lit(C.OTHER_LABEL)
                 ).otherwise(cleaned)
             else:
                 shrink_exprs[c] = C.shrink_expr(F.col(c), st.rare_labels.get(c, []))
@@ -722,8 +743,10 @@ class Preprocessor:
                 data = data.withColumn(st.target_column, (tcol - F.lit(lo)) / F.lit(hi - lo))
 
         # parity: reference sorts the whole output by the first datetime
-        # column (datetime_transformer.py:98)
-        if first_dt:
+        # column (datetime_transformer.py:98). The bucketed fill pass already
+        # left the rows in that order, partition by partition, and every
+        # step since is narrow; per-key windows leave them grouped by key.
+        if first_dt and st.partition_by:
             data = data.orderBy(first_dt, row_order)
         if needs_order:
             data = data.drop(row_order)

@@ -3,13 +3,16 @@ probe table, and the CSV/JSON source connectors."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager, nullcontext
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
-from preprocessor_spark import Preprocessor
+from preprocessor_spark import Preprocessor, persist_scope
+from preprocessor_spark.plans import formatted_plan
 from preprocessor_spark.sources import read_csv, read_json
 
 
@@ -242,18 +245,30 @@ def _fill_frame(spark, n=20_000, seed=7):
     return spark.createDataFrame(pdf)
 
 
+@contextmanager
+def _sixteen_buckets(spark):
+    """Size the fill pass to 16 buckets: the bucket count is the frame's
+    bytes over the advisory partition size, clamped to the shuffle
+    partition count, so a 1 KB advisory size hits the clamp."""
+    from preprocessor_spark.caching import _conf_scope
+
+    with _conf_scope(spark, "spark.sql.shuffle.partitions", "16"), _conf_scope(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k"
+    ):
+        yield
+
+
+_BUCKET_EXCHANGE = "shufflepartitionidpassthrough(direct_shuffle_partition_id(__bkt"
+
+
 @pytest.mark.parametrize("strategy", ["forward", "backward", "interpolate"])
 def test_bucketed_fill_matches_global_window(spark, strategy):
     """The range-partitioned two-pass carry must be value-identical (exact,
     including FP) to the single-partition global-window formulation."""
-    from pyspark.sql import Window
-
-    from preprocessor_spark.caching import _conf_scope
     from preprocessor_spark.functions import numerical as N
 
     df = _fill_frame(spark)
-    # the bucket count is the session's shuffle partition count
-    with _conf_scope(spark, "spark.sql.shuffle.partitions", "16"):
+    with _sixteen_buckets(spark):
         got = (
             N.apply_order_dependent_fills(df, {"v": strategy}, order_col="okey", tiebreak_col="rid")
             .select("rid", "v")
@@ -279,42 +294,91 @@ def test_bucketed_fill_matches_global_window(spark, strategy):
 
 
 def test_bucketed_fill_plan_is_parallel(spark):
-    """The fill stage must NOT plan Exchange SinglePartition: the windows
-    run per range-bucket (hash exchange), which is the property that
-    survives a 100× scale-up."""
-    from preprocessor_spark.caching import _conf_scope
+    """The fill stage must NOT plan Exchange SinglePartition: bucket k goes
+    to partition k through one partition-id exchange, and the windows run
+    per bucket on it, which is the property that survives a 100× scale-up."""
     from preprocessor_spark.functions import numerical as N
-    from preprocessor_spark.plans import formatted_plan
 
     df = _fill_frame(spark, n=5_000)
-    with _conf_scope(spark, "spark.sql.shuffle.partitions", "16"):
+    with _sixteen_buckets(spark):
         out = N.apply_order_dependent_fills(
             df, {"v": "interpolate"}, order_col="okey", tiebreak_col="rid"
         )
         plan = formatted_plan(out)
     assert "SinglePartition" not in plan, plan
-    assert "hashpartitioning(__bkt" in plan, plan
+    assert f"{_BUCKET_EXCHANGE}#" in plan.lower(), plan
+    assert "), 16), REPARTITION_BY_NUM" in plan, plan
+    assert "hashpartitioning" not in plan, plan  # no second exchange
     assert "BroadcastHashJoin" in plan, plan  # the P-row carry fix-up
 
 
 def test_transform_fill_plan_is_parallel_without_partition_by(spark):
     """Preprocessor.transform with an order-dependent fill and NO
     partition_by must plan the bucketed fill, not a single-partition
-    window (the round-1 scale-killer)."""
-    import numpy as np
-    import pandas as pd
-
-    from preprocessor_spark import Preprocessor
-    from preprocessor_spark.plans import formatted_plan
-
+    window (the round-1 scale-killer), and no range sort after it: the
+    buckets already hold the rows in time order."""
     rng = np.random.default_rng(3)
-    pdf = pd.DataFrame({"x": rng.normal(size=3_000), "y": rng.normal(size=3_000)})
+    pdf = pd.DataFrame(
+        {
+            "x": rng.normal(size=3_000),
+            "y": rng.normal(size=3_000),
+            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.integers(0, 500, 3_000), unit="min"),
+        }
+    )
     pdf.loc[rng.random(3_000) < 0.2, "x"] = np.nan
     df = spark.createDataFrame(pdf)
     prep = Preprocessor(df, num_fill_null="forward")
-    plan = formatted_plan(prep.transform(df))
+    with _sixteen_buckets(spark):
+        plan = formatted_plan(prep.transform(df))
     assert "SinglePartition" not in plan, plan
-    assert "hashpartitioning(__bkt" in plan, plan
+    assert _BUCKET_EXCHANGE in plan.lower(), plan
+    assert "rangepartitioning" not in plan.lower(), plan
+
+
+def _tied_null_ts_frame(n=400, seed=5):
+    """Ingest order ``k``, timestamps with ~8 rows per instant shuffled
+    against it, 5% null timestamps, and a numeric column with nulls."""
+    pdf = _time_shuffled_frame(n=n, seed=seed)
+    pdf["ts"] = pd.Timestamp("2024-01-01") + pd.to_timedelta(
+        np.random.default_rng(seed).integers(0, n // 8, n), unit="h"
+    )
+    pdf.loc[np.random.default_rng(seed + 1).random(n) < 0.05, "ts"] = pd.NaT
+    return pdf
+
+
+@pytest.mark.parametrize("buckets", ["sixteen", "one"])
+def test_transform_output_is_in_time_order(spark, buckets):
+    """Without ``partition_by`` the output comes out of the fill buckets in
+    (first datetime, ingest) order with no final sort: collecting it gives
+    the rows an explicit sort would, null and tied timestamps included."""
+    pdf = _tied_null_ts_frame()
+    df = spark.createDataFrame(pdf)
+    prep = Preprocessor(df, num_fill_null="interpolate", scaling="normalize", excluded_col=["k", "series"])
+    scope = _sixteen_buckets(spark) if buckets == "sixteen" else nullcontext()
+    with persist_scope(), scope:
+        out = prep.transform(df)
+        plan = formatted_plan(out).lower()
+        got = out.collect()
+        want = out.orderBy("ts", "k").collect()
+    assert "rangepartitioning" not in plan
+    assert (_BUCKET_EXCHANGE in plan) == (buckets == "sixteen")
+    assert [r["k"] for r in got] == [r["k"] for r in want]
+    assert got == want
+    assert got[0]["ts"] is None and got[-1]["ts"] is not None
+
+
+def test_transform_with_partition_by_keeps_global_sort(spark):
+    """Per-key windows leave rows grouped by key, so with ``partition_by``
+    transform still sorts by (first datetime, ingest order)."""
+    pdf = _tied_null_ts_frame()
+    df = spark.createDataFrame(pdf)
+    prep = Preprocessor(
+        df, num_fill_null="forward", excluded_col=["k", "series"], partition_by=["series"]
+    )
+    out = prep.transform(df)
+    assert "rangepartitioning" in formatted_plan(out).lower()
+    got = out.collect()
+    assert got == out.orderBy("ts", "k").collect()
 
 
 def test_write_partitioned_alignment(spark, sf_dir, tmp_path):

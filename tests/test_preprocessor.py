@@ -364,6 +364,18 @@ def test_unseen_labels_error_warns(spark):
         prep2.transform(new_df).collect()
 
 
+def test_unseen_labels_error_with_rare_null(spark):
+    """Nulls below the rare-label threshold put None among the rare labels;
+    the unseen-label report must still run and report only real labels."""
+    vals = ["a"] * 100 + ["b"] * 100 + ["c"] * 100 + [None]
+    fit_df = spark.createDataFrame(pd.DataFrame({"c": vals, "x": range(len(vals))}))
+    prep = Preprocessor(fit_df, unseen_labels="error")
+    assert None in prep.state.rare_labels["c"]
+    new_df = spark.createDataFrame(pd.DataFrame({"c": ["a", "zz", None], "x": [1, 2, 3]}))
+    with pytest.warns(UserWarning, match=r"unseen categorical labels: \{'c': \['zz'\]\}"):
+        prep.transform(new_df).collect()
+
+
 def test_unseen_labels_validation(spark):
     fit_df = spark.createDataFrame(pd.DataFrame({"x": [1.0, 2.0]}))
     with pytest.raises(ValueError):
