@@ -120,13 +120,15 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     # what the session was given, against what the process may use (the
-    # same fields perfbench/run.py records)
+    # same fields perfbench/run.py records), and which Python worker daemon
+    # ran the UDFs (an A/B can swap it through SPARK_GRAFT_CONF_JSON)
     sc = spark.sparkContext
     cpus = re.fullmatch(r"local\[(\d+)\]", sc.master)
-    parallelism = {
+    env = {
         "cpus_requested": int(cpus.group(1)) if cpus else None,
         "default_parallelism": sc.defaultParallelism,
         "nproc": len(os.sched_getaffinity(0)),
+        "python_daemon_module": sc.getConf().get("spark.python.daemon.module", "pyspark.daemon"),
     }
     full = {
         "metric": "headline_suite_wall_clock",
@@ -145,7 +147,7 @@ def main() -> None:
         # committed recording content-wise (file mtime is just
         # checkout order after a fresh clone)
         "recorded_unix": int(time.time()),
-        **parallelism,
+        **env,
     }
     print(json.dumps(full))
     # LAST line: compact self-describing summary (total + slowest 10) —
@@ -163,7 +165,7 @@ def main() -> None:
                 "queries": slowest,
                 "note": "slowest-10 shown; full per-query JSON on the previous stdout line and committed under bench_results/",
                 "recorded_unix": full["recorded_unix"],
-                **parallelism,
+                **env,
             }
         )
     )

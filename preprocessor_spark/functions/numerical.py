@@ -249,7 +249,9 @@ def apply_order_dependent_fills(
        that computes each bucket's carry-in from earlier/later buckets,
        re-joined via broadcast. Global row position = bucket offset +
        local row_number, so interpolation is bit-identical to the global
-       window formulation for any choice of edges.
+       window formulation for any choice of edges. At P = 1 there is
+       nothing to carry: the offset is 0, the carry-ins are null literals,
+       and the aggregate and the join are skipped.
 
     The result is therefore already in (``order_col``, ``tiebreak_col``)
     order, partition by partition: collecting it, or any narrow projection
@@ -323,15 +325,12 @@ def apply_order_dependent_fills(
     # -- pass 2: within-bucket running fills (all O(n) frames; the reverse
     # window stands in for [0, unboundedFollowing] which Spark runs O(n²))
     win_exprs: dict[str, Column] = {}
-    aux_aggs = [F.count(F.lit(1)).alias("__cnt")]
     for c, strat in fills.items():
         col = F.col(c)
         if strat in ("forward", "interpolate"):
             win_exprs[f"__pv_{c}"] = F.last(col, ignorenulls=True).over(w_run)
-            aux_aggs.append(F.max_by(F.col(f"__pv_{c}"), F.col("__lrn")).alias(f"__last_{c}"))
         if strat in ("backward", "interpolate"):
             win_exprs[f"__nv_{c}"] = F.last(col, ignorenulls=True).over(w_rev)
-            aux_aggs.append(F.min_by(F.col(f"__nv_{c}"), F.col("__lrn")).alias(f"__first_{c}"))
         if strat == "interpolate":
             lpos = F.col("__lrn").cast("double")
             win_exprs[f"__pp_{c}"] = F.last(
@@ -340,13 +339,12 @@ def apply_order_dependent_fills(
             win_exprs[f"__np_{c}"] = F.last(
                 F.when(col.isNotNull(), lpos), ignorenulls=True
             ).over(w_rev)
-            aux_aggs.append(F.max_by(F.col(f"__pp_{c}"), F.col("__lrn")).alias(f"__lastp_{c}"))
-            aux_aggs.append(F.min_by(F.col(f"__np_{c}"), F.col("__lrn")).alias(f"__firstp_{c}"))
-    # persist the windowed frame: the aux aggregate (eager, below) and the
-    # final fix-up join both consume it — without the cache the whole
-    # upstream chain (parse/convert/clamp) recomputes per consumer. The
-    # sort puts each partition back in ascending order after the reversed
-    # windows. Scope the lifetime via preprocessor_spark.caching.persist_scope.
+    # persist the windowed frame: the carry aggregate (eager, below; P > 1
+    # only) and every action on the output consume it — without the cache
+    # the whole upstream chain (parse/convert/clamp) recomputes per
+    # consumer. The sort puts each partition back in ascending order after
+    # the reversed windows. Scope the lifetime via
+    # preprocessor_spark.caching.persist_scope.
     from preprocessor_spark.caching import register_persisted
 
     keys = [order_col] if tiebreak_col is None else [order_col, tiebreak_col]
@@ -354,7 +352,56 @@ def apply_order_dependent_fills(
         dfb.withColumns(win_exprs).sortWithinPartitions("__bkt", *keys).persist()
     )
 
-    # -- pass 3: P-row edge table → driver prefix scan → broadcast fix-up
+    # -- pass 3: P-row edge table → driver prefix scan → broadcast fix-up.
+    # With one bucket every carry-in is null and the offset 0: the same
+    # values as literals skip the aggregate job and the join.
+    if p == 1:
+        joined, carry = dfw, _no_carry
+    else:
+        carry_df = _carry_frame(dfw, fills)
+        joined, carry = dfw.join(F.broadcast(carry_df), "__bkt"), F.col
+
+    final: dict[str, Column] = {}
+    for c, strat in fills.items():
+        col = F.col(c)
+        if strat == "forward":
+            final[c] = F.coalesce(F.col(f"__pv_{c}"), carry(f"__cpv_{c}"))
+        elif strat == "backward":
+            final[c] = F.coalesce(F.col(f"__nv_{c}"), carry(f"__cnv_{c}"))
+        else:
+            gpos = (carry("__off") + F.col("__lrn")).cast("double")
+            pv = F.coalesce(F.col(f"__pv_{c}"), carry(f"__cpv_{c}"))
+            nv = F.coalesce(F.col(f"__nv_{c}"), carry(f"__cnv_{c}"))
+            pp = F.coalesce(carry("__off") + F.col(f"__pp_{c}"), carry(f"__cpp_{c}"))
+            np_ = F.coalesce(carry("__off") + F.col(f"__np_{c}"), carry(f"__cnp_{c}"))
+            frac = (gpos - pp) / (np_ - pp)
+            interp = pv + (nv - pv) * frac
+            final[c] = F.when(col.isNotNull(), col).otherwise(
+                F.when(pv.isNull() | nv.isNull(), F.lit(None)).otherwise(interp)
+            )
+    return joined.withColumns(final).select(*out_cols)
+
+
+def _no_carry(name: str) -> Column:
+    """A carry column of the one-bucket pass: offset 0, no carry-in."""
+    return F.lit(0).cast("bigint") if name == "__off" else F.lit(None).cast("double")
+
+
+def _carry_frame(dfw: DataFrame, fills: dict[str, str]) -> DataFrame:
+    """Per-bucket offsets and carry-ins of ``apply_order_dependent_fills``:
+    one aggregate job over the bucketed, windowed frame (count and each
+    bucket's edge values and positions, P rows) and a driver-side prefix
+    scan of it, returned as a P-row frame keyed on ``__bkt``."""
+    lrn = F.col("__lrn")
+    aux_aggs = [F.count(F.lit(1)).alias("__cnt")]
+    for c, strat in fills.items():
+        if strat in ("forward", "interpolate"):
+            aux_aggs.append(F.max_by(F.col(f"__pv_{c}"), lrn).alias(f"__last_{c}"))
+        if strat in ("backward", "interpolate"):
+            aux_aggs.append(F.min_by(F.col(f"__nv_{c}"), lrn).alias(f"__first_{c}"))
+        if strat == "interpolate":
+            aux_aggs.append(F.max_by(F.col(f"__pp_{c}"), lrn).alias(f"__lastp_{c}"))
+            aux_aggs.append(F.min_by(F.col(f"__np_{c}"), lrn).alias(f"__firstp_{c}"))
     aux_rows = sorted(dfw.groupBy("__bkt").agg(*aux_aggs).collect(), key=lambda r: r["__bkt"])
     offsets: dict[int, int] = {}
     off = 0
@@ -403,30 +450,9 @@ def apply_order_dependent_fills(
         f"`{k}` {'int' if k == '__bkt' else ('bigint' if k == '__off' else 'double')}"
         for k in carry_fields
     )
-    carry_df = spark.createDataFrame(
+    return dfw.sparkSession.createDataFrame(
         [tuple(row.get(k) for k in carry_fields) for row in carry_rows], carry_schema
     )
-    joined = dfw.join(F.broadcast(carry_df), "__bkt")
-
-    final: dict[str, Column] = {}
-    for c, strat in fills.items():
-        col = F.col(c)
-        if strat == "forward":
-            final[c] = F.coalesce(F.col(f"__pv_{c}"), F.col(f"__cpv_{c}"))
-        elif strat == "backward":
-            final[c] = F.coalesce(F.col(f"__nv_{c}"), F.col(f"__cnv_{c}"))
-        else:
-            gpos = (F.col("__off") + F.col("__lrn")).cast("double")
-            pv = F.coalesce(F.col(f"__pv_{c}"), F.col(f"__cpv_{c}"))
-            nv = F.coalesce(F.col(f"__nv_{c}"), F.col(f"__cnv_{c}"))
-            pp = F.coalesce(F.col("__off") + F.col(f"__pp_{c}"), F.col(f"__cpp_{c}"))
-            np_ = F.coalesce(F.col("__off") + F.col(f"__np_{c}"), F.col(f"__cnp_{c}"))
-            frac = (gpos - pp) / (np_ - pp)
-            interp = pv + (nv - pv) * frac
-            final[c] = F.when(col.isNotNull(), col).otherwise(
-                F.when(pv.isNull() | nv.isNull(), F.lit(None)).otherwise(interp)
-            )
-    return joined.withColumns(final).select(*out_cols)
 
 
 def normalize_expr(col: Column, stats: dict) -> Column:

@@ -85,6 +85,23 @@ def get_spark(
         # only decorate error messages — disable in this library's
         # sessions; stack traces still carry the Python-side origin.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Every Python task (pandas UDF, mapInPandas, applyInPandas) calls
+        # importlib.invalidate_caches() before its body runs, and on Python
+        # 3.11 that re-reads every zip on the workers' path. Timed inside a
+        # worker on a 4-core host: 12 reads of pyspark.zip (1,328 entries,
+        # 5-11 ms each) and 2 of the spark-core jar (5,359 entries, 22-44
+        # ms each), 0.1-0.26 s per task with the host's load. The top-level
+        # preprocessor_spark_daemon module (found through the PYTHONPATH
+        # set above) re-reads an archive only when its stat changed, then
+        # runs the stock pyspark.daemon. A single-task pandas-UDF job went
+        # from 0.16-0.25 s to 0.10-0.14 s (medians of 10, four session
+        # pairs; a non-UDF job takes 0.04-0.08 s). It must stay outside
+        # this package: as `-m preprocessor_spark.<mod>` the package
+        # __init__ loaded into the daemon and every forked worker, and
+        # perfbench prep_temporal peak_rss_mb rose from 1700-1723 to
+        # 1772-1773 MB. Stock daemon for an A/B:
+        # SPARK_GRAFT_CONF_JSON='{"spark.python.daemon.module":"pyspark.daemon"}'
+        .config("spark.python.daemon.module", "preprocessor_spark_daemon")
     )
     # experiment/ops passthrough: JSON dict of extra conf pairs, e.g.
     # SPARK_GRAFT_CONF_JSON='{"spark.python.worker.idleTimeoutSeconds":"60"}'

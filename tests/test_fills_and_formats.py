@@ -312,6 +312,55 @@ def test_bucketed_fill_plan_is_parallel(spark):
     assert "BroadcastHashJoin" in plan, plan  # the P-row carry fix-up
 
 
+def _build_jobs(spark, build):
+    """Run ``build`` under a fresh job group; return its result and the
+    names of the stages its eager jobs ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"fills-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = []
+    for job_id in tracker.getJobIdsForGroup(group):
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            info = tracker.getStageInfo(stage_id)
+            stages.append(info.name if info else "")
+    return out, stages
+
+
+def test_one_bucket_skips_carry_and_matches_sixteen(spark):
+    """At P = 1 the fill pass runs only the count-and-edges aggregate (no
+    per-bucket carry aggregate, no broadcast join), and its output equals
+    the sixteen-bucket output row for row in collect order."""
+    from preprocessor_spark.functions import numerical as N
+
+    df = _fill_frame(spark, n=5_000).withColumn("f", F.col("v")).withColumn("b", F.col("v"))
+    fills = {"v": "interpolate", "f": "forward", "b": "backward"}
+
+    def build():
+        return N.apply_order_dependent_fills(df, fills, order_col="okey", tiebreak_col="rid")
+
+    with persist_scope():
+        one, one_stages = _build_jobs(spark, build)
+        with _sixteen_buckets(spark):
+            sixteen, sixteen_stages = _build_jobs(spark, build)
+            want = sixteen.collect()
+        one_plan = formatted_plan(one)
+        got = one.collect()
+    assert "BroadcastHashJoin" not in one_plan, one_plan
+    # stage names carry the call site: at P = 1 every stage is the
+    # count-and-edges collect; at P = 16 the carry collect adds its own
+    assert one_stages and len(set(one_stages)) == 1, one_stages
+    assert set(sixteen_stages) - set(one_stages), sixteen_stages
+    assert got == want
+
+
 def test_transform_fill_plan_is_parallel_without_partition_by(spark):
     """Preprocessor.transform with an order-dependent fill and NO
     partition_by must plan the bucketed fill, not a single-partition
