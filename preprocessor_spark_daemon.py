@@ -48,12 +48,8 @@ def invalidate_caches(self):
     self._read_key = key
 
 
-def install():
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
-
-
 if __name__ == "__main__":
-    # ``-m`` runs this file as ``__main__``; install from the module under
-    # its own name, so the patched method reports (and pickles as) it.
-    __import__(__spec__.name).install()
+    # ``-m`` runs this file as ``__main__``; take the method from the module
+    # under its own name, so the patched method reports (and pickles as) it.
+    zipimport.zipimporter.invalidate_caches = __import__(__spec__.name).invalidate_caches
     daemon.manager()
