@@ -6199,13 +6199,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order is a driver contract: the driver grades the FIRST 50
     entries against their DuckDB oracles. ``_GRADED_WINDOW`` names those 50
-    explicitly (every one has an oracle_sql() twin — contract-tested);
-    round 4 swaps ten basic-op demos out for the round's marquee operators
-    (TPC-H q2/q21, CDC merge + SCD2, scale-safe row ids, correlation
-    matrix, fuzzy + edit-distance joins, table profile, VARIANT). Entries
-    at 51+ — including everything swapped out — remain fully graded locally
-    by tests/test_queries.py at sf0.001 and sf0.01; rows-only entries close
-    the list."""
+    explicitly (every one has an oracle_sql() twin — contract-tested).
+    Entries at 51+ stay graded locally by tests/test_queries.py at sf0.001
+    and sf0.01 wherever they have an oracle; rows-only entries close the
+    list."""
     base = _registry()
     ordered = {n: base[n] for n in _GRADED_WINDOW}
     ordered.update({n: f for n, f in base.items() if n not in ordered})
@@ -6227,117 +6224,27 @@ _GRADED_WINDOW = [
     "tumbling_json_events",
     "prep_full_transform",
     "prep_roundtrip",
-    # round-4 marquee operators promoted into the graded window
-    # (q21_waiting_suppliers, merge_upsert_orders, corr_matrix_lineitem
-    # and fuzzy_join_docs rotated out at round 10 after six green rounds —
-    # all remain oracle-graded locally at 51+)
     "scd2_customers_dim",
-    # round-5 marquee operators promoted into the graded window (displaced
-    # basics remain oracle-graded locally at 51+, same policy as round 4;
-    # bloom_join_revenue and warc_ingest_stats rotated out at round 10
-    # after five green rounds)
-    # pipeline_web_corpus subsumes the domain-cap query (cap stage inside)
-    # and the url_normalize/html_extract stages (both stay graded at 51+)
     "pipeline_web_corpus",
-    # round-6 marquee operators promoted into the graded window: the pure-
-    # Python Avro container source round-trip, DSIR importance resampling,
-    # and the batch time-window family (session/hopping/resample/collation)
-    # added after round 5's window was frozen. Displaced basics
-    # (semi_anti_theta_counts, domain_temperature_mix,
-    # embed_normalize_quantize, prep_kbins_buckets, profile_orders,
-    # pii_redaction_stats) remain oracle-graded locally at 51+.
     "avro_roundtrip_orders",
     "dsir_select_docs",
-    # round-7 promotion: the round-6b marquee operators (all oracle-backed)
-    # enter the driver-graded window; displaced basics (fill_events_all,
-    # prep_datetime_pipeline, text_repetition_stats, top_terms_skewed,
-    # html_extract_docs, sql_udf_pricing, token_budget_mix_docs,
-    # edit_join_parts, url_normalize_docs) remain oracle-graded locally at
-    # 51+ — same policy as rounds 4-6.
     "image_phash_neardup",
     "knn_graph_triangles",
-    # round-8 promotion: the two round-7 value-oracled operators (KN bigram
-    # LM with the sorted-left-fold float contract; ridge regression with
-    # the bit-exact Cramer expression tree). Displaced basics
-    # (text_profile_docs, split_documents) remain oracle-graded locally at
-    # 51+ — same policy as rounds 4-7.
     "lm_kn_perplexity_docs",
     "ridge_regression_lineitem",
-    # round-8b promotion: the six new value-oracled analytics operators
-    # (hypothesis tests, basket mining, survival, target encoding).
-    # Displaced long-green basics (sessionize_user_events,
-    # pack_documents_plan, contamination_check, negatives_ring_docs,
-    # lateral_topn_orders, text_gopher_quality) remain oracle-graded
-    # locally at 51+ — same policy as rounds 4-7.
-    # (round-11 rotation: the six r8b analytics — welch_ttest_returnflags,
-    # chi2_priority_status, mannwhitney_quantity_status, basket_brand_pairs,
-    # survival_km_customers, target_encode_priority — rotated out after
-    # three green rounds; all remain oracle-graded locally at 51+.)
-    # round-9 promotion: the value-oracled round-8b analytics (ROC-AUC +
-    # confusion metrics, multinomial Naive Bayes, grouped OLS, isotonic
-    # PAV via the minimax identity). Their rows-only siblings (holt,
-    # logreg, isoforest) stay at 51+ with invariant/equivalence pytest
-    # grading — approximate/iterative fits have no SQL twin by design.
-    # Displaced long-green r6b basics (cohort_retention_events,
-    # anomaly_mad_events, event_transitions_markov, keyword_tfidf_docs)
-    # remain oracle-graded locally at 51+ — same policy as rounds 4-8.
-    # (round-11 rotation: eval_binary_discount, nbayes_lang_docs,
-    # isotonic_discount_returnrate rotated out after two green rounds;
-    # grouped_ols_lineitem stays — it also grades the linear-SHAP row.)
     "grouped_ols_lineitem",
-    # round-9 marquee analytics (all value-oracled): association rules,
-    # CUPED experimentation, offline CUSUM changepoint, seasonal
-    # decomposition. Their siblings (mutual_info_orders,
-    # gains_table_returns, shapley_lineitem_price) and the displaced
-    # long-green r6b/r7 basics (funnel_user_events, interval_join_events,
-    # drift_orders_ks, hopping_window_events) remain oracle-graded locally
-    # at 51+ — same policy as rounds 4-8.
-    # (round-12 rotation: assoc_rules_brands, cuped_orders_experiment,
-    # changepoint_user_values, mutual_info_orders rotated out after three
-    # green rounds; all remain oracle-graded locally at 51+.)
     # seasonal_decompose_events grades LOCALLY (sf0.001): its outputs live
     # on a fine rational grid where last-digit round straddles across
     # engines are structural at the driver's sf0.01 (see seasonal.py)
-    # round-9d promotion: eight new value-oracled operators — weighted
-    # Bellman-Ford SSSP (iterative, recursive-CTE-replayed), linear
-    # multi-touch attribution (fractional credit via exact cells + sorted
-    # folds), two-scan k-fold CV, Poisson-bootstrap CIs, wedge-join link
-    # prediction, one-way ANOVA, AR(2) Yule-Walker, split-conformal
-    # intervals. Displaced long-green basics (asof_purchase_last_view,
-    # session_window_events, resample_events_hourly, collated_source_counts,
-    # variant_props_events, recursive_cte_tree, row_ids_documents,
-    # q2_min_cost_supplier) remain oracle-graded locally at 51+ — same
-    # policy as rounds 4-9.
-    # (round-12 rotation: graph_wsp_custsupp, attribution_linear_events,
-    # cv_ols_price_folds, bootstrap_ci_priority, anova_price_priority
-    # rotated out after two green rounds; all remain oracle-graded locally
-    # at 51+.)
     "link_predict_custsupp",
     "ar2_forecast_users",
     "conformal_price_intervals",
-    # round-10 promotion: the six round-9 value-oracled operators enter the
-    # driver window (all local-oracle green through round 9, strict
-    # exact-compare re-simulated at sf0.01 before freezing): multi-source
-    # BFS hops, Nelson-Aalen hazard, RFM segmentation, gains/decile table,
-    # linear SHAP top-k, seasonal-naive forecast backtest. Displaced
-    # long-green r4/r5 basics (q21_waiting_suppliers, merge_upsert_orders,
-    # corr_matrix_lineitem, fuzzy_join_docs, bloom_join_revenue,
-    # warc_ingest_stats) remain oracle-graded locally at 51+ — same policy
-    # as rounds 4-9.
     "graph_hops_custsupp",
     "survival_na_customers",
     "rfm_segments_orders",
     "gains_table_returns",
     "shapley_lineitem_price",
     "backtest_seasonal_naive_users",
-    # round-11 promotion: the nine round-10 value-oracled analytics enter
-    # the driver window (strict exact-compare re-simulated at sf0.01
-    # before freezing — the a00682f discipline): Spearman rank correlation,
-    # Kruskal-Wallis H, per-series ACF + Ljung-Box, Gini/Lorenz, Benford
-    # first-digit audit, weighted quantiles, two-proportion z-test + power,
-    # key-skew report, frequent event sequences. Their rows-only sibling
-    # (cox_ph_customers) stays at 51+ with partial-likelihood pytest
-    # grading — iterative float fit has no SQL twin by design.
     "spearman_lineitem",
     "kruskal_value_events",
     "acf_events_users",
@@ -6347,15 +6254,6 @@ _GRADED_WINDOW = [
     "prop_ztest_orders",
     "skew_events_users",
     "event_sequences_users",
-    # round-12 promotion: the nine round-11 value-oracled operators enter
-    # the driver window (strict exact-compare re-simulated at sf0.01
-    # before freezing — the a00682f discipline): Mann-Kendall/Theil-Sen
-    # trend, difference-in-differences, James-Stein shrinkage,
-    # group-sequential monitoring, shingle-containment join (now with the
-    # exact-dup collapse), retrieval eval (NDCG/MRR/recall@k), Murphy-
-    # decomposed calibration report, and the streaming funnel +
-    # sessionization drains (graded by their batch oracles after an
-    # in-order availableNow drain).
     "trend_mann_kendall_users",
     "did_building_orders",
     "shrinkage_customer_value",
@@ -6380,7 +6278,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_bruteforce": knn_bruteforce,
         "knn_graph_triangles": knn_graph_triangles,
         "kmeans_embeddings": kmeans_embeddings,
-        # NN-descent approximate kNN graph (round 7, rows-only: approximate)
+        # NN-descent approximate kNN graph (rows-only: approximate)
         "knn_graph_nndescent": knn_graph_nndescent,
         "image_phash_neardup": image_phash_neardup,
         "text_profile_docs": text_profile_docs,
@@ -6394,15 +6292,15 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents_tokens": chunk_documents_tokens,
         "pack_documents_plan": pack_documents_plan,
         "ts_features_by_user": ts_features_by_user,
-        # whole-series tsfresh tier (round 7, rows-only: spectral float math)
+        # whole-series tsfresh tier (rows-only: spectral float math)
         "ts_spectral_by_user": ts_spectral_by_user,
-        # matrix profile / CWT peaks (round 8, rows-only: STOMP recursion)
+        # matrix profile / CWT peaks (rows-only: STOMP recursion)
         "ts_matrix_profile_by_user": ts_matrix_profile_by_user,
-        # motif census via MASS (round 8, rows-only: float recursion)
+        # motif census via MASS (rows-only: float recursion)
         "ts_query_count_events": ts_query_count_events,
         "prep_datetime_pipeline": prep_datetime_pipeline,
         # -- LLM-pipeline family, continued (pulled inside the window by the
-        # relational merges below — round-1 verdict task) --
+        # relational merges below) --
         "domain_temperature_mix": domain_temperature_mix,
         "text_repetition_stats": text_repetition_stats,
         "top_terms_skewed": top_terms_skewed,
@@ -6445,17 +6343,17 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "unpivot_metrics": unpivot_metrics,
         "window_value_family": window_value_family,
         "text_lm_quality": text_lm_quality,
-        # interpolated Kneser-Ney bigram LM (round 7, oracle-backed)
+        # interpolated Kneser-Ney bigram LM (oracle-backed)
         "lm_kn_perplexity_docs": lm_kn_perplexity_docs,
-        # IRLS logistic regression (round 8, rows-only: iterative solve)
+        # IRLS logistic regression (rows-only: iterative solve)
         "logreg_returnflag_lineitem": logreg_returnflag_lineitem,
-        # isolation forest (round 8, rows-only: randomized trees)
+        # isolation forest (rows-only: randomized trees)
         "anomaly_isoforest_lineitem": anomaly_isoforest_lineitem,
-        # two-sample hypothesis tests (round 8, exact-moment passes)
+        # two-sample hypothesis tests (exact-moment passes)
         "welch_ttest_returnflags": welch_ttest_returnflags,
         "chi2_priority_status": chi2_priority_status,
         "mannwhitney_quantity_status": mannwhitney_quantity_status,
-        # basket mining / survival / target encoding (round 8, value-oracled)
+        # basket mining / survival / target encoding (value-oracled)
         "basket_brand_pairs": basket_brand_pairs,
         "survival_km_customers": survival_km_customers,
         "target_encode_priority": target_encode_priority,
@@ -6463,7 +6361,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nbayes_lang_docs": nbayes_lang_docs,
         "grouped_ols_lineitem": grouped_ols_lineitem,
         "isotonic_discount_returnrate": isotonic_discount_returnrate,
-        # round-9 analytics tier (all value-oracled): association rules,
+        # analytics tier (all value-oracled): association rules,
         # CUPED, offline CUSUM changepoint, mutual information, gains
         # table, seasonal decomposition, linear SHAP
         "assoc_rules_brands": assoc_rules_brands,
@@ -6473,7 +6371,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gains_table_returns": gains_table_returns,
         "seasonal_decompose_events": seasonal_decompose_events,
         "shapley_lineitem_price": shapley_lineitem_price,
-        # round-9b: seasonal-ESD anomalies + forecast backtest (oracled);
+        # seasonal-ESD anomalies + forecast backtest (oracled);
         # online CUSUM / Huber / ALS (rows-only: sequential or iterative
         # float recursions with pytest reference/equivalence grading)
         "anomaly_seasonal_esd_events": anomaly_seasonal_esd_events,
@@ -6487,7 +6385,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "als_part_affinity": als_part_affinity,
         # multi-source BFS hops — iterative yet value-oracled (recursive CTE)
         "graph_hops_custsupp": graph_hops_custsupp,
-        # round-9d analytics (all value-oracled)
+        # analytics (all value-oracled)
         "anova_price_priority": anova_price_priority,
         "fdr_priority_price": fdr_priority_price,
         "ar2_forecast_users": ar2_forecast_users,
@@ -6500,20 +6398,20 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "attribution_linear_events": attribution_linear_events,
         "attribution_last_touch_events": attribution_last_touch_events,
         "graph_wsp_custsupp": graph_wsp_custsupp,
-        # Holt-Winters triple smoothing (round-10: two-phase list-ring
+        # Holt-Winters triple smoothing (two-phase list-ring
         # fold oracle)
         "forecast_hw_users": forecast_hw_users,
         "cv_ols_price_folds": cv_ols_price_folds,
         "survival_na_customers": survival_na_customers,
         "rfm_segments_orders": rfm_segments_orders,
         "bootstrap_ci_priority": bootstrap_ci_priority,
-        # round-10 applied analytics: inequality / forensics / sequences /
+        # applied analytics: inequality / forensics / sequences /
         # proportional hazards
         "gini_nation_balances": gini_nation_balances,
-        # Theil T / L + Atkinson(1) decomposable inequality (round 12,
-        # oracle-backed — quantized log terms on the 1e12 int64 grid)
+        # Theil T / L + Atkinson(1) decomposable inequality (oracle-backed —
+        # quantized log terms on the 1e12 int64 grid)
         "theil_orders_priority": theil_orders_priority,
-        # Cohen's kappa + weighted variants (round 12, oracle-backed —
+        # Cohen's kappa + weighted variants (oracle-backed —
         # every statistic one division of two exact integers)
         "kappa_lineitem_qty_price": kappa_lineitem_qty_price,
         "benford_price_digits": benford_price_digits,
@@ -6523,16 +6421,16 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spearman_lineitem": spearman_lineitem,
         "kruskal_value_events": kruskal_value_events,
         # Jonckheere-Terpstra ordered-alternative + Cochran-Mantel-Haenszel
-        # stratified 2x2 (round 12, oracle-backed — exact integer
+        # stratified 2x2 (oracle-backed — exact integer
         # functionals / 1e12-grid stratum sums)
         "jonckheere_priority_qty": jonckheere_priority_qty,
         "cmh_discount_returns": cmh_discount_returns,
         # concordant/discordant ordinal-association family + McNemar
-        # paired test (round 12, oracle-backed)
+        # paired test (oracle-backed)
         "ordinal_assoc_ship_calendar": ordinal_assoc_ship_calendar,
         "mcnemar_purchase_halves": mcnemar_purchase_halves,
         # effect sizes / Lin's CCC reconciliation / partial correlation /
-        # Brown-Forsythe spread homogeneity (round 12, oracle-backed)
+        # Brown-Forsythe spread homogeneity (oracle-backed)
         "effect_sizes_returns": effect_sizes_returns,
         "ccc_order_reconciliation": ccc_order_reconciliation,
         "partial_corr_lineitem": partial_corr_lineitem,
@@ -6541,10 +6439,10 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_sequences_users": event_sequences_users,
         # Cox PH (rows-only: iterative partial-likelihood Newton fit)
         "cox_ph_customers": cox_ph_customers,
-        # Holt forecasting + density clustering (round 8, rows-only)
+        # Holt forecasting + density clustering (rows-only)
         "forecast_holt_users": forecast_holt_users,
         "dbscan_embeddings": dbscan_embeddings,
-        # one-pass distributed ridge regression (round 7, oracle-backed)
+        # one-pass distributed ridge regression (oracle-backed)
         "ridge_regression_lineitem": ridge_regression_lineitem,
         "dedup_substring_spans": dedup_substring_spans,
         "sample_stratified_topk": sample_stratified_topk,
@@ -6563,7 +6461,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "agg_distinct_percentile": agg_distinct_percentile,
         "agg_min_max_by": agg_min_max_by,
         "having_frequent_customers": having_frequent_customers,
-        # TPC-H breadth (round 4): the canonical decision-support shapes
+        # TPC-H breadth: the canonical decision-support shapes
         # expressible over the available columns
         "q4_priority_exists": q4_priority_exists,
         "q6_forecast_revenue": q6_forecast_revenue,
@@ -6576,7 +6474,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q17_small_quantity_revenue": q17_small_quantity_revenue,
         "q18_large_volume_customers": q18_large_volume_customers,
         "q19_disjunctive_revenue": q19_disjunctive_revenue,
-        # TPC-H completion (round 4): the remaining 8 shapes, adapted to the
+        # TPC-H completion: the remaining 8 shapes, adapted to the
         # reduced schema (no partsupp/shipmode/phone columns in testdata)
         "q2_min_cost_supplier": q2_min_cost_supplier,
         "q9_product_profit": q9_product_profit,
@@ -6586,113 +6484,112 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q20_excess_availability": q20_excess_availability,
         "q21_waiting_suppliers": q21_waiting_suppliers,
         "q22_global_sales_opportunity": q22_global_sales_opportunity,
-        # incremental batch-vs-corpus dedup (round 4, oracle-backed)
+        # incremental batch-vs-corpus dedup (oracle-backed)
         "dedup_incremental_batch": dedup_incremental_batch,
-        # declarative data-quality gate (round 4, oracle-backed)
+        # declarative data-quality gate (oracle-backed)
         "dq_orders_report": dq_orders_report,
-        # percentile outlier treatment (round 4, oracle-backed)
+        # percentile outlier treatment (oracle-backed)
         "prep_winsorize_robust": prep_winsorize_robust,
-        # PSI distribution drift (round 4, oracle-backed)
+        # PSI distribution drift (oracle-backed)
         "drift_orders_psi": drift_orders_psi,
         "drift_orders_ks": drift_orders_ks,
         "funnel_user_events": funnel_user_events,
-        # streaming-state funnel drain report (round 11, oracle-backed —
+        # streaming-state funnel drain report (oracle-backed —
         # bit-equal to the batch funnel by the drain contract)
         "funnel_stream_report_events": funnel_stream_report_events,
-        # Mann-Kendall trend + Theil-Sen + Kendall tau-b (round 11,
-        # oracle-backed — exact pairwise integers + fixed IEEE tree)
+        # Mann-Kendall trend + Theil-Sen + Kendall tau-b (oracle-backed — exact
+        # pairwise integers + fixed IEEE tree)
         "trend_mann_kendall_users": trend_mann_kendall_users,
-        # streaming-state sessionization drain report (round 11,
-        # oracle-backed — bit-equal to batch session_stats by the drain
-        # contract, same pattern as the funnel twin)
+        # streaming-state sessionization drain report (oracle-backed —
+        # bit-equal to batch session_stats by the drain contract, same pattern
+        # as the funnel twin)
         "session_stream_report_events": session_stream_report_events,
-        # streaming-state Holt + CUSUM drain reports (round 12,
-        # oracle-backed — bit-equal to their batch operators by the drain
-        # contract; they share forecast_holt_users' / cusum_online_users'
-        # list_reduce fold oracles)
+        # streaming-state Holt + CUSUM drain reports (oracle-backed — bit-equal
+        # to their batch operators by the drain contract; they share
+        # forecast_holt_users' / cusum_online_users' list_reduce fold oracles)
         "holt_stream_report_users": holt_stream_report_users,
         "cusum_stream_report_events": cusum_stream_report_events,
-        # difference-in-differences estimator (round 11, oracle-backed —
+        # difference-in-differences estimator (oracle-backed —
         # exact DECIMAL cell moments + fixed IEEE tree, the cuped recipe)
         "did_building_orders": did_building_orders,
-        # James-Stein empirical-Bayes shrinkage (round 11, oracle-backed —
+        # James-Stein empirical-Bayes shrinkage (oracle-backed —
         # exact cell moments + quantized int64 pooled sums)
         "shrinkage_customer_value": shrinkage_customer_value,
         # group-sequential monitoring with OBF/Haybittle-Peto boundaries
-        # (round 11, oracle-backed — cumulative DECIMAL cells)
+        # (oracle-backed — cumulative DECIMAL cells)
         "sequential_looks_orders": sequential_looks_orders,
         # asymmetric shingle-containment join for quote/excerpt detection
-        # (round 11, oracle-backed — exact integer intersections)
+        # (oracle-backed — exact integer intersections)
         "containment_docs": containment_docs,
         # offline retrieval eval: NDCG/MRR/recall over the cosine top-10
-        # (round 11, oracle-backed — quantized DCG sums)
+        # (oracle-backed — quantized DCG sums)
         "ranking_eval_same_source": ranking_eval_same_source,
         # probability-calibration report + Murphy-decomposed Brier
-        # (round 11, oracle-backed — quantized bin moments)
+        # (oracle-backed — quantized bin moments)
         "calibration_discount_returns": calibration_discount_returns,
         "interval_join_events": interval_join_events,
         # stream-stream interval join drain + Cochran's Q + Kendall's W
-        # (round 12, oracle-backed)
+        # (oracle-backed)
         "interval_join_stream_events": interval_join_stream_events,
         "cochrans_q_user_types": cochrans_q_user_types,
         "kendalls_w_type_users": kendalls_w_type_users,
         # Friedman (Kendall-W identity) + Mood's median composition +
-        # Iceberg v2 merge-on-read scan (round 12, oracle-backed)
+        # Iceberg v2 merge-on-read scan (oracle-backed)
         "friedman_types_by_user": friedman_types_by_user,
         "mood_median_price_flag": mood_median_price_flag,
         "iceberg_mor_scan_orders": iceberg_mor_scan_orders,
         "anomaly_mad_events": anomaly_mad_events,
         "event_transitions_markov": event_transitions_markov,
         "cohort_retention_events": cohort_retention_events,
-        # scale-safe global row numbering (round 4, oracle-backed)
+        # scale-safe global row numbering (oracle-backed)
         "row_ids_documents": row_ids_documents,
-        # CDC merge + SCD2 history (round 4, oracle-backed)
+        # CDC merge + SCD2 history (oracle-backed)
         "merge_upsert_orders": merge_upsert_orders,
         "scd2_customers_dim": scd2_customers_dim,
-        # one-pass correlation matrix (round 4, oracle-backed)
+        # one-pass correlation matrix (oracle-backed)
         "corr_matrix_lineitem": corr_matrix_lineitem,
         "corr_by_returnflag": corr_by_returnflag,
-        # one-pass table profile (round 4, oracle-backed)
+        # one-pass table profile (oracle-backed)
         "profile_orders": profile_orders,
-        # VARIANT semi-structured extraction (round 4, oracle-backed)
+        # VARIANT semi-structured extraction (oracle-backed)
         "variant_props_events": variant_props_events,
-        # quality-weighted deterministic sampling (round 4, oracle-backed)
+        # quality-weighted deterministic sampling (oracle-backed)
         "sample_weighted_docs": sample_weighted_docs,
-        # cross-table fuzzy similarity join (round 4, oracle-backed)
+        # cross-table fuzzy similarity join (oracle-backed)
         "fuzzy_join_docs": fuzzy_join_docs,
-        # exact edit-distance join (round 4, oracle-backed)
+        # exact edit-distance join (oracle-backed)
         "edit_join_parts": edit_join_parts,
-        # Bloom-filter pre-filtered join (round 5, oracle-backed)
+        # Bloom-filter pre-filtered join (oracle-backed)
         "bloom_join_revenue": bloom_join_revenue,
-        # URL canonicalization + domain caps (round 5, oracle-backed)
+        # URL canonicalization + domain caps (oracle-backed)
         "url_normalize_docs": url_normalize_docs,
         "url_domain_cap": url_domain_cap,
-        # recursive CTE hierarchy walk (round 5, oracle-backed)
+        # recursive CTE hierarchy walk (oracle-backed)
         "recursive_cte_tree": recursive_cte_tree,
-        # LATERAL correlated top-N (round 5, oracle-backed)
+        # LATERAL correlated top-N (oracle-backed)
         "lateral_topn_orders": lateral_topn_orders,
-        # WARC python-data-source ingestion (round 5, oracle-backed)
+        # WARC python-data-source ingestion (oracle-backed)
         "warc_ingest_stats": warc_ingest_stats,
-        # declarative SQL UDF (round 5, oracle-backed)
+        # declarative SQL UDF (oracle-backed)
         "sql_udf_pricing": sql_udf_pricing,
-        # HTML -> text extraction (round 5, oracle-backed)
+        # HTML -> text extraction (oracle-backed)
         "html_extract_docs": html_extract_docs,
-        # token-budget domain mixture (round 5, oracle-backed)
+        # token-budget domain mixture (oracle-backed)
         "token_budget_mix_docs": token_budget_mix_docs,
-        # batch time-series resampling (round 5, oracle-backed)
+        # batch time-series resampling (oracle-backed)
         "resample_events_hourly": resample_events_hourly,
-        # collated case-insensitive grouping (round 5, oracle-backed)
+        # collated case-insensitive grouping (oracle-backed)
         "collated_source_counts": collated_source_counts,
-        # built-in batch session_window (round 5, oracle-backed)
+        # built-in batch session_window (oracle-backed)
         "session_window_events": session_window_events,
-        # sliding/hopping windows in batch (round 5, oracle-backed)
+        # sliding/hopping windows in batch (oracle-backed)
         "hopping_window_events": hopping_window_events,
         "avro_roundtrip_orders": avro_roundtrip_orders,
-        # pure-Python Iceberg v2 metadata scan with stats pruning (round
-        # 12, oracle-backed — metadata routing must be lossless vs the raw
-        # parquet aggregate)
+        # pure-Python Iceberg v2 metadata scan with stats pruning
+        # (oracle-backed — metadata routing must be lossless vs the raw parquet
+        # aggregate)
         "iceberg_scan_lineitem": iceberg_scan_lineitem,
-        # Delta Lake pure-Python log layer (round 12, oracle-backed —
+        # Delta Lake pure-Python log layer (oracle-backed —
         # lossless metadata routing vs the raw parquet aggregate)
         "delta_scan_orders": delta_scan_orders,
         "snapshot_orders_diff": snapshot_orders_diff,
@@ -6700,13 +6597,13 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "try_funcs_orders": try_funcs_orders,
         "group_by_all_revenue": group_by_all_revenue,
         "html_links_docs": html_links_docs,
-        # DSIR importance resampling (round 6, oracle-backed)
+        # DSIR importance resampling (oracle-backed)
         "dsir_select_docs": dsir_select_docs,
-        # WARC -> HTML -> URL -> cap capstone (round 5, oracle-backed)
+        # WARC -> HTML -> URL -> cap capstone (oracle-backed)
         "pipeline_web_corpus": pipeline_web_corpus,
-        # contrastive ring negatives (round 5, oracle-backed)
+        # contrastive ring negatives (oracle-backed)
         "negatives_ring_docs": negatives_ring_docs,
-        # Z-order clustering key (round 5, oracle-backed)
+        # Z-order clustering key (oracle-backed)
         "zorder_orders": zorder_orders,
         # rows-only checks (no SQL oracle by design):
         # count-min sketch estimates (xxhash64 — invariant-tested vs DuckDB)
@@ -6714,7 +6611,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # PageRank link-graph signal (float-order nondeterminism — graded
         # vs an independent numpy power iteration in tests)
         "pagerank_custsupp": pagerank_custsupp,
-        # LPA community detection (round 7, rows-only: no SQL community oracle)
+        # LPA community detection (rows-only: no SQL community oracle)
         "communities_lpa": communities_lpa,
         "bpe_token_stats": bpe_token_stats_docs,
         "text_quality_classifier": text_quality_classifier,
@@ -6729,7 +6626,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_ivf": knn_ivf,
         "knn_pq_adc": knn_pq_adc,
         "knn_ivfpq": knn_ivfpq,
-        # IVFADC+R exact-rerank (round 8, rows-only: approximate ANN)
+        # IVFADC+R exact-rerank (rows-only: approximate ANN)
         "knn_ivfpq_refined": knn_ivfpq_refined,
         "mmr_rerank_docs": mmr_rerank_docs,
         "text_fingerprint": text_fingerprint,

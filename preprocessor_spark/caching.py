@@ -169,10 +169,12 @@ def cached_plan_replanning_disabled(spark) -> Iterator[None]:
         yield
 
 
+# Rows a fixpoint round hands each shuffle partition (fixpoint_shuffle_scope).
+FIXPOINT_ROWS_PER_PARTITION = 100_000
+
+
 @contextmanager
-def fixpoint_shuffle_scope(
-    spark, rows_hint: int, rows_per_partition: int = 100_000
-) -> Iterator[int]:
+def fixpoint_shuffle_scope(spark, rows_hint: int) -> Iterator[int]:
     """Size ``spark.sql.shuffle.partitions`` to the frames an iterative
     fixpoint actually shuffles, for the duration of the loop.
 
@@ -183,8 +185,8 @@ def fixpoint_shuffle_scope(
     35+ s of the sf0.1 suite across three fixpoint queries). AQE's
     coalescing only helps reducer sides — the map side of every round
     still launches one task per parent partition. Scoping the conf to
-    ``clamp(rows_hint / rows_per_partition, 8, session default)`` keeps
-    the round-trip cost proportional to the data: at 100 TB the hint
+    ``clamp(rows_hint / FIXPOINT_ROWS_PER_PARTITION, 8, session default)``
+    keeps the round-trip cost proportional to the data: at 100 TB the hint
     exceeds the session default and this is a no-op.
 
     Config reads happen at PLAN time, so the scope must enclose both the
@@ -193,6 +195,7 @@ def fixpoint_shuffle_scope(
     previous value on exit; yields the partition count chosen.
     """
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    n = max(8, min(int(old), (int(rows_hint) + rows_per_partition - 1) // rows_per_partition))
+    per = FIXPOINT_ROWS_PER_PARTITION
+    n = max(8, min(int(old), (int(rows_hint) + per - 1) // per))
     with _conf_scope(spark, "spark.sql.shuffle.partitions", str(n)):
         yield n

@@ -88,49 +88,3 @@ def asof_join(
         [f for f in right.columns if f != on and f not in by]
     ] + [F.col("__match_ts").alias(f"{right_prefix}{on}")]
     return out.select(*proj)
-
-
-def asof_join_cogrouped(
-    left: "DataFrame",
-    right: "DataFrame",
-    on: str,
-    by: list[str],
-    right_prefix: str = "r_",
-) -> "DataFrame":
-    """Backward as-of join via cogrouped ``applyInPandas`` — the §2.11
-    cogroup surface, asserted equivalent to the union-merge ``asof_join``
-    in tests.
-
-    Both sides shuffle once on ``by``; matching key groups meet in one
-    Python worker where ``pd.merge_asof`` does the ordered merge. Per-group
-    memory is the bound (a mega-key must fit one worker) — the union-merge
-    formulation has no such bound and stays the default; this twin exists
-    for pipelines already paying the pandas boundary that want pandas
-    semantics verbatim."""
-    import pandas as pd  # noqa: PLC0415
-
-    r_payload = [c for c in right.columns if c != on and c not in by]
-    out_fields = [left.schema[c] for c in left.columns]
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    schema = T.StructType(
-        out_fields
-        + [T.StructField(f"{right_prefix}{c}", right.schema[c].dataType) for c in r_payload]
-    )
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        l = l.sort_values(on, kind="mergesort")
-        r = r.sort_values(on, kind="mergesort")[[on] + r_payload].rename(
-            columns={c: f"{right_prefix}{c}" for c in r_payload}
-        )
-        if r.empty:
-            for c in r_payload:
-                l[f"{right_prefix}{c}"] = None
-            return l
-        return pd.merge_asof(l, r, on=on, direction="backward")
-
-    return (
-        left.groupBy(*by)
-        .cogroup(right.groupBy(*by))
-        .applyInPandas(merge, schema)
-    )

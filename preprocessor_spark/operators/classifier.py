@@ -190,12 +190,6 @@ def score_quality_udf(model: QualityClassifier):
     return _score
 
 
-def score_documents(
-    df: DataFrame, text_col: str, model: QualityClassifier, out_col: str = "quality_score"
-) -> DataFrame:
-    return df.withColumn(out_col, score_quality_udf(model)(F.col(text_col)))
-
-
 def save_classifier(model: QualityClassifier, path: str) -> None:
     """JSON persistence (weights are ≤ dim doubles — driver-scale)."""
     import json

@@ -177,7 +177,6 @@ def pq_search_adc(
     id_col: str,
     k: int = 5,
     code_col: str = "pq_code",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """ADC top-k over an encoded corpus → (query_id, neighbor_id,
     adc_score, rank). ``adc_score = <q, reconstruct(code)>`` up to float
@@ -218,8 +217,7 @@ def pq_search_adc(
             gathered = blut[:, jidx[None, :], codes]  # Q×B×m
             sims = gathered.sum(axis=2).T  # B×Q
             nids = pdf["neighbor_id"].to_numpy()
-            if exclude_self:
-                sims[nids[:, None] == bqids[None, :]] = -np.inf
+            sims[nids[:, None] == bqids[None, :]] = -np.inf
             kk = min(k, sims.shape[0])
             rs = np.round(sims, 6)
             qcols, ncols, scols = [], [], []
@@ -340,7 +338,6 @@ def ivfpq_search(
     k: int = 5,
     n_probe: int = 3,
     code_col: str = "pq_code",
-    exclude_self: bool = True,
     refine: DataFrame | None = None,
     refine_factor: int = 4,
 ) -> DataFrame:
@@ -387,11 +384,11 @@ def ivfpq_search(
     bc = index.sparkSession.sparkContext.broadcast((pos, lut))
 
     probes = q.select("query_id", F.explode("__cells").alias("__cell"))
-    joined = index.join(probes, "__cell").select(
-        "query_id", "neighbor_id", code_col
+    joined = (
+        index.join(probes, "__cell")
+        .select("query_id", "neighbor_id", code_col)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
 
     def _score(batches):
         bpos, blut = bc.value

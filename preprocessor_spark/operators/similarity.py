@@ -46,11 +46,11 @@ def cosine_topk(
     vec_col: str,
     id_col: str,
     k: int = 5,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact brute-force cosine top-k. Ties broken by neighbor id for
     determinism (cosine rounded to 1e-6 before ranking so float jitter
-    cannot flip ranks between runs).
+    cannot flip ranks between runs). A query never lists its own id as a
+    neighbor, as in every top-k search here.
 
     Both sides are L2-normalized JVM-side. The query matrix ships to
     executors as an explicit ``sc.broadcast`` — the same driver→executor
@@ -73,11 +73,11 @@ def cosine_topk(
     if isinstance(
         corpus.schema[id_col].dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     ):
-        scored = _scan_topk(c, q, k, exclude_self)
+        scored = _scan_topk(c, q, k)
     else:
-        joined = c.join(F.broadcast(q), F.lit(True))
-        if exclude_self:
-            joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+        joined = c.join(F.broadcast(q), F.lit(True)).filter(
+            F.col("query_id") != F.col("neighbor_id")
+        )
         scored = joined.select(
             "query_id", "neighbor_id", _dot(F.col("__qv"), F.col("__cv")).alias("cosine")
         )
@@ -88,7 +88,7 @@ def cosine_topk(
     )
 
 
-def _scan_topk(c: DataFrame, q: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+def _scan_topk(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     """Per-batch top-k candidates of :func:`cosine_topk`'s Arrow scan:
     (query_id, neighbor_id, cosine) from normalized corpus ``c``
     (neighbor_id, __cv) and queries ``q`` (query_id, __qv)."""
@@ -109,9 +109,7 @@ def _scan_topk(c: DataFrame, q: DataFrame, k: int, exclude_self: bool) -> DataFr
             m = np.array(pdf["__cv"].tolist(), dtype="float64")
             sims = m @ bqmat  # B×Q
             nids = pdf["neighbor_id"].to_numpy()
-            if exclude_self:
-                sims = sims.copy()
-                sims[nids[:, None] == bqids[None, :]] = -np.inf
+            sims[nids[:, None] == bqids[None, :]] = -np.inf
             # per-batch prune with the SAME tie-break the final window
             # uses (rounded cosine desc, neighbor id asc) — an
             # argpartition on raw sims could drop the global tie-winner
@@ -230,7 +228,6 @@ def ivf_search(
     id_col: str,
     k: int = 5,
     n_probe: int = 3,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Search a built/loaded IVF index: queries explode to their n_probe
     nearest cells and equi-join the assignments on cell id.
@@ -247,9 +244,7 @@ def ivf_search(
     q = register_persisted(q.persist())
     probed = sorted(r["__cell"] for r in q.select("__cell").distinct().collect())
     index = index.filter(F.col("__cell").isin(probed))
-    joined = index.join(q, "__cell")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+    joined = index.join(q, "__cell").filter(F.col("query_id") != F.col("neighbor_id"))
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
     )
@@ -272,7 +267,6 @@ def ivf_cosine_topk(
     sample_rows: int = 2048,
     kmeans_iters: int = 5,
     seed: int = 7,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k with an IVF (inverted-file) index.
 
@@ -293,9 +287,7 @@ def ivf_cosine_topk(
     q = _normalized(queries, vec_col, id_col, "query_id", "__qv").withColumn(
         "__cell", F.explode(F.slice(_nearest_cells_udf(cents)(F.col("__qv")), 1, n_probe))
     )
-    joined = c.join(q, "__cell")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+    joined = c.join(q, "__cell").filter(F.col("query_id") != F.col("neighbor_id"))
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
     )
@@ -337,7 +329,6 @@ def lsh_cosine_topk(
     n_planes: int = 8,
     probe_hamming: int = 1,
     seed: int = 7,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k with sign-LSH bucketing + multiprobe.
 
@@ -367,9 +358,7 @@ def lsh_cosine_topk(
         "__bucket",
         F.explode(F.array(*[F.col("__bucket0").bitwiseXOR(F.lit(m)) for m in masks])),
     )
-    joined = c.join(q, "__bucket")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+    joined = c.join(q, "__bucket").filter(F.col("query_id") != F.col("neighbor_id"))
     sim = _dot(F.col("__qv"), F.col("__cv"))
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()

@@ -81,13 +81,6 @@ def normalize_text_expr(
     return c
 
 
-def normalize_documents(
-    df: DataFrame, text_col: str = "text", out_col: str = "norm_text", **opts
-) -> DataFrame:
-    """Append the normalized text column (see ``normalize_text_expr``)."""
-    return df.withColumn(out_col, normalize_text_expr(F.col(text_col), **opts))
-
-
 def corpus_report(
     df: DataFrame, text_col: str = "text", source_col: str = "source"
 ) -> DataFrame:

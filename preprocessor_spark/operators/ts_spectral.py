@@ -437,22 +437,6 @@ def _change_quantiles_grid(v: np.ndarray) -> dict[str, float]:
     return out
 
 
-def _change_quantiles(
-    v: np.ndarray, ql: float, qh: float, isabs: bool, f_agg: str
-) -> float:
-    lo, hi = np.quantile(v, [ql, qh])
-    if lo == hi:
-        return 0.0
-    inside = (v >= lo) & (v <= hi)
-    sel = inside[:-1] & inside[1:]
-    res = np.diff(v)[sel]
-    if len(res) == 0:
-        return 0.0
-    if isabs:
-        res = np.abs(res)
-    return float(getattr(np, f_agg)(res))
-
-
 def _chunk_aggregate(v: np.ndarray, chunk_len: int, f_agg: str) -> np.ndarray:
     out = []
     for i in range(0, len(v), chunk_len):

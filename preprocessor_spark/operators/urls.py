@@ -68,13 +68,6 @@ MULTIPART_SUFFIXES = (
 )
 
 
-def _host(url: Column) -> Column:
-    """Lowercased host (no port) of a URL with or without a scheme."""
-    rest = F.regexp_replace(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://", "")
-    hostport = F.regexp_extract(rest, r"^([^/?#]*)", 1)
-    return F.lower(F.regexp_extract(hostport, r"^([^:]*)", 1))
-
-
 def registered_domain(host: Column) -> Column:
     """eTLD+1 under the embedded suffix table: ``www.`` stripped, last two
     labels — or three when the last two are a known multi-part suffix."""

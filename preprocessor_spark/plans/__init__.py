@@ -1,5 +1,5 @@
-"""Plan inspection helpers: assert the physical plan we want actually shows up
-(pushed filters, broadcast joins, whole-stage codegen)."""
+"""Plan inspection: the formatted physical plan, in which callers look for
+pushed filters, broadcast joins and whole-stage codegen."""
 
 from __future__ import annotations
 
@@ -8,17 +8,3 @@ from pyspark.sql import DataFrame
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def plan_contains(df: DataFrame, needle: str) -> bool:
-    return needle in formatted_plan(df)
-
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = formatted_plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
-def assert_pushed_filters(df: DataFrame) -> None:
-    plan = formatted_plan(df)
-    assert "PushedFilters: [" in plan and "PushedFilters: []" not in plan, plan

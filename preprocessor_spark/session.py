@@ -31,12 +31,6 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{pkg_parent}{os.pathsep}{existing}" if existing else pkg_parent
         )
-    # transformWithStateInPandas workers speak protobuf to the JVM; when no
-    # real google.protobuf is installed, expose the wire-format shim to this
-    # process and (via PYTHONPATH, which the workers inherit) to executors.
-    from preprocessor_spark.protoshim import install as _install_protoshim
-
-    _install_protoshim()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

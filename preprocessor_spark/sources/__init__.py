@@ -306,11 +306,6 @@ def write_jsonl(
     w.json(path)
 
 
-def from_pandas(spark: SparkSession, pdf) -> DataFrame:
-    """pandas ingest — reference `preprocessor.py:141-143` equivalent."""
-    return spark.createDataFrame(pdf)
-
-
 def to_pandas(df: DataFrame, max_rows: int | None = None):
     """pandas egress — reference `preprocessor.py:458-459`. Driver-side;
     optionally guarded by a row limit since collecting 100 TB is not a plan."""

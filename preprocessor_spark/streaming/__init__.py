@@ -5,7 +5,7 @@ the canonical streaming shapes the engine supports, built so that the same
 transformation functions apply to batch and streaming frames (the Spark
 unified-API design):
 
-- tumbling / sliding windowed aggregation (`F.window`)
+- tumbling windowed aggregation (`F.window`)
 - session windows (`F.session_window`)
 - watermark-bounded state (`withWatermark`) for late data
 - stateful streaming dedup (`dropDuplicatesWithinWatermark`)
@@ -34,17 +34,6 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
         .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame, window: str = "1 hour", slide: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
     )
 
 
@@ -348,160 +337,6 @@ def cusum_stream(
 
     return events.groupBy(key).applyInPandasWithState(
         _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def stateful_running_totals_tws(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """The same per-key running (count, sum) via Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState``: state lives in named typed handles
-    (ValueState here; ListState/MapState/timers also exist) managed by the
-    StatefulProcessor lifecycle instead of one opaque tuple, and the
-    operator composes with the RocksDB state store + changelog
-    checkpointing. Kept alongside the GroupState twin so both custom
-    stateful surfaces stay exercised; the drained output is asserted equal
-    to the batch groupBy (and therefore to the older twin) in tests.
-
-    Runtime requirements (both satisfied in-repo): the worker<->JVM state
-    protocol is protobuf — served by the real google.protobuf when
-    installed, else by preprocessor_spark.protoshim (pure wire-format
-    shim, installed by get_spark) — and the state store must support
-    multiple column families, i.e. set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...state.RocksDBStateStoreProvider`` (bundled in the Spark JVM)
-    before starting the query."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    key_type = events.schema[key].dataType.simpleString()
-    out_schema = f"{key} {key_type}, n_events bigint, sum_value double"
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals",
-                StructType(
-                    [StructField("n", LongType()), StructField("s", DoubleType())]
-                ),
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            n, s = (self._state.get() or (0, 0.0)) if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, s))
-            yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n], "sum_value": [s]})
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key).transformWithStateInPandas(
-        RunningTotals(), out_schema, "Update", "None"
-    )
-
-
-def stateful_sessionize_tws(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: float = 1800.0,
-) -> DataFrame:
-    """Timer-driven streaming sessionization via transformWithStateInPandas
-    — the full StatefulProcessor surface in one operator: ListState buffers
-    the open session's event times, event-time TIMERS flush a session whose
-    gap elapses without new events (registerTimer/deleteTimer/listTimers +
-    handleExpiredTimer), and in-batch gaps close sessions synchronously.
-    Emits one Append-mode row per CLOSED session: (key, session_start,
-    session_end, n_events). The batch twin is operators/sessions.py::
-    session_stats minus each key's trailing open session
-    (equivalence-tested across a checkpointed restart).
-
-    State per key is one open session's timestamps + one timer — RocksDB-
-    resident, so a 100 TB stream's state scales with live keys, not
-    history. Requires the RocksDB state store provider (see
-    stateful_running_totals_tws)."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-    from pyspark.sql.types import TimestampNTZType
-
-    # watermarks require TIMESTAMP; parquet NANOS-normalized tables come in
-    # as TIMESTAMP_NTZ (session TZ is UTC, so the cast is value-preserving)
-    if isinstance(events.schema[ts_col].dataType, TimestampNTZType):
-        events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-
-    key_type = events.schema[key].dataType.simpleString()
-    out_schema = (
-        f"{key} {key_type}, session_start timestamp, session_end timestamp, "
-        "n_events bigint"
-    )
-    gap_ms = int(gap_seconds * 1000)
-
-    class Sessionizer(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._buf = handle.getListState("open_events", "ts timestamp")
-            self._handle = handle
-
-        def _emit(self, key_tuple, sessions):
-            return pd.DataFrame(
-                {
-                    key: [key_tuple[0]] * len(sessions),
-                    "session_start": [s[0] for s in sessions],
-                    "session_end": [s[-1] for s in sessions],
-                    "n_events": [len(s) for s in sessions],
-                }
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            new_ts = []
-            for pdf in rows:
-                new_ts.extend(pdf[ts_col].tolist())
-            old = [r[0] for r in self._buf.get()] if self._buf.exists() else []
-            allts = sorted(old + new_ts)
-            sessions, cur = [], [allts[0]]
-            for t in allts[1:]:
-                if (t - cur[-1]).total_seconds() > gap_seconds:
-                    sessions.append(cur)
-                    cur = [t]
-                else:
-                    cur.append(t)
-            # re-arm: exactly one live timer per key, at open-end + gap
-            for stale in list(self._handle.listTimers()):
-                self._handle.deleteTimer(stale)
-            self._handle.registerTimer(
-                int(cur[-1].timestamp() * 1000) + gap_ms
-            )
-            self._buf.put([(t,) for t in cur])
-            if sessions:
-                yield self._emit(key_tuple, sessions)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            key_tuple = key
-            buf = sorted(
-                r[0] for r in (self._buf.get() if self._buf.exists() else [])
-            )
-            # a stale timer (same-batch input already re-armed) must not
-            # flush the new open session early
-            if buf and expiredTimerInfo.getExpiryTimeInMs() >= int(
-                buf[-1].timestamp() * 1000
-            ) + gap_ms:
-                self._buf.clear()
-                yield self._emit(key_tuple, [buf])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark(ts_col, "0 seconds")
-        .groupBy(key)
-        .transformWithStateInPandas(Sessionizer(), out_schema, "Append", "eventTime")
     )
 
 

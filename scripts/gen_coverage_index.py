@@ -25,7 +25,7 @@ def build_index() -> str:
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    window = set(entry._GRADED_WINDOW)
+    window = set(list(queries)[:50])
     lines = [
         MARKER,
         "",

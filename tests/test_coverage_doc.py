@@ -36,7 +36,7 @@ def test_registry_index_gradings_match_code():
     rows = dict(re.findall(r"^\| `([^`]+)` \| (\S+) \|", index, re.M))
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    window = set(entry._GRADED_WINDOW)
+    window = set(list(queries)[:50])
     assert set(rows) == set(queries), (
         "index rows != registry; run scripts/gen_coverage_index.py "
         f"(only-in-doc={sorted(set(rows) - set(queries))[:5]}, "

@@ -1805,82 +1805,29 @@ def test_png_decode_adam7_interlaced():
     np.testing.assert_array_equal(np.round(got * 255.0).astype(np.uint8), tiny)
 
 
-def test_udtf_and_native_sentence_split_agree(spark):
-    from preprocessor_spark.functions.udx import (
-        split_sentences_native,
-        split_sentences_udtf,
-    )
-
-    rows = [
-        (0, "First sentence. Second one! Third? fourth trails"),
-        (1, "single"),
-        (2, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    a = split_sentences_udtf(df, "doc_id", "text").toPandas()
-    b = split_sentences_native(df, "doc_id", "text").toPandas()
-    key = ["doc_id", "pos"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert len(a) == 5  # 4 + 1 + 0
-    pd.testing.assert_frame_equal(a, b.astype(a.dtypes.to_dict()))
-    assert a.loc[(a.doc_id == 0) & (a.pos == 0), "sentence"].iloc[0] == "First sentence."
-    assert a.loc[(a.doc_id == 0) & (a.pos == 3), "n_words"].iloc[0] == 2
-
-
-def test_weighted_mean_grouped_agg_udaf(spark):
-    from preprocessor_spark.functions.udx import weighted_mean_udaf
-
-    rows = [
-        ("a", 10.0, 1.0),
-        ("a", 20.0, 3.0),
-        ("b", 5.0, None),   # null weight ignored
-        ("b", 7.0, 2.0),
-        ("c", None, 1.0),   # null value ignored -> no mass -> null
-    ]
-    df = spark.createDataFrame(rows, "k string, v double, w double")
-    out = {r["k"]: r["wm"] for r in
-           df.groupBy("k").agg(weighted_mean_udaf("v", "w").alias("wm")).collect()}
-    assert abs(out["a"] - 17.5) < 1e-9
-    assert abs(out["b"] - 7.0) < 1e-9
-    assert out["c"] is None
-
-
 def test_cogrouped_asof_matches_union_merge(spark):
-    from preprocessor_spark.operators.asof import asof_join, asof_join_cogrouped
+    """Per-key backward as-of equals pandas' ``merge_asof`` by the same key."""
+    from preprocessor_spark.operators.asof import asof_join
 
-    purchases = spark.createDataFrame(
-        [(1, 10.0), (1, 25.0), (2, 5.0), (3, 7.0)], "u bigint, ts double"
-    )
-    views = spark.createDataFrame(
-        [(1, 8.0, 100.0), (1, 20.0, 200.0), (2, 9.0, 300.0)],
-        "u bigint, ts double, value double",
-    )
+    p_rows = [(1, 10.0), (1, 25.0), (2, 5.0), (3, 7.0)]
+    v_rows = [(1, 8.0, 100.0), (1, 20.0, 200.0), (2, 9.0, 300.0)]
+    purchases = spark.createDataFrame(p_rows, "u bigint, ts double")
+    views = spark.createDataFrame(v_rows, "u bigint, ts double, value double")
     a = asof_join(purchases, views, on="ts", by=["u"]).toPandas()
-    b = asof_join_cogrouped(purchases, views, on="ts", by=["u"]).toPandas()
+    b = pd.merge_asof(
+        pd.DataFrame(p_rows, columns=["u", "ts"]).sort_values("ts"),
+        pd.DataFrame(v_rows, columns=["u", "ts", "r_value"]).sort_values("ts"),
+        on="ts",
+        by="u",
+        direction="backward",
+    )
     key = ["u", "ts"]
     cols = ["u", "ts", "r_value"]
     a2 = a[cols].sort_values(key).reset_index(drop=True)
     b2 = b[cols].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a2, b2)
-    # user 3 has no views at all -> null match via both paths
+    # user 3 has no views at all -> null match
     assert a2.loc[a2.u == 3, "r_value"].isna().all()
-
-
-def test_observed_stats_free_metrics(spark, sf_dir):
-    from preprocessor_spark.observe import null_count_metrics, with_observed_stats
-    from pyspark.sql import functions as F
-
-    d = spark.read.parquet(f"{sf_dir}/customer.parquet").withColumn(
-        "maybe", F.when(F.col("c_acctbal") > 0, F.col("c_acctbal"))
-    )
-    observed, obs = with_observed_stats(d, null_count_metrics(d, ["maybe"]))
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    n = d.count()
-    n_null = d.filter(F.col("maybe").isNull()).count()
-    assert got["n_rows"] == n
-    assert got["n_null_maybe"] == n_null
 
 
 def test_substring_dup_windows_planted(spark):

@@ -158,6 +158,25 @@ def test_graded_window_contract():
     assert not ghost, f"bench headline entries not in queries(): {ghost}"
 
 
+# sha256 of "\n".join(queries()) and of json.dumps(oracle_sql(), sort_keys=True).
+# A change that moves, adds or drops a query, or edits an oracle's text,
+# must update these on purpose and say so.
+QUERIES_ORDER_SHA256 = "c405732551663a9871f59fb6ede5a0f2ae577060db33f05abd614180789000d5"
+ORACLE_SQL_SHA256 = "07023ed87e41e422152c9eb1443b38900ef5f3b37b75ec70c001e241c3d9ae88"
+
+
+def test_registry_order_and_oracle_text_pinned():
+    """Driver contract pin: queries() order and oracle_sql() text are
+    byte-identical to their recorded hashes."""
+    import hashlib
+    import json
+
+    order = hashlib.sha256("\n".join(QUERIES).encode()).hexdigest()
+    oracles = hashlib.sha256(json.dumps(ORACLES, sort_keys=True).encode()).hexdigest()
+    assert order == QUERIES_ORDER_SHA256, "queries() order or names changed"
+    assert oracles == ORACLE_SQL_SHA256, "oracle_sql() text changed"
+
+
 def test_minhash_corpus_dedup_invariants_duckdb(spark):
     """Round-3 verdict task 7: the end-to-end minhash corpus dedup is
     rows-only by necessity (hash-family specific), but its EXACT invariants

@@ -966,63 +966,6 @@ def test_xml_source_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_transform_with_state_equals_group_state_twin(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas running totals must equal the
-    batch groupBy (and hence the applyInPandasWithState twin) after a
-    full availableNow drain."""
-    import pandas as pd
-
-    # protobuf comes from the real runtime or preprocessor_spark.protoshim
-    # (installed by get_spark); either way this import must work now
-    import google.protobuf.descriptor  # noqa: F401
-    from preprocessor_spark.streaming import (
-        read_events_stream,
-        run_available_now,
-        stateful_running_totals_tws,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(10),
-            "ts": pd.to_datetime(["2024-01-01 00:00:00"] * 10),
-            "user_id": [1, 1, 1, 2, 2, 3, 3, 3, 3, 4],
-            "event_type": ["click"] * 10,
-            "value": [float(i) for i in range(10)],
-            "props": ["{}"] * 10,
-        }
-    )
-    src = str(tmp_path / "tws_events")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = read_events_stream(spark, src)
-    # transformWithState needs a multi-column-family store: RocksDB (the
-    # production provider, bundled in the Spark JVM), not the HDFS default
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        run_available_now(
-            stateful_running_totals_tws(stream), "tws_state", output_mode="update"
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    out = spark.table("tws_state").toPandas()
-    final = out.groupby("user_id").last().reset_index()
-    expected = (
-        pdf.groupby("user_id")
-        .agg(n_events=("value", "size"), sum_value=("value", "sum"))
-        .reset_index()
-    )
-    m = final.merge(expected, on="user_id", suffixes=("", "_exp"))
-    assert len(m) == 4
-    assert (m.n_events == m.n_events_exp).all()
-    assert (m.sum_value == m.sum_value_exp).all()
-
-
 def test_cosine_topk_engines_agree(spark, sf_dir):
     """The Arrow scan (integral ids) and the expression fallback that a
     non-integral id column selects must produce identical top-k —

@@ -766,37 +766,6 @@ def test_parse_urls_canonical_idempotent_property(spark):
 # ------------------------------------------------------------ applyInArrow
 
 
-def test_grouped_stats_arrow_matches_pandas_udaf(spark):
-    """applyInArrow twin must agree with the grouped-agg pandas UDAF on
-    every group (including a group whose weights are all null/zero)."""
-    from preprocessor_spark.functions import udx
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        F.col("l_returnflag").alias("g"),
-        F.col("l_extendedprice").alias("v"),
-        F.col("l_quantity").alias("w"),
-    )
-    got = {
-        r["g"]: (round(r["weighted_mean"], 9), r["n"])
-        for r in udx.grouped_stats_arrow(li, "g", "v", "w").collect()
-    }
-    wm = {
-        r["g"]: round(r["wm"], 9)
-        for r in li.groupBy("g")
-        .agg(udx.weighted_mean_udaf(F.col("v"), F.col("w")).alias("wm"))
-        .collect()
-    }
-    counts = {r["g"]: r["n"] for r in li.groupBy("g").agg(F.count(F.lit(1)).alias("n")).collect()}
-    want = {g: (wm[g], counts[g]) for g in wm}
-    assert got == want and len(got) >= 3
-    # degenerate group: all-null weights -> null mean, n intact
-    deg = spark.createDataFrame(
-        [("x", 1.0, None), ("x", 2.0, None)], "g string, v double, w double"
-    )
-    row = udx.grouped_stats_arrow(deg, "g", "v", "w").collect()[0]
-    assert row["weighted_mean"] is None and row["n"] == 2
-
-
 def test_warc_push_filters_prunes_at_parse(tmp_path, spark):
     from pyspark.sql.datasource import EqualTo, GreaterThan
 
@@ -1038,32 +1007,3 @@ def test_ivf_index_append_without_retraining(tmp_path, spark):
 # ------------------------------------------------------- polymorphic UDTF
 
 
-def test_polymorphic_udtf_matches_from_csv(spark):
-    """The analyze()-schema'd UDTF must parse identically to the JVM
-    from_csv twin, for two different literal schemas through the SAME
-    registered function."""
-    from preprocessor_spark.functions.udtf_poly import make_delimited_parse_udtf
-
-    spark.udtf.register("delimited_parse", make_delimited_parse_udtf())
-    spark.createDataFrame(
-        [("1|x|2.5",), ("2|y|",), (None,)], "line string"
-    ).createOrReplaceTempView("lines")
-    got = spark.sql(
-        """SELECT t.* FROM lines, LATERAL delimited_parse(
-               line, 'a int, b string, c double', '|') t"""
-    )
-    assert [f.simpleString() for f in got.schema.fields] == [
-        "a:int", "b:string", "c:double"
-    ]
-    twin = (
-        spark.table("lines")
-        .where("line IS NOT NULL")
-        .select(F.from_csv("line", "a int, b string, c double", {"sep": "|"}).alias("r"))
-        .select("r.*")
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, twin.collect()))
-    # same function, different layout: schema follows the literal argument
-    got2 = spark.sql(
-        "SELECT t.* FROM lines, LATERAL delimited_parse(line, 'x string', ';') t"
-    )
-    assert [f.simpleString() for f in got2.schema.fields] == ["x:string"]

@@ -24,104 +24,6 @@ def _warc_record(rid: bytes, uri: bytes, body: bytes) -> bytes:
     return hdr + payload + b"\r\n\r\n"
 
 
-class TestTimerSessionization:
-    def test_tws_sessionize_timers_and_restart(self, spark, tmp_path):
-        """Timer-driven sessionization exercises the full StatefulProcessor
-        surface — ListState buffer, registerTimer/deleteTimer/listTimers,
-        handleExpiredTimer — across a checkpointed restart: in-batch gaps
-        close sessions synchronously; a key with NO new input has its open
-        session flushed by its event-time timer once the watermark passes;
-        the re-armed key's open session is NOT flushed early."""
-        import pandas as pd
-
-        from preprocessor_spark.streaming import stateful_sessionize_tws
-
-        def write(name, rows):
-            pdf = pd.DataFrame(
-                {
-                    "event_id": range(len(rows)),
-                    "ts": pd.to_datetime([t for _, t in rows]),
-                    "user_id": [u for u, _ in rows],
-                    "event_type": ["c"] * len(rows),
-                    "value": [1.0] * len(rows),
-                    "props": ["{}"] * len(rows),
-                }
-            )
-            import glob as g
-            import shutil
-
-            tmp = str(tmp_path / f"stage_{name}")
-            spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(tmp)
-            (tmp_path / "src").mkdir(exist_ok=True)
-            part = g.glob(f"{tmp}/part-*.parquet")[0]
-            shutil.copy(part, str(tmp_path / "src" / f"{name}.parquet"))
-
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        ckpt = str(tmp_path / "ckpt")
-        rows_out = []
-
-        def drain():
-            stream = (
-                spark.readStream.schema(
-                    "event_id long, ts timestamp, user_id long, "
-                    "event_type string, value double, props string"
-                )
-                .option("maxFilesPerTrigger", 100)
-                .parquet(str(tmp_path / "src"))
-            )
-            q = (
-                stateful_sessionize_tws(stream, gap_seconds=1800)
-                .writeStream.foreachBatch(
-                    lambda bdf, _bid: rows_out.extend(
-                        (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-                        for r in bdf.collect()
-                    )
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        try:
-            write(
-                "a",
-                [
-                    (1, "2024-01-01 00:00:00"),
-                    (1, "2024-01-01 00:10:00"),
-                    (1, "2024-01-01 02:00:00"),  # >30min gap: closes s1
-                    (2, "2024-01-01 00:00:00"),
-                ],
-            )
-            drain()
-            # in-batch gap closes u1's first session; u2's TIMER fires in
-            # run 1's trailing no-data micro-batch (watermark 02:00 passed
-            # its 00:30 expiry) — a timer flush with no new u2 input ever
-            assert (1, "2024-01-01 00:00:00", "2024-01-01 00:10:00", 2) in rows_out
-            assert (2, "2024-01-01 00:00:00", "2024-01-01 00:00:00", 1) in rows_out
-            n_run1 = len(rows_out)
-
-            write("b", [(1, "2024-01-01 06:00:00")])
-            drain()
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-        got = sorted(rows_out)
-        # run 2 (checkpointed restart): u1's open [02:00] closes on the
-        # in-batch gap against state restored from the checkpoint
-        assert (1, "2024-01-01 02:00:00", "2024-01-01 02:00:00", 1) in got
-        # u1's new open session [06:00] must NOT appear (stale-timer guard)
-        assert not any(r[1] == "2024-01-01 06:00:00" for r in got)
-        assert len(got) == n_run1 + 1 == 3
-
-
 class TestStreamingWebPipeline:
     def test_streaming_web_capstone_checkpoint_restart(self, spark, tmp_path):
         """The round-5 batch web capstone's STREAMING twin: tail a crawl
@@ -317,70 +219,6 @@ class TestIvfPartitionPruning:
             for r in loaded.select(F.input_file_name().alias("f")).distinct().collect()
         ]
         assert len(set(all_files)) > len(set(files))
-
-
-class TestProtoShim:
-    """Wire-format shim (preprocessor_spark.protoshim) that lets Spark's
-    transformWithStateInPandas protocol run without a protobuf install.
-    The real end-to-end proof is test_round4_ops'
-    test_transform_with_state_equals_group_state_twin, which now executes
-    the full worker<->JVM state protocol through the shim."""
-
-    @pytest.fixture(autouse=True)
-    def _shim(self):
-        from preprocessor_spark.protoshim import install
-
-        install()
-
-    def test_generated_module_roundtrip(self):
-        from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
-
-        cmd = sm.StateCallCommand(stateName="totals", schema="n BIGINT")
-        req = sm.StateRequest(
-            version=2, statefulProcessorCall=sm.StatefulProcessorCall(getValueState=cmd)
-        )
-        back = sm.StateRequest()
-        back.ParseFromString(req.SerializeToString())
-        assert back.version == 2
-        assert back.WhichOneof("method") == "statefulProcessorCall"
-        assert back.statefulProcessorCall.getValueState.stateName == "totals"
-        assert back.statefulProcessorCall.getValueState.schema == "n BIGINT"
-
-    def test_defaults_negative_and_repeated(self):
-        from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
-
-        # proto3 defaults on a parse of empty bytes
-        r = sm.StateResponseWithListGet()
-        r.ParseFromString(b"")
-        assert r.statusCode == 0 and r.errorMessage == "" and r.value == []
-        assert r.requireNextFetch is False
-        # negative int64 (10-byte varint) round trip
-        t = sm.RegisterTimer(expiryTimestampMs=-5)
-        back = sm.RegisterTimer()
-        back.ParseFromString(t.SerializeToString())
-        assert back.expiryTimestampMs == -5
-        # repeated message field
-        it = sm.StateResponseWithMapIterator(
-            kvPair=[sm.KeyAndValuePair(key=b"a", value=b"1")]
-        )
-        b2 = sm.StateResponseWithMapIterator()
-        b2.ParseFromString(it.SerializeToString())
-        assert [(p.key, p.value) for p in b2.kvPair] == [(b"a", b"1")]
-
-    def test_unknown_fields_skipped(self):
-        from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
-
-        # field 12 varint + field 13 length-delimited, then field 1 varint
-        blob = bytes([12 << 3 | 0, 7, 13 << 3 | 2, 2, 0xAB, 0xCD, 1 << 3 | 0, 5])
-        r = sm.StateResponse()
-        r.ParseFromString(blob)
-        assert r.statusCode == 5
-
-    def test_enum_constants_match_proto(self):
-        from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
-
-        assert (sm.PRE_INIT, sm.CREATED, sm.INITIALIZED) == (0, 1, 2)
-        assert (sm.DATA_PROCESSED, sm.TIMER_PROCESSED, sm.CLOSED) == (3, 4, 5)
 
 
 class TestAvroPySource:

@@ -1,9 +1,8 @@
 """Round-7 fixes: avro_py save modes + pre-epoch timestamps, fallback
-option passthrough, protoshim auto-vivification, DST-safe cohort offsets.
+option passthrough, DST-safe cohort offsets.
 
 Reference parity notes: the save-mode contract mirrors Spark's
-DataFrameWriter modes; the protobuf semantics mirror real protobuf
-message auto-vivification (write-through submessage presence).
+DataFrameWriter modes.
 """
 
 from __future__ import annotations
@@ -89,35 +88,6 @@ class TestAvroPyRound7:
             write_avro(df, str(tmp_path / "opts2"), avroSchema="{}")
         with pytest.raises(NotImplementedError):
             read_avro(spark, dest, avroSchema="{}")
-
-
-class TestProtoShimAutoViv:
-    def test_submessage_write_through(self):
-        """msg.sub.field = x must mutate the STORED submessage and appear
-        on the wire (round-6 advice: throwaway default lost writes)."""
-        from preprocessor_spark.protoshim import install
-
-        install()
-        from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
-
-        req = sm.StateRequest()
-        req.statefulProcessorCall.getValueState.stateName = "totals"
-        assert req.statefulProcessorCall.getValueState.stateName == "totals"
-        back = sm.StateRequest()
-        back.ParseFromString(req.SerializeToString())
-        assert back.statefulProcessorCall.getValueState.stateName == "totals"
-
-    def test_untouched_autoviv_not_serialized(self):
-        from preprocessor_spark.protoshim import install
-
-        install()
-        from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
-
-        req = sm.StateRequest(version=3)
-        _ = req.statefulProcessorCall  # read-only touch
-        blob = req.SerializeToString()
-        only_version = sm.StateRequest(version=3).SerializeToString()
-        assert blob == only_version
 
 
 class TestTsFeaturesTier2:
