@@ -3109,16 +3109,14 @@ def knn_graph_nndescent(spark, sf_dir):
 
 
 def kmeans_embeddings(spark, sf_dir):
-    """Distributed Lloyd k-means, exact-replay variant (operators/
-    clustering.py fit_kmeans_exact): k=8, 4 pinned iterations over the
+    """Distributed Lloyd k-means (operators/clustering.py
+    fit_kmeans_exact): k=8, 4 pinned iterations over the
     FULL embeddings table — per-iteration cost is one narrow mapInPandas
     scan emitting |partitions| integer sketches (counts + 1e9-grid
     coordinate sums), merged driver-side as Python ints; data never
     collects. VALUE-oracled: quantile seeding, int64-grid distances and
     two-step centroid division make assignments and SSE bit-replayable by
-    the DuckDB oracle (the LPA/BFS integer-fixpoint discipline). The
-    float/BLAS production fit (fit_kmeans) stays pytest-graded
-    (tests/test_round6_ops.py invariants)."""
+    the DuckDB oracle (the LPA/BFS integer-fixpoint discipline)."""
     from preprocessor_spark.operators.clustering import (
         fit_kmeans_exact,
         kmeans_cluster_stats_exact,
@@ -3365,13 +3363,12 @@ def image_phash_neardup(spark, sf_dir):
     rendered on executors once per sf-dir, outside the timed body) is
     decoded by the pure-numpy PGM decoder, dHashed (area-pooled 9-wide
     gradient bits, batch-vectorized reduceat pooling), then CLUSTERED at
-    Hamming≤3 — the round-10 scale-safe default (one output row per image
-    at any duplication factor): identical hashes collapse to one
+    Hamming≤3 (one output row per image at any duplication factor):
+    identical hashes collapse to one
     representative, the pigeonhole chunk equi-join + JVM bit_count recheck
     builds the rep-level near-pair graph, connected components label it,
     and members inherit their component through the exact-hash map —
-    member pairs NEVER materialize (the minhash_dedup_corpus shape; the
-    quadratic pair list is the opt-in phash_neardup_pairs). No cross
+    member pairs NEVER materialize (the minhash_dedup_corpus shape). No cross
     product (plan-asserted), no driver-side data movement. By construction
     same-bucket images hash identically and cross-bucket patterns are
     independent, so each cluster is exactly a bucket clique with its min
@@ -5625,8 +5622,7 @@ def graph_wsp_custsupp(spark, sf_dir):
 
 def forecast_hw_users(spark, sf_dir):
     """Additive Holt-Winters per user series (operators/holt.py
-    holt_winters_forecast, period 6; streaming twin
-    streaming.holt_winters_stream with pytest-exact batch equivalence):
+    holt_winters_forecast, period 6):
     level + trend + seasonal-ring state, one keyed gather + one Arrow
     recursion stage. VALUE-oracled since round 10 — the deepest fold
     promotion yet: the triple recursion (level, trend, season-6 ring)

@@ -195,19 +195,3 @@ def bpe_token_stats(
         ).alias("chars_per_token"),
     )
     return agg
-
-
-def save_bpe(model: BPEModel, path: str) -> None:
-    """JSON persistence — merges only; ranks/vocab re-derive on load."""
-    import json
-
-    with open(path, "w") as f:
-        json.dump({"merges": [list(m) for m in model.merges]}, f)
-
-
-def load_bpe(path: str) -> BPEModel:
-    import json
-
-    with open(path) as f:
-        obj = json.load(f)
-    return BPEModel(merges=tuple(tuple(m) for m in obj["merges"]))

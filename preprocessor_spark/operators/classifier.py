@@ -188,34 +188,3 @@ def score_quality_udf(model: QualityClassifier):
         return pd.Series(1.0 / (1.0 + np.exp(-(X @ w + b))))
 
     return _score
-
-
-def save_classifier(model: QualityClassifier, path: str) -> None:
-    """JSON persistence (weights are ≤ dim doubles — driver-scale)."""
-    import json
-
-    with open(path, "w") as f:
-        json.dump(
-            {
-                "weights": model.weights.tolist(),
-                "bias": model.bias,
-                "dim": model.dim,
-                "ngram": model.ngram,
-                "losses": list(model.losses),
-            },
-            f,
-        )
-
-
-def load_classifier(path: str) -> QualityClassifier:
-    import json
-
-    with open(path) as f:
-        o = json.load(f)
-    return QualityClassifier(
-        weights=np.asarray(o["weights"], dtype=np.float64),
-        bias=float(o["bias"]),
-        dim=int(o["dim"]),
-        ngram=int(o["ngram"]),
-        losses=tuple(o["losses"]),
-    )

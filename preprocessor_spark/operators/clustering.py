@@ -1,33 +1,19 @@
-"""Distributed k-means (Lloyd's algorithm) over embedding columns.
+"""Distributed k-means (Lloyd's algorithm) and DBSCAN over embedding columns.
 
 The rest of the embedding family trains on bounded driver samples (IVF
 coarse quantizers, SemDeDup's spherical centroids, PQ codebooks — all
-deliberately sample-trained, as their references do). This module is the
-full-data counterpart: every Lloyd iteration assigns and re-estimates over
-the ENTIRE table, with the driver only ever seeing per-partition sketch
-vectors — the same movement pattern as the quality classifier's gradient
-sketches (:mod:`preprocessor_spark.operators.classifier`):
-
-- init: k-means++ (D² seeding, Arthur & Vassilvitskii SODA'07) on a
-  bounded deterministic sample (``orderBy(id).limit(n)`` — a TakeOrdered,
-  never a full collect);
-- iterate: ONE narrow ``mapInPandas`` pass per iteration emits, per input
-  partition, a flattened k×(d+2) float64 sketch (per-cluster count, sum
-  vector, SSE). k=256, d=1024 ⇒ ~2 MB per partition — independent of row
-  count, so the driver-side merge is O(|partitions|), not O(rows);
-- merge: partials are SORTED BY PARTITION ID before summation, so float
-  accumulation order is fixed and refits are bit-reproducible for a fixed
-  input layout;
-- empty clusters keep their previous centroid (standard Lloyd fallback).
-
-Assignment is a zero-shuffle Arrow-batched pandas UDF (argmin of squared
-euclidean distance, ties to the lowest cluster id — numpy argmin order).
+deliberately sample-trained, as their references do). The k-means here is
+the full-data counterpart: every Lloyd iteration assigns and re-estimates
+over the ENTIRE table, with the driver only ever seeing per-partition
+sketch vectors (counts and coordinate sums on an integer grid), so the
+driver-side merge is O(|partitions|), not O(rows). Every float hazard is
+pinned to that grid, so a DuckDB oracle replays the whole fit bit-for-bit
+(see the block comment above :func:`fit_kmeans_exact`).
 
 At 100 TB: the per-iteration cost is one full scan (narrow, no shuffle,
 no driver data movement beyond |partitions| sketches), exactly how
 Spark MLlib's KMeans treeAggregate behaves — expressed here over the
-DataFrame/Arrow path so the fitted model stays a plain numpy matrix that
-feeds the IVF/PQ index builders directly.
+DataFrame/Arrow path so the fitted model stays a plain numpy matrix.
 """
 
 from __future__ import annotations
@@ -45,30 +31,10 @@ from pyspark.sql.types import StructType
 class KMeansModel:
     centroids: np.ndarray  # k×d float64
     iterations: int
-    inertia_history: tuple  # driver-merged SSE after each assignment pass
-    shifts: tuple  # max centroid L2 movement per update
 
     @property
     def k(self) -> int:
         return int(self.centroids.shape[0])
-
-
-def _kmeanspp_init(sample: np.ndarray, k: int, seed: int) -> np.ndarray:
-    """D²-weighted seeding on the driver sample. Deterministic RNG."""
-    rng = np.random.RandomState(seed)
-    n = len(sample)
-    first = int(rng.randint(n))
-    cents = [sample[first]]
-    d2 = ((sample - cents[0]) ** 2).sum(axis=1)
-    for _ in range(1, min(k, n)):
-        total = float(d2.sum())
-        if total <= 0.0:  # all remaining points coincide with a centroid
-            idx = int(rng.randint(n))
-        else:
-            idx = int(rng.choice(n, p=d2 / total))
-        cents.append(sample[idx])
-        d2 = np.minimum(d2, ((sample - cents[-1]) ** 2).sum(axis=1))
-    return np.stack(cents)
 
 
 _SKETCH_SCHEMA = StructType.fromJson(
@@ -87,168 +53,9 @@ _SKETCH_SCHEMA = StructType.fromJson(
 )
 
 
-def fit_kmeans(
-    df: DataFrame,
-    vec_col: str,
-    k: int = 8,
-    max_iter: int = 20,
-    tol: float = 1e-6,
-    sample_rows: int = 4096,
-    seed: int = 13,
-    id_col: str | None = None,
-) -> KMeansModel:
-    """Lloyd's k-means over the full table; see module docstring.
-
-    ``id_col`` (when given) makes the init sample deterministic under
-    repartitioning by taking the ``sample_rows`` lowest ids; otherwise the
-    first ``sample_rows`` rows in layout order are used.
-    """
-    vecs = df.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    if id_col is not None:
-        sample_df = (
-            df.select(F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v"))
-            .orderBy("__id")
-            .limit(sample_rows)
-        )
-    else:
-        sample_df = vecs.limit(sample_rows)
-    sample = np.array(
-        [r["__v"] for r in sample_df.select("__v").collect()], dtype="float64"
-    )
-    if len(sample) == 0:
-        raise ValueError("fit_kmeans: empty input")
-    cents = _kmeanspp_init(sample, k, seed)
-    k_eff, d = cents.shape
-
-    from preprocessor_spark.caching import register_persisted
-
-    pinned = register_persisted(vecs.persist())
-    pinned.count()  # materialize once; every iteration rescans the cache
-    inertia_hist: list[float] = []
-    shifts: list[float] = []
-    iters = 0
-    try:
-        for _ in range(max_iter):
-            c_bc = cents.copy()
-
-            def _sketch(it):
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                acc = np.zeros((k_eff, d + 2), dtype="float64")
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    X = np.array(pdf["__v"].tolist(), dtype="float64")
-                    # ||x-c||² = ||x||² - 2x·c + ||c||²; argmin ignores ||x||²
-                    dots = X @ c_bc.T
-                    cn = (c_bc**2).sum(axis=1)
-                    scores = cn[None, :] - 2.0 * dots
-                    a = scores.argmin(axis=1)
-                    xsq = (X**2).sum(axis=1)
-                    sse = xsq + scores[np.arange(len(X)), a]
-                    for c in range(k_eff):
-                        m = a == c
-                        if m.any():
-                            acc[c, 0] += float(m.sum())
-                            acc[c, 1 : d + 1] += X[m].sum(axis=0)
-                            acc[c, d + 1] += float(sse[m].sum())
-                yield pd.DataFrame({"pid": [pid], "s": [acc.ravel()]})
-
-            parts = pinned.mapInPandas(_sketch, schema=_SKETCH_SCHEMA).collect()
-            parts.sort(key=lambda r: r["pid"])  # fixed float-add order
-            total = np.zeros((k_eff, d + 2), dtype="float64")
-            for r in parts:
-                total += np.asarray(r["s"], dtype="float64").reshape(k_eff, d + 2)
-            counts = total[:, 0]
-            new_cents = cents.copy()
-            nz = counts > 0
-            new_cents[nz] = total[nz, 1 : d + 1] / counts[nz, None]
-            inertia_hist.append(float(total[:, d + 1].sum()))
-            shift = float(np.sqrt(((new_cents - cents) ** 2).sum(axis=1)).max())
-            shifts.append(shift)
-            cents = new_cents
-            iters += 1
-            if shift < tol:
-                break
-    finally:
-        pinned.unpersist()
-    return KMeansModel(
-        centroids=cents,
-        iterations=iters,
-        inertia_history=tuple(inertia_hist),
-        shifts=tuple(shifts),
-    )
-
-
-def assign_kmeans(
-    df: DataFrame,
-    vec_col: str,
-    model: KMeansModel,
-    out_col: str = "cluster",
-) -> DataFrame:
-    """argmin-distance cluster id per row — zero-shuffle Arrow projection."""
-    from pyspark.sql.functions import pandas_udf
-
-    cents = model.centroids
-    cn = (cents**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype="float64")
-        scores = cn[None, :] - 2.0 * (X @ cents.T)
-        return pd.Series(scores.argmin(axis=1).astype("int32"))
-
-    return df.withColumn(out_col, _assign(F.col(vec_col).cast("array<double>")))
-
-
-def kmeans_cluster_stats(
-    df: DataFrame,
-    vec_col: str,
-    model: KMeansModel,
-) -> DataFrame:
-    """Per-cluster size and SSE (one keyed agg over the assigned frame)."""
-    cents = model.centroids
-
-    assigned = assign_kmeans(df, vec_col, model, out_col="cluster")
-
-    from pyspark.sql.functions import pandas_udf
-
-    cn = (cents**2).sum(axis=1)
-
-    @pandas_udf("double")
-    def _sq_dist(vs: pd.Series, cl: pd.Series) -> pd.Series:
-        X = np.array(vs.tolist(), dtype="float64")
-        a = cl.to_numpy()
-        d2 = (X**2).sum(axis=1) + cn[a] - 2.0 * np.einsum("ij,ij->i", X, cents[a])
-        return pd.Series(d2)
-
-    return (
-        assigned.withColumn(
-            "__d2", _sq_dist(F.col(vec_col).cast("array<double>"), F.col("cluster"))
-        )
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("__d2").alias("sse"))
-        .orderBy("cluster")
-    )
-
-
-def save_kmeans(model: KMeansModel, path: str) -> None:
-    """float64 .npz persistence — reloads bit-identically."""
-    np.savez(
-        path,
-        centroids=model.centroids,
-        iterations=np.array([model.iterations]),
-        inertia=np.array(model.inertia_history),
-        shifts=np.array(model.shifts),
-    )
-
-
-# --- exact-replay Lloyd variant -------------------------------------------
-# The float k-means above is the production path (BLAS-speed, rows-only
-# grading: BLAS/pairwise accumulation has no SQL twin). This variant pins
-# every float hazard to an integer grid so a DuckDB oracle replays the WHOLE
-# fit bit-for-bit (the LPA/BFS integer-fixpoint discipline):
+# --- exact-replay Lloyd ----------------------------------------------------
+# Every float hazard is pinned to an integer grid so a DuckDB oracle replays
+# the WHOLE fit bit-for-bit (the LPA/BFS integer-fixpoint discipline):
 #   init      — "quantile" seeding: the sample is the sample_rows lowest ids
 #               (a TakeOrdered), centroid j is sample row (j*n)//k — fully
 #               order-determined, no RNG;
@@ -356,9 +163,7 @@ def fit_kmeans_exact(
             cents = new_cents
     finally:
         pinned.unpersist()
-    return KMeansModel(
-        centroids=cents, iterations=iters, inertia_history=(), shifts=()
-    )
+    return KMeansModel(centroids=cents, iterations=iters)
 
 
 def kmeans_cluster_stats_exact(
@@ -393,16 +198,6 @@ def kmeans_cluster_stats_exact(
             ).alias("sse"),
         )
         .orderBy("cluster")
-    )
-
-
-def load_kmeans(path: str) -> KMeansModel:
-    z = np.load(path if path.endswith(".npz") else path + ".npz")
-    return KMeansModel(
-        centroids=z["centroids"],
-        iterations=int(z["iterations"][0]),
-        inertia_history=tuple(float(x) for x in z["inertia"]),
-        shifts=tuple(float(x) for x in z["shifts"]),
     )
 
 

@@ -3,7 +3,6 @@
 No counterpart in the reference (its surface stops at tabular preprocessing);
 these are Spark-first designs per the project north star:
 
-- exact_dedup          — hash-groupBy; one shuffle on the content hash.
 - minhash_lsh_pairs    — shingle → minhash signature → banded LSH buckets →
                          candidate pairs (+ optional exact-Jaccard verify).
                          Signatures come from one Arrow-batched numpy
@@ -36,23 +35,6 @@ from preprocessor_spark.caching import register_persisted
 # Mersenne prime for the minhash universal-hash family. 2^31−1 keeps
 # h*a + b < 2^62, safe under ANSI long arithmetic (no overflow).
 _MERSENNE = (1 << 31) - 1
-
-
-def exact_dedup(df: DataFrame, cols: list[str] | None = None, id_col: str | None = None) -> DataFrame:
-    """Keep one row per distinct value of ``cols`` (default: all columns).
-
-    With ``id_col``, keeps the row with the minimum id (deterministic);
-    otherwise uses dropDuplicates (any row). Single shuffle on the dup key.
-    """
-    cols = cols or df.columns
-    if id_col is None:
-        return df.dropDuplicates(cols)
-    w = Window.partitionBy(*cols).orderBy(F.col(id_col).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -22,8 +22,6 @@ Spark shape:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,8 +47,8 @@ def psi_report(
 
     Total PSI = sum(psi_contrib); kept off the report so every emitted
     number is a single deterministic IEEE expression (a cross-bin float sum
-    is accumulation-order-dependent — compute the total on the collected
-    n_bins rows, see :func:`psi_total`)."""
+    is accumulation-order-dependent — sum the collected n_bins rows in bin
+    order instead)."""
     probs = [i / n_bins for i in range(1, n_bins)]
     edges = [v for _, v in sorted(fit_exact_percentiles(ref, col, probs).items())]
     b = bin_expr(F.col(col), edges).alias("bin")
@@ -76,20 +74,6 @@ def psi_report(
         F.round(F.col("cur_n") / F.col("ct"), 6).alias("cur_frac"),
         F.round((p - q) * F.log(p / q), 6).alias("psi_contrib"),
     )
-
-
-def psi_total(report_rows) -> float:
-    """Deterministic total: sum the collected per-bin contributions in bin
-    order (driver-side, ≤ n_bins values)."""
-    return float(sum(r["psi_contrib"] for r in sorted(report_rows, key=lambda r: r["bin"])))
-
-
-def classify_psi(total: float) -> str:
-    if total < 0.1:
-        return "stable"
-    if total < 0.25:
-        return "moderate"
-    return "drifted"
 
 
 def categorical_drift_report(ref: DataFrame, cur: DataFrame, col: str) -> DataFrame:
@@ -120,7 +104,8 @@ def ks_report(
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov report: both empirical CDFs
     evaluated at every pooled distinct value, plus the per-value gap.
-    ``KS = max(d_abs)`` (see :func:`ks_statistic`) — the nonparametric
+    ``KS = max(d_abs)`` (a max is accumulation-order-independent, so a plain
+    agg over the report is deterministic) — the nonparametric
     complement to :func:`psi_report` (PSI needs bins; KS is binless and
     detects any CDF divergence).
 
@@ -203,11 +188,3 @@ def ks_report(
         F.round(ecdf_c, 6).alias("ecdf_cur"),
         F.round(F.abs(ecdf_r - ecdf_c), 6).alias("d_abs"),
     )
-
-
-def ks_statistic(report: DataFrame) -> float:
-    """KS statistic = sup-norm of the ECDF gap. ``max`` is accumulation-
-    order-independent, so a plain distributed agg is deterministic (unlike
-    a float sum)."""
-    row = report.agg(F.max(F.col("d_abs")).alias("ks")).collect()[0]
-    return float(row["ks"])

@@ -3,7 +3,7 @@
 The embedding column is ``array<float>`` (FIXTURES: embeddings.embedding,
 64-dim). Three families:
 
-- **L2 normalize / int8 quantize** — pure JVM higher-order expressions
+- **L2 norm / int8 quantize** — pure JVM higher-order expressions
   (cheap per-row reductions; stays in codegen, engine-portable so the
   DuckDB oracle can mirror with list_* lambdas).
 - **PCA** — the scale-safe two-phase shape: per-partition moment
@@ -30,14 +30,6 @@ def l2_norm_expr(vec: Column) -> Column:
     return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x))
 
 
-def l2_normalize_expr(vec: Column) -> Column:
-    """v / ||v||₂ (null-safe: zero vectors stay zero)."""
-    n = l2_norm_expr(vec)
-    return F.transform(
-        vec, lambda x: F.when(n > 0, x.cast("double") / n).otherwise(F.lit(0.0))
-    )
-
-
 def quantize_int8_exprs(vec: Column) -> dict[str, Column]:
     """Symmetric per-row int8 quantization: scale = max|x| / 127,
     q_i = round(x_i/scale). Returns the quantized array plus the scale
@@ -51,15 +43,6 @@ def quantize_int8_exprs(vec: Column) -> dict[str, Column]:
         ),
     )
     return {"q": q, "scale": scale}
-
-
-def normalize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn(vec_col, l2_normalize_expr(F.col(vec_col)))
-
-
-def quantize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    e = quantize_int8_exprs(F.col(vec_col))
-    return df.withColumn(f"{vec_col}_q8", e["q"]).withColumn(f"{vec_col}_scale", e["scale"])
 
 
 @dataclass(frozen=True)

@@ -91,11 +91,10 @@ def _maybe_broadcast(
     df: DataFrame,
     n_rows: int | None,
     edge_rows: int | None = None,
-    limit: int = _BROADCAST_VERTEX_LIMIT,
 ) -> DataFrame:
     """Broadcast a vertex-sized frame into a per-round fixpoint join while
-    its MEASURED row count stays under ``limit`` AND the edge table it
-    joins is big enough (``edge_rows`` ≥ _BROADCAST_MIN_EDGES) for the
+    its MEASURED row count stays under _BROADCAST_VERTEX_LIMIT AND the edge
+    table it joins is big enough (``edge_rows`` ≥ _BROADCAST_MIN_EDGES) for the
     avoided per-round edge exchange to beat the broadcast's driver
     round-trip: the persisted edge table then never re-shuffles inside the
     loop — the join is a map-side BroadcastHashJoin and the only per-round
@@ -107,7 +106,7 @@ def _maybe_broadcast(
     arithmetic, so the fixpoint output is bit-equal under both shapes."""
     if edge_rows is not None and edge_rows < _BROADCAST_MIN_EDGES:
         return df
-    if n_rows is not None and n_rows <= limit:
+    if n_rows is not None and n_rows <= _BROADCAST_VERTEX_LIMIT:
         return F.broadcast(df)
     return df
 

@@ -15,9 +15,9 @@ classic two-pass design every distributed engine uses:
 The result is bit-identical to the global window formulation — asserted in
 tests — while every exchange in the plan stays parallel.
 
-``monotonic_ids`` is the cheaper cousin for when ids only need to be
-unique and order-stable within partitions (Spark's
-``monotonically_increasing_id`` contract): zero shuffles, pure projection.
+When ids only need to be unique and order-stable within partitions,
+Spark's ``monotonically_increasing_id`` is the cheaper choice: zero
+shuffles, pure projection.
 
 Reference parity: the reference resets/creates dataframe indexes via Polars
 ``with_row_index`` (implicit in pandas round-trips); at cluster scale that
@@ -84,11 +84,3 @@ def assign_row_ids(
         )
         .drop("__pid")
     )
-
-
-def monotonic_ids(df: DataFrame, id_col: str = "row_id") -> DataFrame:
-    """Unique (not contiguous) 64-bit ids, zero shuffles: partition id in
-    the high bits, per-partition counter in the low bits — Spark's native
-    ``monotonically_increasing_id``. Use when downstream only needs a
-    stable unique key, not densely packed ordinals."""
-    return df.withColumn(id_col, F.monotonically_increasing_id())

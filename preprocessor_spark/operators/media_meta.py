@@ -9,10 +9,12 @@ pixel; these sniffers read a few dozen HEADER bytes per payload, so the
 stage is I/O-bound on the binary column scan, not CPU-bound on codecs.
 
 Formats: PNG (IHDR), GIF (logical screen), BMP (BITMAPINFOHEADER),
-PNM P2/P3/P5/P6 (ASCII header), JPEG (segment walk to SOFn), TIFF (IFD
-walk for tags 256/257/258, both endians) — and FLAC STREAMINFO for audio
-(sample rate / channels / bits / duration). Unknown or truncated
-payloads yield NULL fields, never exceptions (triage is the point).
+PNM P2/P3/P5/P6 (ASCII header), JPEG (segment walk to SOFn), WebP
+(VP8/VP8L/VP8X headers — dimensions are plain header fields, so WebP
+needs no decode here), TIFF (IFD walk for tags 256/257/258, both endians)
+— and FLAC STREAMINFO and RIFF/WAVE fmt chunks for audio (sample rate /
+channels / bits / duration). Unknown or truncated payloads yield NULL
+fields, never exceptions (triage is the point).
 
 Rows-only grading (binary parsing is not SQL); pytest cross-checks every
 sniffed dimension against the repo's own full decoders on encoder-built

@@ -33,6 +33,9 @@ Decode status:
   clear NotImplementedError in each case.
 - A deterministic content-hash fake (``decoder="fake"``) remains for
   plumbing tests over arbitrary (non-image) payloads.
+
+Header-only metadata (format, dimensions, bit depth) without a decode is
+:mod:`preprocessor_spark.operators.media_meta`.
 """
 
 from __future__ import annotations
@@ -933,112 +936,3 @@ def sample_video_frames(df: DataFrame, id_col: str, binary_col: str, every_ms: i
             yield pd.DataFrame(rows)
 
     return df.select(id_col, binary_col).mapInPandas(_sample, VIDEO_FRAMES_SCHEMA)
-
-
-def sniff_image_dims(payload: bytes) -> tuple[str, int, int] | None:
-    """(format, width, height) from the header alone — NO full decode.
-
-    Covers every decodable format plus WebP (VP8/VP8L/VP8X variants) and
-    ISO-BMFF AVIF/HEIC (ispe property walk) whose pixel DECODE genuinely
-    needs codec libraries — dimensions are plain header fields, so corpus
-    metadata (aspect filters, size buckets, thumbnail planning) works for
-    them too. Returns None for unrecognized payloads."""
-    import struct as st
-
-    if not payload or len(payload) < 16:
-        return None
-    if payload[:8] == _PNG_SIG:
-        w, h = st.unpack(">II", payload[16:24])
-        return ("png", w, h)
-    if payload[:2] == b"\xff\xd8":  # JPEG: walk to SOF
-        i = 2
-        while i + 9 < len(payload):
-            if payload[i] != 0xFF:
-                break
-            m = payload[i + 1]
-            if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
-                i += 2
-                continue
-            (ln,) = st.unpack(">H", payload[i + 2 : i + 4])
-            if m in (0xC0, 0xC1, 0xC2):
-                h, w = st.unpack(">HH", payload[i + 5 : i + 9])
-                return ("jpeg", w, h)
-            i += 2 + ln
-        return None
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = st.unpack("<HH", payload[6:10])
-        return ("gif", w, h)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from preprocessor_spark.operators.tiff import _read_ifd_value
-
-        endian = "<" if payload[:2] == b"II" else ">"
-        (off,) = st.unpack(endian + "I", payload[4:8])
-        (n,) = st.unpack(endian + "H", payload[off : off + 2])
-        dims = {}
-        for t in range(n):
-            e = off + 2 + 12 * t
-            tag, ttype, count = st.unpack(endian + "HHI", payload[e : e + 8])
-            if tag in (256, 257):
-                dims[tag] = _read_ifd_value(payload, endian, ttype, count, payload[e + 8 : e + 12])[0]
-        if 256 in dims and 257 in dims:
-            return ("tiff", dims[256], dims[257])
-        return None
-    if payload[:2] == b"BM":
-        w, h = st.unpack("<ii", payload[18:26])
-        return ("bmp", w, abs(h))
-    if payload[:2] in (b"P5", b"P6"):
-        toks = payload[2:200].split()
-        try:
-            return ("pnm", int(toks[0]), int(toks[1]))
-        except (ValueError, IndexError):
-            return None
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        chunk = payload[12:16]
-        if chunk == b"VP8 ":  # lossy: frame tag + start code + 14-bit dims
-            if payload[23:26] != b"\x9d\x01\x2a":
-                return None
-            w = st.unpack("<H", payload[26:28])[0] & 0x3FFF
-            h = st.unpack("<H", payload[28:30])[0] & 0x3FFF
-            return ("webp", w, h)
-        if chunk == b"VP8L":  # lossless: LSB-packed 14-bit dims after 0x2F
-            if payload[20] != 0x2F:
-                return None
-            bits = st.unpack("<I", payload[21:25])[0]
-            return ("webp", (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1)
-        if chunk == b"VP8X":  # extended: 24-bit dims minus one
-            w = int.from_bytes(payload[24:27], "little") + 1
-            h = int.from_bytes(payload[27:30], "little") + 1
-            return ("webp", w, h)
-        return None
-    if payload[4:8] == b"ftyp" and payload[8:12] in (b"avif", b"avis", b"heic", b"mif1"):
-        # ISO-BMFF: scan box tree for the 'ispe' image-spatial-extents box
-        i = payload.find(b"ispe")
-        if i != -1 and i + 16 <= len(payload):
-            w, h = st.unpack(">II", payload[i + 8 : i + 16])
-            return ("avif" if payload[8:12] in (b"avif", b"avis") else "heic", w, h)
-        return None
-    return None
-
-
-def image_meta(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
-    """Header-sniffed (format, width, height, n_bytes) per payload — one
-    narrow mapInPandas pass that reads a few header bytes per row; works
-    for WebP/AVIF/HEIC too, where full decode would need codec libs."""
-
-    def _sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, nb = [], [], [], []
-            for b in pdf[binary_col]:
-                raw = bytes(b) if b is not None else b""
-                got = sniff_image_dims(raw)
-                fmts.append(got[0] if got else None)
-                ws.append(got[1] if got else None)
-                hs.append(got[2] if got else None)
-                nb.append(len(raw))
-            yield pd.DataFrame(
-                {"id": pdf[id_col].values, "format": fmts, "width": ws, "height": hs, "n_bytes": nb}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        _sniff, "id bigint, format string, width int, height int, n_bytes bigint"
-    )

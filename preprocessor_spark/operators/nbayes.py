@@ -50,7 +50,7 @@ def nb_classify(
 
     Returns (id, true class, predicted class, best log-score rounded 1e-6).
     Self-classification by design — the resubstitution shape used for
-    label-quality audits; hold-out is one `hash_sample` filter away.
+    label-quality audits; hold-out is one `splits.hash_split` filter away.
     """
     base = df.where(
         F.col(id_col).isNotNull()

@@ -1,4 +1,4 @@
-"""Perceptual image hashing (dHash) + Hamming near-duplicate pairing.
+"""Perceptual image hashing (dHash) + Hamming near-duplicate clustering.
 
 Image-level dedup for multimodal training corpora: re-encodes, resizes,
 and mild recompression change every byte of an image file but barely move
@@ -8,7 +8,10 @@ gradient-direction variant popularized by the pHash family): area-average
 the grayscale image to a 9×8 grid, emit one bit per horizontal neighbor
 pair (left < right), pack 64 bits row-major.
 
-Pairing mirrors the SimHash pigeonhole machinery
+Identical hashes (exact re-uploads, same-render thumbnails) collapse to
+one representative per distinct 64-bit value first, so the pairing work is
+quadratic only in distinct hashes, never in duplication. Pairing mirrors
+the SimHash pigeonhole machinery
 (:mod:`preprocessor_spark.operators.dedup`): split the 64-bit hash into
 ``max_hamming + 1`` chunks — two hashes within ``max_hamming`` bits must
 agree on at least one whole chunk — so candidates come from a plain
@@ -136,77 +139,6 @@ def image_dhash(
     return df.select(id_col, binary_col).mapInPandas(_hash, DHASH_SCHEMA)
 
 
-def phash_neardup_pairs(
-    hashes: DataFrame,
-    id_col: str = "id",
-    hash_col: str = "dhash",
-    max_hamming: int = 3,
-    max_bucket: int = 10_000,
-) -> DataFrame:
-    """Exact Hamming-≤threshold pairs via exact-hash collapse + pigeonhole
-    chunk equi-join over DISTINCT hashes.
-
-    Identical hashes (exact re-uploads, same-render thumbnails) collapse to
-    one representative per distinct 64-bit value FIRST, so (a) the chunk
-    join's work is quadratic only in distinct hashes, never in duplication,
-    and (b) identical-hash mega-cliques larger than ``max_bucket`` still
-    dedup correctly — they come back through the output-sized self-join on
-    the hash value instead of tripping the degenerate-bucket guard (the
-    same collapse ``minhash_dedup_corpus``/``embedding_neardup_pairs`` use,
-    dedup.py:58,765).
-
-    Pigeonhole: the 64 bits split into ``max_hamming + 1`` near-equal
-    chunks; any pair within the threshold shares ≥1 exact chunk, so the
-    (chunk_idx, chunk_value) equi-join generates a candidate superset and
-    ``bit_count(xor)`` keeps exactly the true pairs. ``max_bucket`` now
-    bounds DISTINCT-hash chunk buckets (adversarial hash diversity) — the
-    only remaining degenerate case — the same way LSH band guards do.
-
-    Returns (id_a, id_b, hamming) with id_a < id_b, each pair once.
-
-    NOTE: the pair list is the EXPLICIT quadratic contract — d-way
-    duplicated corpora produce Θ(d²) member pairs by definition. For
-    corpus dedup use :func:`phash_neardup_clusters` (the default graded
-    mode), whose output is one row per image at any duplication factor.
-    """
-    h = register_persisted(
-        hashes.select(
-            F.col(id_col).alias("__id"), F.col(hash_col).alias("__h")
-        ).persist()
-    )
-    # intra-group pairs (hamming 0): output-sized self equi-join on the
-    # hash value — all-distinct corpora produce zero rows here
-    intra = (
-        h.alias("ia")
-        .join(h.alias("ib"), F.col("ia.__h") == F.col("ib.__h"))
-        .filter(F.col("ia.__id") < F.col("ib.__id"))
-        .select(
-            F.col("ia.__id").alias("id_a"),
-            F.col("ib.__id").alias("id_b"),
-            F.lit(0).alias("hamming"),
-        )
-    )
-    rep_pairs = _rep_near_pairs(h, max_hamming, max_bucket).select(
-        "ha", "hb", "hamming"
-    )
-    # expand rep pairs to member pairs through two keyed joins on the hash
-    # value (output-sized: |A|x|B| rows IS the contractual pair set)
-    cross = (
-        rep_pairs.join(
-            h.select(F.col("__id").alias("mid_a"), F.col("__h").alias("ha")), "ha"
-        )
-        .join(
-            h.select(F.col("__id").alias("mid_b"), F.col("__h").alias("hb")), "hb"
-        )
-        .select(
-            F.least("mid_a", "mid_b").alias("id_a"),
-            F.greatest("mid_a", "mid_b").alias("id_b"),
-            "hamming",
-        )
-    )
-    return intra.unionAll(cross)
-
-
 def _rep_near_pairs(h: DataFrame, max_hamming: int, max_bucket: int) -> DataFrame:
     """Rep-level near pairs over DISTINCT hash values: (ra, rb, ha, hb,
     hamming) with hamming in [1, max_hamming] (0 is impossible across
@@ -283,10 +215,9 @@ def phash_neardup_clusters(
     max_hamming: int = 3,
     max_bucket: int = 10_000,
 ) -> DataFrame:
-    """Cluster-level image dedup — the scale-safe DEFAULT output mode.
+    """Cluster-level image dedup.
 
-    Where :func:`phash_neardup_pairs` materializes the (quadratic-in-
-    duplication) member pair list, this returns ONE row per image:
+    Returns ONE row per image, at any duplication factor:
     ``(id, cluster, cluster_size, keep)`` with ``cluster`` the smallest
     member id of its Hamming-≤threshold connected component and ``keep``
     true exactly for that canonical representative — the

@@ -22,8 +22,6 @@ Pieces:
   ``mapInPandas`` with per-batch top-k pruning — the same zero-shuffle
   shape as ``cosine_topk``, but each corpus row moves
   m bytes instead of 4·d.
-- :func:`pq_save` / :func:`pq_load` — float64 parquet round-trip of the
-  codebooks; a reloaded model encodes and searches bit-identically.
 
 Composes with IVF (``similarity.ivf_assign``): encode the assignments
 frame once, store codes partitioned by cell, and ADC-scan only probed
@@ -249,31 +247,6 @@ def pq_search_adc(
     )
 
 
-def pq_save(spark, books: np.ndarray, path: str) -> None:
-    """Persist codebooks as parquet (float64 round-trips exactly: a
-    reloaded model encodes bit-identically)."""
-    m, n_codes, dsub = books.shape
-    rows = [
-        (int(j), int(c), [float(x) for x in books[j, c]])
-        for j in range(m)
-        for c in range(n_codes)
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def pq_load(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
-    m = rows[-1]["subspace"] + 1
-    n_codes = rows[-1]["code"] + 1
-    dsub = len(rows[0]["centroid"])
-    books = np.empty((m, n_codes, dsub), dtype="float64")
-    for r in rows:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    return books
-
-
 def ivfpq_assign_encode(
     corpus: DataFrame,
     cents: np.ndarray,
@@ -283,9 +256,9 @@ def ivfpq_assign_encode(
 ) -> DataFrame:
     """Build the IVF-PQ index frame: (neighbor_id, __cell, pq_code).
     Composes ``similarity.ivf_assign`` (cell routing) with PQ codes — at
-    rest this is written ``partitionBy("__cell")`` like the plain IVF
-    index, so a probe reads only its cells' files AND each row is m bytes
-    of code instead of the raw vector."""
+    rest this is written ``partitionBy("__cell")``, so a probe reads only
+    its cells' files AND each row is m bytes of code instead of the raw
+    vector."""
     from pyspark.sql.functions import pandas_udf
 
     bks = books
@@ -344,8 +317,8 @@ def ivfpq_search(
     """The standard IVF-PQ search: each query ADC-scans ONLY its n_probe
     nearest cells' codes. Queries explode to probed cells and equi-join
     the index on the cell id (the same bucket-join shape as
-    ``similarity.ivf_search``, with the same probed-cell isin pushdown
-    that becomes static partition pruning on a ``partitionBy("__cell")``
+    ``similarity.ivf_cosine_topk``, plus a probed-cell isin pushdown that
+    becomes static partition pruning on a ``partitionBy("__cell")``
     layout); scores are the broadcast-LUT gather; top-k is a bounded keyed
     window. With ``n_probe >= n_cells`` the result equals the exhaustive
     :func:`pq_search_adc` exactly (asserted in tests).

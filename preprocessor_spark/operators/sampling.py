@@ -29,19 +29,6 @@ def _check_fraction(f: float) -> None:
         raise ValueError(f"fraction must be in [0, 1], got {f}")
 
 
-def hash_sample_expr(key: Column, fraction: float, salt: str = "") -> Column:
-    """Boolean keep/drop from the stable md5 bucket: keep iff
-    bucket < fraction * 10000 (realized rate exact to 1/10000)."""
-    _check_fraction(fraction)
-    return split_bucket_expr(key, salt) < int(round(fraction * BUCKETS))
-
-
-def hash_sample(df: DataFrame, key_col: str, fraction: float, salt: str = "") -> DataFrame:
-    """Deterministic ``fraction``-sample: pure row-local filter, no shuffle,
-    no sampling pass, reproducible across engines and appends."""
-    return df.filter(hash_sample_expr(F.col(key_col), fraction, salt))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     key_col: str,

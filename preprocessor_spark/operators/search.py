@@ -202,144 +202,3 @@ def keyword_extract_tfidf(
             "rank",
         )
     )
-
-
-class Bm25Index:
-    """A standing BM25 inverted index: term-bucketed postings + df tables
-    plus the two corpus scalars. The module docstring's ad-hoc path
-    re-scans the corpus per query; this is the amortized counterpart —
-    build once, save partitioned by term bucket, and every later query
-    reads ONLY its terms' partitions (static partition pruning, the same
-    file-level guarantee the IVF index makes for probed cells)."""
-
-    def __init__(self, postings: DataFrame, dfs: DataFrame, n_docs: int,
-                 avgdl: float, n_buckets: int):
-        self.postings = postings  # (__term, __id, __tf, __dl, __tb)
-        self.dfs = dfs            # (__term, __df, __tb)
-        self.n_docs = int(n_docs)
-        self.avgdl = float(avgdl)
-        self.n_buckets = int(n_buckets)
-
-
-def _term_bucket(term: Column, n_buckets: int) -> Column:
-    return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
-
-
-def bm25_build_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> Bm25Index:
-    """One corpus pass → full postings (term, doc, tf, dl) and df tables,
-    each tagged with the term's hash bucket. avgdl is avg over BIGINT
-    lengths (exact long sum / count — order-independent), so a saved and
-    a freshly-built index score bit-identically."""
-    base = docs.select(
-        F.col(id_col).alias("__id"),
-        search_tokens_expr(F.col(text_col)).alias("__toks"),
-    )
-    with_dl = base.select("__id", "__toks", F.size("__toks").alias("__dl"))
-    srow = with_dl.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("__dl").alias("a")
-    ).collect()[0]
-    postings = (
-        with_dl.select("__id", "__dl", F.explode("__toks").alias("__term"))
-        .groupBy("__id", "__term")
-        .agg(F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl"))
-        .withColumn("__tb", _term_bucket(F.col("__term"), n_buckets))
-    )
-    dfs = postings.groupBy("__term").agg(
-        F.count(F.lit(1)).alias("__df")
-    ).withColumn("__tb", _term_bucket(F.col("__term"), n_buckets))
-    return Bm25Index(postings, dfs, srow["n"], float(srow["a"]), n_buckets)
-
-
-def bm25_save_index(index: Bm25Index, path: str) -> None:
-    """Persist partitioned by term bucket: a query's scan is pruned to its
-    terms' ``__tb=…`` directories. Stats go in a 1-row parquet."""
-    index.postings.write.mode("overwrite").partitionBy("__tb").parquet(
-        f"{path}/postings"
-    )
-    index.dfs.write.mode("overwrite").partitionBy("__tb").parquet(
-        f"{path}/dfs"
-    )
-    spark = index.postings.sparkSession
-    spark.createDataFrame(
-        [(index.n_docs, index.avgdl, index.n_buckets)],
-        "n_docs long, avgdl double, n_buckets int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def bm25_load_index(spark, path: str) -> Bm25Index:
-    srow = spark.read.parquet(f"{path}/stats").collect()[0]
-    return Bm25Index(
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/dfs"),
-        srow["n_docs"],
-        srow["avgdl"],
-        srow["n_buckets"],
-    )
-
-
-def bm25_search_index(
-    index: Bm25Index,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Score a query against a standing index. The query terms' bucket ids
-    are pushed as an ``isin`` on the partition column BEFORE the row filter
-    — static partition pruning on a loaded index (file-list-asserted in
-    tests). Scoring replays bm25_scores' exact expression tree over the stored
-    integers + the two deterministic scalars, so index search == direct
-    search after the 6-dp rank rounding."""
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    terms = sorted({t.lower() for t in query_terms})
-    spark = index.postings.sparkSession
-    bkts = sorted(
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "t string")
-        .select(_term_bucket(F.col("t"), index.n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
-    p = index.postings.filter(F.col("__tb").isin(bkts)).filter(F.col("__term").isin(terms))
-    d = (
-        index.dfs.filter(F.col("__tb").isin(bkts))
-        .filter(F.col("__term").isin(terms))
-        .select("__term", "__df")
-    )
-    scored = (
-        p.join(F.broadcast(d), "__term")
-        .withColumn(
-            "__idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(index.n_docs)) - F.col("__df") + F.lit(0.5))
-                / (F.col("__df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "__w",
-            F.col("__idf")
-            * (F.col("__tf") * (1.0 + k1))
-            / (
-                F.col("__tf")
-                + k1
-                * (1.0 - b + b * F.col("__dl").cast("double") / F.lit(index.avgdl))
-            ),
-        )
-    )
-    ranked = (
-        scored.groupBy("__id")
-        .agg(
-            F.count(F.lit(1)).alias("n_matched_terms"),
-            F.round(F.sum("__w"), 6).alias("score"),
-        )
-        .select(F.col("__id").alias(id_col), "n_matched_terms", "score")
-    )
-    return ranked.orderBy(F.desc("score"), F.asc(id_col)).limit(k)

@@ -25,8 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from preprocessor_spark.caching import register_persisted
-
 
 def _normalized(df: DataFrame, vec_col: str, id_col: str, out_id: str, out_vec: str) -> DataFrame:
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -197,65 +195,6 @@ def ivf_assign(
     )
 
 
-def ivf_save_index(index: DataFrame, cents: np.ndarray, path: str) -> None:
-    """Persist the IVF index: centroids (tiny) + cell assignments, both as
-    parquet — float64 round-trips exactly, so a reloaded index searches
-    bit-identically. At 100 TB the assignments table is the corpus's
-    (id, vec, cell) projection, written partitioned by cell so a probe
-    reads only its cells' files."""
-    spark = index.sparkSession
-    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
-    spark.createDataFrame(cent_rows, "cell int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    index.write.mode("overwrite").partitionBy("__cell").parquet(f"{path}/assignments")
-
-
-def ivf_load_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
-    """Load a saved IVF index → (centroids, assignments). No retraining,
-    no corpus scan."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cents = np.array([r["centroid"] for r in cent_rows], dtype="float64")
-    idx = spark.read.parquet(f"{path}/assignments")
-    return cents, idx
-
-
-def ivf_search(
-    index: DataFrame,
-    cents: np.ndarray,
-    queries: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 5,
-    n_probe: int = 3,
-) -> DataFrame:
-    """Search a built/loaded IVF index: queries explode to their n_probe
-    nearest cells and equi-join the assignments on cell id.
-
-    The distinct probed cell ids (bounded by the number of cells, never by
-    query count) are collected and pushed as an ``isin`` filter on the
-    index side BEFORE the join — on an index loaded from the
-    ``partitionBy("__cell")`` parquet layout this becomes static partition
-    pruning, so the scan touches ONLY the probed cells' directories
-    (file-list-asserted in tests)."""
-    q = _normalized(queries, vec_col, id_col, "query_id", "__qv").withColumn(
-        "__cell", F.explode(F.slice(_nearest_cells_udf(cents)(F.col("__qv")), 1, n_probe))
-    )
-    q = register_persisted(q.persist())
-    probed = sorted(r["__cell"] for r in q.select("__cell").distinct().collect())
-    index = index.filter(F.col("__cell").isin(probed))
-    joined = index.join(q, "__cell").filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.select("query_id", "neighbor_id", _dot(F.col("__qv"), F.col("__cv")).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -277,10 +216,8 @@ def ivf_cosine_topk(
     nearest cells. Search: equi-join on cell id — shuffle-partitionable by
     cell, no cross product, so the corpus side scales arbitrarily. Same
     recall/cost dial as FAISS IVF-Flat, expressed as Spark relational ops.
-
-    Composition of the index-lifecycle pieces: ``ivf_train_centroids`` →
-    ``ivf_assign`` → ``ivf_search`` (use those + ``ivf_save_index`` /
-    ``ivf_load_index`` to reuse or append to an index without retraining).
+    Train and assign are ``ivf_train_centroids`` and ``ivf_assign``; the
+    probe join is inline.
     """
     cents = ivf_train_centroids(corpus, vec_col, n_cells, sample_rows, kmeans_iters, seed)
     c = ivf_assign(corpus, cents, vec_col, id_col)

@@ -66,18 +66,6 @@ def hash_split(
     return df.withColumn("split", split_assign_expr(F.col(key_col), splits, salt))
 
 
-def group_hash_split(
-    df: DataFrame, group_col: str, splits: dict[str, float], salt: str = ""
-) -> DataFrame:
-    """Leakage-safe split: hash the GROUP key (author, source domain,
-    conversation id) instead of the row key, so every row of a group lands
-    in the same split — near-duplicate rows within a group can never
-    straddle train/test. Still a pure projection (the group value is on
-    the row), zero shuffle; fractions are realized over groups, not rows,
-    so skewed group sizes skew row proportions — by design."""
-    return df.withColumn("split", split_assign_expr(F.col(group_col), splits, salt))
-
-
 def neardup_safe_split(
     df: DataFrame,
     pairs: DataFrame,
@@ -93,7 +81,7 @@ def neardup_safe_split(
     of their CLUSTER representative, so a near-dup cluster can never
     straddle train/test; rows in no pair keep their own-id assignment.
 
-    This is `group_hash_split` where the group is computed, not given:
+    This is `hash_split` on a group key, where the group is computed:
     contamination between splits via paraphrase/verbatim copies is the
     classic eval-leakage bug, and hashing the connected-component label
     closes it by construction (invariant-tested: zero cross-split pairs).

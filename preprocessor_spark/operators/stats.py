@@ -216,18 +216,12 @@ def corr_matrix_grouped(
 
 
 def corr_matrix(
-    df: DataFrame, cols: list[str], assume_no_nulls: bool = False, engine: str = "decimal"
+    df: DataFrame, cols: list[str], engine: str = "decimal"
 ) -> DataFrame:
     """Long-form (col_a, col_b, n, corr, cov_samp) for every unordered
     column pair, col_a < col_b lexicographically. Rows where ANY of the two
     columns is null are excluded per-pair (pairwise deletion), matching
     SQL's CORR/COVAR_SAMP null semantics.
-
-    ``assume_no_nulls=True`` shares the per-column sums across pairs —
-    p·(p+5)/2 aggregate expressions instead of 3·p·(p−1), roughly halving
-    the agg work for null-free measure columns (fact tables). Identical
-    results iff the columns really are null-free; with nulls present it
-    silently computes listwise statistics, so it is opt-in.
 
     ``engine='bigint'`` switches to the certificate-checked scaled-integer
     path (see :func:`_corr_matrix_bigint`): ~6× faster sums, identical
@@ -243,43 +237,20 @@ def corr_matrix(
         raise ValueError(f"unknown engine {engine!r}; use 'decimal' or 'bigint'")
 
     aggs = []
-    if assume_no_nulls:
-        for a in sorted(cols):
-            aggs += [
-                F.count(F.lit(1)).alias(f"cn_{a}"),
-                F.sum(_dec(a)).alias(f"cs_{a}"),
-                F.sum(_dec(a) * _dec(a)).alias(f"css_{a}"),
-            ]
-        for a, b in combinations(sorted(cols), 2):
-            aggs.append(F.sum(_dec(a) * _dec(b)).alias(f"sxy_{a}__{b}"))
-    else:
-        for a, b in combinations(sorted(cols), 2):
-            both = F.col(a).isNotNull() & F.col(b).isNotNull()
-            xa = F.when(both, _dec(a)).otherwise(F.lit(None))
-            xb = F.when(both, _dec(b)).otherwise(F.lit(None))
-            tag = f"{a}__{b}"
-            aggs += [
-                F.count(F.when(both, F.lit(1))).alias(f"n_{tag}"),
-                F.sum(xa).alias(f"sx_{tag}"),
-                F.sum(xb).alias(f"sy_{tag}"),
-                F.sum(xa * xa).alias(f"sxx_{tag}"),
-                F.sum(xb * xb).alias(f"syy_{tag}"),
-                F.sum(xa * xb).alias(f"sxy_{tag}"),
-            ]
+    for a, b in combinations(sorted(cols), 2):
+        both = F.col(a).isNotNull() & F.col(b).isNotNull()
+        xa = F.when(both, _dec(a)).otherwise(F.lit(None))
+        xb = F.when(both, _dec(b)).otherwise(F.lit(None))
+        tag = f"{a}__{b}"
+        aggs += [
+            F.count(F.when(both, F.lit(1))).alias(f"n_{tag}"),
+            F.sum(xa).alias(f"sx_{tag}"),
+            F.sum(xb).alias(f"sy_{tag}"),
+            F.sum(xa * xa).alias(f"sxx_{tag}"),
+            F.sum(xb * xb).alias(f"syy_{tag}"),
+            F.sum(xa * xb).alias(f"sxy_{tag}"),
+        ]
     sums = df.agg(*aggs)
-    if assume_no_nulls:
-        # alias the shared sums into the per-pair names the math below uses
-        proj = list(sums.columns)
-        for a, b in combinations(sorted(cols), 2):
-            tag = f"{a}__{b}"
-            proj += [
-                F.col(f"cn_{a}").alias(f"n_{tag}"),
-                F.col(f"cs_{a}").alias(f"sx_{tag}"),
-                F.col(f"cs_{b}").alias(f"sy_{tag}"),
-                F.col(f"css_{a}").alias(f"sxx_{tag}"),
-                F.col(f"css_{b}").alias(f"syy_{tag}"),
-            ]
-        sums = sums.select(*proj)
 
     pair_rows = []
     for a, b in combinations(sorted(cols), 2):

@@ -23,8 +23,6 @@ _STOPWORDS = {
     "de": ["der", "die", "und", "das", "von", "zu", "mit", "den", "ist", "im"],
 }
 
-_BPE_ISH_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
 
 def tokens_expr(text: Column) -> Column:
     """Whitespace tokenization."""
@@ -33,12 +31,6 @@ def tokens_expr(text: Column) -> Column:
 
 def token_count_expr(text: Column) -> Column:
     return F.size(tokens_expr(text))
-
-
-def bpe_ish_token_count_expr(text: Column) -> Column:
-    """BPE-ish token count: alpha runs + digit runs + individual punctuation
-    (regexp_extract_all, JVM-side)."""
-    return F.size(F.regexp_extract_all(text, F.lit(_BPE_ISH_TOKEN_RE), 0))
 
 
 # Normalization patterns are RE2-compatible (no backrefs/lookarounds) so the
@@ -381,22 +373,12 @@ def fingerprint_expr(text: Column) -> Column:
     return F.xxhash64(F.concat_ws(" ", toks))
 
 
-def rolling_hash_fingerprint_expr(text: Column, window: int = 8) -> Column:
-    """Winnowing-style fingerprint: min xxhash64 over character n-gram
-    windows of the normalized text (a locality-sensitive content hash)."""
-    norm = F.regexp_replace(F.lower(text), r"\s+", " ")
-    n = F.greatest(F.length(norm) - F.lit(window - 1), F.lit(1))
-    idx = F.sequence(F.lit(1), n)
-    return F.array_min(F.transform(idx, lambda i: F.xxhash64(norm.substr(i, F.lit(window)))))
-
-
-def rolling_hash_fingerprint_udf(window: int = 8):
-    """Vectorized twin of ``rolling_hash_fingerprint_expr`` for the hot path:
-    min polynomial rolling hash over byte n-gram windows, computed per Arrow
-    batch as ONE sliding-window matmul per doc (numpy). The expression
-    variant evaluates an interpreted xxhash64 per character position —
-    measured ~20× slower on long documents. Hash family differs (polynomial
-    vs xxhash64) but both are deterministic content fingerprints.
+def rolling_hash_fingerprint_udf():
+    """Winnowing-style fingerprint: min polynomial rolling hash over byte
+    8-grams of the lowercased, whitespace-collapsed text, computed per
+    Arrow batch as ONE sliding-window matmul per doc (numpy). A
+    per-character JVM xxhash64 expression measured ~20× slower on long
+    documents.
     """
     import re
 
@@ -405,6 +387,7 @@ def rolling_hash_fingerprint_udf(window: int = 8):
     # weights built in exact Python ints then reduced mod 2^64 — the same
     # wrapping values the old scalar int64 multiply produced, minus its
     # per-import RuntimeWarning (intentional wrap, now explicit)
+    window = 8
     base = 1000003
     w_py = [pow(base, window - 1 - i, 1 << 64) for i in range(window)]
     weights = np.array(w_py, dtype=np.uint64).view(np.int64)
@@ -425,21 +408,6 @@ def rolling_hash_fingerprint_udf(window: int = 8):
         return s.map(_fp)
 
     return _udf
-
-
-def text_profile(df: DataFrame, text_col: str) -> DataFrame:
-    """Attach all text-analysis columns in one projection."""
-    t = F.col(text_col)
-    q = quality_exprs(t)
-    return df.withColumns(
-        {
-            **q,
-            "bpe_ish_tokens": bpe_ish_token_count_expr(t),
-            "quality_score": quality_score_expr(t),
-            "lang_pred": lang_id_expr(t),
-            "fingerprint": fingerprint_expr(t),
-        }
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -17,11 +17,10 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "preprocessor-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = str(shuffle_partitions or max(int(cpus) * 2, 8))
+    shuffle = str(max(int(cpus) * 2, 8))
     # Make this package importable on executor Python workers even when the
     # driver imported it via a sys.path entry: pandas UDFs defined in our
     # modules are pickled by reference and unpickled worker-side.

@@ -2,8 +2,11 @@
 
 The reference library has no file connectors at all (SURVEY.md §2.1: it only
 ingests in-memory pandas/Polars frames, `preprocessor.py:141-148`). Our engine
-reads the driver-generated Parquet star schema plus CSV/JSON for parity with
-common preprocessing inputs. All readers return lazy DataFrames so Catalyst
+reads the driver-generated Parquet star schema (``read_table`` normalizes its
+physical quirks); plain Parquet/CSV/JSON/ORC/XML/text I/O is one
+``spark.read``/``df.write`` call and needs no wrapper here. What stays adds
+logic: Avro with a pure-Python fallback, binary files, bucketed/partitioned
+writes, compaction and JSONL. All readers return lazy DataFrames so Catalyst
 can push filters/projections into the scan.
 """
 
@@ -26,18 +29,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def read_parquet(
-    spark: SparkSession, path: str, merge_schema: bool = False, **options
-) -> DataFrame:
-    """Parquet scan; ``merge_schema=True`` unions file footers for
-    schema-evolved datasets (columns added over time read as null where
-    absent — the standard append-only table evolution path)."""
-    r = spark.read
-    if merge_schema:
-        r = r.option("mergeSchema", "true")
-    return r.options(**options).parquet(path)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -66,26 +57,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.set(key, prev)
         return df
     return spark.read.parquet(path)
-
-
-def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
-    opts = {"header": "true", "inferSchema": "true"}
-    opts.update(options)
-    return spark.read.options(**opts).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).json(path)
-
-
-def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
-    """ORC scan — same vectorized columnar reader + predicate pushdown
-    story as parquet (ORC carries min/max/bloom indexes per stripe)."""
-    return spark.read.options(**options).orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite", **options) -> None:
-    df.write.mode(mode).options(**options).orc(path)
 
 
 def read_avro(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -137,32 +108,6 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite", **options) -> 
                 f"option; got unsupported options {sorted(opts)}"
             ) from e
         write_avro_py(df, path, codec=codec, mode=mode)
-
-
-def read_xml(spark: SparkSession, path: str, row_tag: str = "row", **options) -> DataFrame:
-    """XML scan (built into Spark 4 — the former spark-xml package): one
-    DataFrame row per ``row_tag`` element, schema inferred unless given.
-    XML parsing cannot push predicates or prune columns at the reader, so
-    at scale: land XML once, convert to parquet, query the parquet."""
-    return spark.read.format("xml").option("rowTag", row_tag).options(**options).load(path)
-
-
-def write_xml(
-    df: DataFrame, path: str, row_tag: str = "row", mode: str = "overwrite", **options
-) -> None:
-    df.write.mode(mode).format("xml").option("rowTag", row_tag).options(**options).save(path)
-
-
-def read_text(
-    spark: SparkSession, path: str, whole_file: bool = False, **options
-) -> DataFrame:
-    """Line-per-row text scan (``value: string``); ``whole_file=True`` reads
-    one row per file (wholetext) — the raw-document ingest shape. Note the
-    100 TB caveat: wholetext files are unsplittable, so shard the corpus
-    into many files upstream (see write_jsonl's aligned sharding)."""
-    # NB: wholetext must go through the .text() keyword — PySpark's reader
-    # re-sets it from the signature default, clobbering a pre-set option
-    return spark.read.options(**options).text(path, wholetext=whole_file)
 
 
 def read_binary_files(

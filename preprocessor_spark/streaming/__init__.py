@@ -1,14 +1,15 @@
-"""Structured Streaming surface over the events table.
+"""Structured Streaming twins of batch operators over the events table.
 
-The reference has no streaming at all (SURVEY §2.10); this module provides
-the canonical streaming shapes the engine supports, built so that the same
-transformation functions apply to batch and streaming frames (the Spark
-unified-API design):
+The reference has no streaming at all (SURVEY §2.10); each operator here is
+the continuous twin of a batch operator:
 
-- tumbling windowed aggregation (`F.window`)
-- session windows (`F.session_window`)
-- watermark-bounded state (`withWatermark`) for late data
-- stateful streaming dedup (`dropDuplicatesWithinWatermark`)
+- per-key state machines in ``applyInPandasWithState``: ``holt_stream``,
+  ``cusum_stream``, ``funnel_stream`` and ``sessionize_stream`` (with the
+  ``*_report_from_states`` readers that turn drained emissions back into
+  the batch report)
+- a watermarked stream-stream interval join (``interval_join_stream``)
+- a stream-static anti join against a corpus hash index
+  (``screen_stream_against_corpus``)
 
 ``run_available_now`` drains a file-backed stream with the availableNow
 trigger into an in-memory sink — the batch-equivalence test pattern: the
@@ -17,125 +18,16 @@ streamed result must equal the batch query over the same files.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-EVENTS_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-
-
-def read_events_stream(spark: SparkSession, path: str, schema: str = EVENTS_SCHEMA) -> DataFrame:
-    """File-source stream over a directory of parquet event files."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
-def session_counts(events: DataFrame, gap: str = "10 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Per-user session windows: a session closes after ``gap`` of silence."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
-def dedup_within_watermark(events: DataFrame, keys: list[str], watermark: str = "1 hour") -> DataFrame:
-    """Stateful streaming dedup: drops re-deliveries of the same key within
-    the watermark horizon with bounded state."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def stateful_running_totals(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per-key running (count, sum(value)) maintained across micro-batches in
-    Arrow-batched pandas. The canonical shape for operators Spark's built-in
-    streaming aggregations can't express (arbitrary per-group state machines);
-    state is per-key and partitioned, so it scales with the key cardinality,
-    not the stream length.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key_type = events.schema[key].dataType.simpleString()
-    out_schema = f"{key} {key_type}, n_events bigint, sum_value double"
-    state_schema = "n bigint, s double"
-
-    def _update(key_tuple, pdfs, state: GroupState):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, s))
-        yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n], "sum_value": [s]})
-
-    return events.groupBy(key).applyInPandasWithState(
-        _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "r_ts",
-    max_delay: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join on a key within a time interval: a right
-    event matches a left event at most ``max_delay`` AFTER it (the
-    view→purchase attribution shape). Both sides carry watermarks and the
-    join condition bounds event-time distance, so Spark can expire buffered
-    state — without the interval bound a stream-stream join's state grows
-    forever. State per side ≈ watermark-horizon's worth of rows, sharded by
-    the equi-key (scales with key cardinality, not stream length)."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {max_delay}"))
-    )
-    return lw.join(rw, cond, "inner").drop(rw[key])
-
-
-def enrich_with_static(stream_df: DataFrame, static_df: DataFrame, on: list[str], how: str = "left") -> DataFrame:
-    """Stream-static join: every micro-batch joins against the (batch) dim
-    table — the standard streaming enrichment shape. The static side is
-    broadcast, so no stream-side shuffle and no streaming state at all
-    (unlike stream-stream joins, which buffer rows within the watermark)."""
-    return stream_df.join(F.broadcast(static_df), on, how)
-
-
-def run_foreach_batch(stream_df: DataFrame, batch_fn, timeout: int = 120):
-    """foreachBatch sink with the availableNow trigger: arbitrary batch
-    logic per micro-batch (idempotent upserts keyed by batch_id, multi-sink
-    fan-out, JDBC writes) — the escape hatch for sinks Structured Streaming
-    doesn't provide natively. ``batch_fn(batch_df, batch_id)``."""
-    q = stream_df.writeStream.foreachBatch(batch_fn).trigger(availableNow=True).start()
-    q.awaitTermination(timeout)
-    return q
+_DRAIN_TIMEOUT_S = 120
 
 
 def run_available_now(
     stream_df: DataFrame,
     table_name: str,
     output_mode: str = "append",
-    timeout: int = 120,
     rows_hint: int | None = None,
 ):
     """Drain everything currently available into an in-memory table and stop.
@@ -173,7 +65,7 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout)
+        q.awaitTermination(_DRAIN_TIMEOUT_S)
     return q
 
 
@@ -338,242 +230,6 @@ def cusum_stream(
     return events.groupBy(key).applyInPandasWithState(
         _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-
-
-def holt_winters_stream(
-    events: DataFrame,
-    key: str = "user_id",
-    order_col: str = "ts",
-    value_col: str = "value",
-    season: int = 6,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-    gamma: float = 0.3,
-    horizon: int = 3,
-) -> DataFrame:
-    """Streaming twin of :func:`preprocessor_spark.operators.holt.
-    holt_winters_forecast` — the additive triple-smoothing recursion
-    maintained across micro-batches in ``applyInPandasWithState``.
-
-    State per key is O(season): until 2·season observations arrive, raw
-    values buffer (the two-season init is a function of that prefix);
-    afterwards state is (n, level, trend, the season-length seasonal ring,
-    sse, count). Rows must arrive per-key in event order across batches
-    (the append-log contract shared with holt_stream); within a batch they
-    sort by ``order_col``. After a full in-order drain the emitted values
-    equal the batch operator exactly — pytest-asserted. Keys still inside
-    their init window emit nothing yet.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key_type = events.schema[key].dataType.simpleString()
-    out_schema = (
-        f"{key} {key_type}, n bigint, level double, trend double, "
-        "seasonal array<double>, rmse double, forecast array<double>"
-    )
-    # buf holds the init prefix until 2m rows are seen; seas is the
-    # rolling seasonal ring (s_{t-m+1}..s_t) once the recursion is live
-    state_schema = (
-        "n bigint, lvl double, tr double, sse double, cnt bigint, "
-        "live boolean, buf array<double>, seas array<double>"
-    )
-    a, b_, g, m, h = float(alpha), float(beta), float(gamma), int(season), int(horizon)
-
-    def _update(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            n, lvl, tr, sse, cnt, live, buf, seas = state.get
-            buf, seas = list(buf), list(seas)
-        else:
-            n, lvl, tr, sse, cnt, live, buf, seas = 0, 0.0, 0.0, 0.0, 0, False, [], []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        # drop null order_col rows too — the batch twin's where clause
-        # filters both, and a null timestamp must not enter the recursion
-        rows = rows[
-            rows[value_col].notna() & rows[order_col].notna()
-        ].sort_values(order_col)
-
-        def step(v):
-            nonlocal lvl, tr, sse, cnt
-            s_lag = seas.pop(0)
-            err = v - (lvl + tr + s_lag)
-            sse += err * err
-            cnt += 1
-            new_lvl = a * (v - s_lag) + (1.0 - a) * (lvl + tr)
-            tr = b_ * (new_lvl - lvl) + (1.0 - b_) * tr
-            lvl = new_lvl
-            seas.append(g * (v - lvl) + (1.0 - g) * s_lag)
-
-        for v in rows[value_col].astype(float):
-            n += 1
-            if live:
-                step(v)
-                continue
-            buf.append(v)
-            if len(buf) == 2 * m:
-                # replay the batch init on the buffered two seasons, then
-                # run the recursion over the second season's values
-                import numpy as np
-
-                vals = np.array(buf, dtype=np.float64)
-                lvl = float(vals[:m].mean())
-                tr = float((vals[m:].mean() - vals[:m].mean()) / m)
-                seas = [float(x - lvl) for x in vals[:m]]
-                live = True
-                for w in vals[m:]:
-                    step(float(w))
-                buf = []
-        state.update((n, lvl, tr, sse, cnt, live, buf, seas))
-        if live:
-            last_season = seas[-m:]
-            yield pd.DataFrame(
-                {
-                    key: [key_tuple[0]],
-                    "n": [n],
-                    "level": [round(lvl, 6)],
-                    "trend": [round(tr, 6)],
-                    "seasonal": [[round(s, 6) for s in last_season]],
-                    "rmse": [round(float((sse / cnt) ** 0.5), 6)],
-                    "forecast": [[
-                        round(lvl + (i + 1) * tr + last_season[i % m], 6)
-                        for i in range(h)
-                    ]],
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def heavy_hitters_stream(
-    events: DataFrame,
-    value_col: str = "event_type",
-    capacity: int = 64,
-    order_col: str = "ts",
-    shards: int = 1,
-) -> DataFrame:
-    """Streaming Misra-Gries heavy hitters — the standing "what's trending
-    right now" sketch, maintained across micro-batches in
-    ``applyInPandasWithState`` under a single global sketch key.
-
-    Classic MG semantics (the batch twin is
-    :func:`preprocessor_spark.operators.sketches.heavy_hitters`'s
-    per-partition pass, sequentialized): at most ``capacity`` counters;
-    an unseen item beyond capacity decrements every counter and evicts
-    zeros. The streaming guarantee holds at every emission: for every
-    item, est ≤ true ≤ est + n_decrements, and any item with true
-    frequency > N/capacity is guaranteed present. State is O(capacity)
-    regardless of stream length. Rows sort by ``order_col`` within each
-    batch; after an in-order drain the sketch equals the sequential
-    scalar MG over the full stream (pytest-asserted against an
-    independent reference implementation).
-
-    Scale shape (``shards``, round-10): a single state key serializes the
-    stream through one task — right for control-plane cardinalities
-    (event types, domains, status codes). For high-rate streams set
-    ``shards=S``: items route to ``pmod(xxhash64(value), S)`` state keys,
-    so the S sketches update in parallel across state partitions and
-    every item's FULL substream lands in exactly one shard. Because the
-    sharding is value-deterministic, the drain merge is a disjoint union
-    — :func:`merge_sharded_heavy_hitters` — and the per-item bound stays
-    est ≤ true ≤ est + its OWN shard's decrement count (tighter than the
-    batch operator's Σ-over-partitions bound, where an item's stream
-    splits). Presence guarantee per shard: true freq > N_shard/capacity.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if shards < 1:
-        raise ValueError(f"shards must be >= 1, got {shards}")
-    out_schema = (
-        "shard int, item string, est bigint, n bigint, n_decrements bigint"
-    )
-    state_schema = "items array<string>, counts array<long>, n bigint, dec bigint"
-
-    def _update(key_tuple, pdfs, state: GroupState):
-        shard = int(key_tuple[0])
-        if state.exists:
-            items, counts, n, dec = state.get
-            counters = dict(zip(list(items), list(counts)))
-        else:
-            counters, n, dec = {}, 0, 0
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows[
-            rows[value_col].notna() & rows[order_col].notna()
-        ].sort_values(order_col)
-        for v in rows[value_col].astype(str):
-            n += 1
-            if v in counters:
-                counters[v] += 1
-            elif len(counters) < capacity:
-                counters[v] = 1
-            else:
-                dec += 1
-                for key in list(counters):
-                    counters[key] -= 1
-                    if counters[key] == 0:
-                        del counters[key]
-        state.update((list(counters), [counters[i] for i in counters], n, dec))
-        out = sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))
-        yield pd.DataFrame(
-            {
-                "shard": [shard] * len(out),
-                "item": [i for i, _ in out],
-                "est": [c for _, c in out],
-                "n": [n] * len(out),
-                "n_decrements": [dec] * len(out),
-            }
-        )
-
-    if shards == 1:
-        shard_key = F.lit(0)
-    else:
-        # null values are dropped inside the update fn; route them to 0
-        shard_key = F.coalesce(
-            F.pmod(F.xxhash64(F.col(value_col)), F.lit(shards)), F.lit(0)
-        ).cast("int")
-    sketch = events.withColumn("__sk", shard_key)
-    return sketch.groupBy("__sk").applyInPandasWithState(
-        _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def merge_sharded_heavy_hitters(
-    summaries: DataFrame, k: int | None = None
-) -> DataFrame:
-    """Merge the drained sink table of a sharded
-    :func:`heavy_hitters_stream` into one ``(item, est, err, n_total)``
-    frame.
-
-    Per shard, the LATEST emission (max ``n`` — n is nondecreasing) is its
-    final summary; because items route to exactly one shard, the merge is
-    a disjoint union with ``err`` = the item's own shard's decrement count
-    and the additive guarantee est ≤ true ≤ est + err per item. n_total
-    sums the per-shard stream lengths. Batch frame in, batch frame out
-    (run it on ``spark.table(sink)`` after the drain)."""
-    from pyspark.sql import Window
-
-    # summaries is sketch-sized (emissions x capacity rows), so a per-shard
-    # window here is a bounded frame, not a data-sized SinglePartition
-    mx = F.max("n").over(Window.partitionBy("shard"))
-    latest = (
-        summaries.withColumn("__mx", mx)
-        .where(F.col("n") == F.col("__mx"))
-        .drop("__mx")
-        .dropDuplicates(["shard", "item"])
-    )
-    n_total = latest.select("shard", "n").distinct().agg(
-        F.sum("n").alias("n_total")
-    )
-    out = (
-        latest.select("item", "est", F.col("n_decrements").alias("err"))
-        .join(F.broadcast(n_total))
-        .orderBy(F.desc("est"), F.asc("item"))
-    )
-    return out.limit(k) if k else out
 
 
 def funnel_stream(

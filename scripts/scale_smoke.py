@@ -103,10 +103,8 @@ EXPECTED_SUPRALINEAR = {
         "pair output is quadratic in the duplication factor by contract "
         "(every intra-group pair must be emitted)"
     ),
-    # image_phash_neardup left this list at round 10: its default output
-    # is now the CLUSTER frame (one row per image; member pairs never
-    # materialize) — the quadratic pair list is the opt-in
-    # phash_neardup_pairs.
+    # image_phash_neardup is not on this list: its output is the CLUSTER
+    # frame (one row per image; member pairs never materialize).
     "knn_graph_nndescent": (
         "algorithm switch, not a scaling defect: at sf0.1 (2k vectors, "
         "within nndescent.EXACT_MAX_VECTORS=4096) the builder rides the "

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from preprocessor_spark import Preprocessor, persist_scope
 from preprocessor_spark.plans import formatted_plan
-from preprocessor_spark.sources import read_csv, read_json
 
 
 def _prep_roundtrip_values(spark, values, strategy, **kw):
@@ -86,21 +85,6 @@ def test_datetime_epoch_values(spark):
     prep = Preprocessor(df)
     out = prep.transform(df).toPandas()
     assert out["dat"].iloc[0] == pytest.approx(10.0)  # seconds since epoch
-
-
-def test_csv_json_sources(spark, tmp_path):
-    pdf = pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", "z"]})
-    sdf = spark.createDataFrame(pdf)
-    csv_dir = str(tmp_path / "csv")
-    json_dir = str(tmp_path / "json")
-    sdf.write.mode("overwrite").option("header", "true").csv(csv_dir)
-    sdf.write.mode("overwrite").json(json_dir)
-
-    back_csv = read_csv(spark, csv_dir).toPandas().sort_values("a").reset_index(drop=True)
-    assert back_csv["a"].tolist() == [1, 2, 3]
-    assert back_csv["b"].tolist() == ["x", "y", "z"]
-    back_json = read_json(spark, json_dir).toPandas().sort_values("a").reset_index(drop=True)
-    assert back_json["b"].tolist() == ["x", "y", "z"]
 
 
 def test_asof_forward_direction(spark):
@@ -465,20 +449,6 @@ def test_compact_parquet(spark, sf_dir, tmp_path):
     assert spark.read.parquet(dest).count() == d.count()
 
 
-def test_read_parquet_merge_schema(spark, tmp_path):
-    from preprocessor_spark.sources import read_parquet
-
-    base = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id bigint, s string").write.parquet(f"{base}/p=1")
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id bigint, s string, score double"
-    ).write.parquet(f"{base}/p=2")
-    merged = read_parquet(spark, base, merge_schema=True)
-    assert set(merged.columns) == {"id", "s", "score", "p"}
-    rows = {r["id"]: r["score"] for r in merged.collect()}
-    assert rows[1] is None and rows[2] == 9.5
-
-
 def test_write_jsonl_roundtrip(spark, sf_dir, tmp_path):
     from preprocessor_spark.sources import write_jsonl
 
@@ -492,32 +462,3 @@ def test_write_jsonl_roundtrip(spark, sf_dir, tmp_path):
     a = {r["doc_id"]: r["text"] for r in d.collect()}
     b = {r["doc_id"]: r["text"] for r in back.collect()}
     assert a == b
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    from preprocessor_spark.plans import formatted_plan
-    from preprocessor_spark.sources import read_orc, write_orc
-
-    sdf = spark.range(100).selectExpr("id", "id * 2 AS v", "CAST(id % 3 AS STRING) AS g")
-    orc_dir = str(tmp_path / "orc")
-    write_orc(sdf, orc_dir)
-    back = read_orc(spark, orc_dir)
-    assert back.count() == 100
-    assert sorted(back.columns) == ["g", "id", "v"]
-    assert back.agg(F.sum("v")).collect()[0][0] == sdf.agg(F.sum("v")).collect()[0][0]
-    # predicate reaches the ORC scan (same pushdown story as parquet)
-    plan = formatted_plan(back.filter(F.col("id") > 50))
-    assert "PushedFilters" in plan and "GreaterThan(id,50)" in plan, plan
-
-
-def test_text_source_line_and_wholefile(spark, tmp_path):
-    from preprocessor_spark.sources import read_text
-
-    d = tmp_path / "txt"
-    d.mkdir()
-    (d / "a.txt").write_text("line one\nline two\n")
-    (d / "b.txt").write_text("solo\n")
-    lines = read_text(spark, str(d)).toPandas()["value"].sort_values().tolist()
-    assert lines == ["line one", "line two", "solo"]
-    whole = read_text(spark, str(d), whole_file=True).toPandas()["value"].tolist()
-    assert sorted(whole) == ["line one\nline two\n", "solo\n"]

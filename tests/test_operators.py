@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from preprocessor_spark.operators.asof import asof_join
 from preprocessor_spark.operators.dedup import (
     embedding_neardup_pairs,
-    exact_dedup,
     exact_dup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -21,7 +20,7 @@ from preprocessor_spark.operators.dedup import (
 )
 from preprocessor_spark.operators.multimodal import attach_media_meta, image_features
 from preprocessor_spark.operators.similarity import cosine_topk, lsh_cosine_topk
-from preprocessor_spark.operators.text import text_profile
+from preprocessor_spark.operators.text import lang_id_expr, quality_exprs, quality_score_expr
 
 
 @pytest.fixture(scope="module")
@@ -46,9 +45,6 @@ def docs(spark):
 
 
 def test_exact_dedup(docs):
-    out = exact_dedup(docs, ["text"], id_col="doc_id").toPandas()
-    assert len(out) == 4
-    assert 0 in set(out.doc_id) and 1 not in set(out.doc_id)
     groups = exact_dup_groups(docs, "text", "doc_id").toPandas()
     assert groups.n_dupes.max() == 2
     assert groups.loc[groups.n_dupes == 2, "keep_id"].iloc[0] == 0
@@ -118,7 +114,18 @@ def test_text_profile(spark):
         ],
         "doc_id bigint, text string",
     )
-    out = text_profile(df, "text").toPandas().set_index("doc_id")
+    t = F.col("text")
+    out = (
+        df.withColumns(
+            {
+                **quality_exprs(t),
+                "quality_score": quality_score_expr(t),
+                "lang_pred": lang_id_expr(t),
+            }
+        )
+        .toPandas()
+        .set_index("doc_id")
+    )
     assert out.loc[1, "lang_pred"] == "en"
     assert out.loc[2, "lang_pred"] == "es"
     assert out.loc[3, "lang_pred"] == "und"
@@ -180,90 +187,6 @@ def test_multimodal_plumbing(spark):
     f2 = image_features(df, "id", "img", decoder="fake").toPandas()
     pd.testing.assert_frame_equal(feats.sort_values("id").reset_index(drop=True),
                                   f2.sort_values("id").reset_index(drop=True))
-
-
-def test_streaming_batch_equivalence(spark, sf_dir, tmp_path):
-    """Streamed tumbling counts (availableNow) == batch groupBy on the same
-    data — the unified-API contract."""
-    import __spark_entry__ as em
-    from preprocessor_spark.streaming import read_events_stream, run_available_now, tumbling_counts
-
-    events = em._t(spark, sf_dir, "events")
-    # write a clean copy so the stream source sees standard µs timestamps
-    src = str(tmp_path / "events_stream")
-    events.write.mode("overwrite").parquet(src)
-
-    stream = read_events_stream(spark, src)
-    out = tumbling_counts(stream, window="1 hour")
-    run_available_now(out, "stream_tumbling", output_mode="complete")
-    streamed = spark.table("stream_tumbling").toPandas()
-
-    batch = (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-        .toPandas()
-    )
-    key = ["window_start", "event_type"]
-    a = streamed.sort_values(key).reset_index(drop=True)
-    b = batch.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert a.n_events.tolist() == b.n_events.tolist()
-
-
-def test_streaming_dedup(spark, tmp_path):
-    from preprocessor_spark.streaming import dedup_within_watermark, read_events_stream, run_available_now
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": [1, 1, 2, 2, 3],
-            "ts": pd.to_datetime(["2024-01-01 00:00:00"] * 5),
-            "user_id": [1] * 5,
-            "event_type": ["click"] * 5,
-            "value": [1.0] * 5,
-            "props": ["{}"] * 5,
-        }
-    )
-    src = str(tmp_path / "dup_events")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = read_events_stream(spark, src)
-    deduped = dedup_within_watermark(stream, ["event_id"])
-    run_available_now(deduped, "stream_dedup")
-    out = spark.table("stream_dedup").toPandas()
-    assert sorted(out.event_id.tolist()) == [1, 2, 3]
-
-
-def test_stateful_running_totals(spark, tmp_path):
-    """applyInPandasWithState custom stateful operator: streamed per-user
-    running totals must equal the batch groupBy after a full drain."""
-    from preprocessor_spark.streaming import (
-        read_events_stream,
-        run_available_now,
-        stateful_running_totals,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(10),
-            "ts": pd.to_datetime(["2024-01-01 00:00:00"] * 10),
-            "user_id": [1, 1, 1, 2, 2, 3, 3, 3, 3, 4],
-            "event_type": ["click"] * 10,
-            "value": [float(i) for i in range(10)],
-            "props": ["{}"] * 10,
-        }
-    )
-    src = str(tmp_path / "state_events")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = read_events_stream(spark, src)
-    run_available_now(stateful_running_totals(stream), "stream_state", output_mode="update")
-    out = spark.table("stream_state").toPandas()
-    # final state per user (last update wins)
-    final = out.groupby("user_id").last().reset_index()
-    expected = pdf.groupby("user_id").agg(n_events=("value", "size"), sum_value=("value", "sum")).reset_index()
-    m = final.merge(expected, on="user_id", suffixes=("", "_exp"))
-    assert len(m) == 4
-    assert (m.n_events == m.n_events_exp).all()
-    assert (m.sum_value == m.sum_value_exp).all()
 
 
 def test_ivf_topk_matches_bruteforce(spark, sf_dir):
@@ -700,68 +623,33 @@ def test_two_stage_agg_matches_direct(spark):
     assert [sorted(t) for t in got["tags"]] == [sorted(t) for t in want["tags"]]
 
 
-def test_stream_static_enrich_and_foreach_batch(spark, sf_dir, tmp_path):
-    """Stream-static broadcast enrichment drained through a foreachBatch
-    sink must equal the batch join over the same files; foreachBatch
-    receives monotonically increasing batch ids."""
-    import __spark_entry__ as em
-    from preprocessor_spark.streaming import (
-        enrich_with_static,
-        read_events_stream,
-        run_foreach_batch,
-    )
-
-    events = em._t(spark, sf_dir, "events").limit(500)
-    src = str(tmp_path / "events_enrich")
-    events.write.mode("overwrite").parquet(src)
-
-    dim = spark.createDataFrame(
-        [(i, f"segment_{i % 3}") for i in range(200)], "user_id bigint, segment string"
-    )
-    stream = read_events_stream(spark, src)
-    enriched = enrich_with_static(stream, dim, ["user_id"])
-
-    seen: list[tuple] = []
-
-    def _collect(batch_df, batch_id):
-        for r in batch_df.select("event_id", "segment").collect():
-            seen.append((r["event_id"], r["segment"]))
-
-    run_foreach_batch(enriched, _collect)
-
-    batch = {
-        (r["event_id"], r["segment"])
-        for r in spark.read.parquet(src).join(dim, ["user_id"], "left")
-        .select("event_id", "segment").collect()
-    }
-    assert set(seen) == batch
-    assert len(seen) == 500
-
-
 # ---------------------------------------------------------------------------
 # sampling / mixing
 # ---------------------------------------------------------------------------
 
-def test_hash_sample_deterministic_and_stable(spark, sf_dir):
-    from preprocessor_spark.operators.sampling import hash_sample
+def _hash_sample(d, fraction, salt=""):
+    """One fraction for every row: no per-stratum overrides."""
+    from preprocessor_spark.operators.sampling import stratified_hash_sample
 
+    return stratified_hash_sample(d, "doc_id", "source", {}, default_fraction=fraction, salt=salt)
+
+
+def test_hash_sample_deterministic_and_stable(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = {r["doc_id"] for r in hash_sample(d, "doc_id", 0.3).select("doc_id").collect()}
-    b = {r["doc_id"] for r in hash_sample(d.repartition(7), "doc_id", 0.3).select("doc_id").collect()}
+    a = {r["doc_id"] for r in _hash_sample(d, 0.3).select("doc_id").collect()}
+    b = {r["doc_id"] for r in _hash_sample(d.repartition(7), 0.3).select("doc_id").collect()}
     assert a == b, "sample must be stable under repartitioning"
     total = d.count()
     assert abs(len(a) / total - 0.3) < 0.06
     # nested property: a smaller fraction is a subset of a larger one
-    c = {r["doc_id"] for r in hash_sample(d, "doc_id", 0.1).select("doc_id").collect()}
+    c = {r["doc_id"] for r in _hash_sample(d, 0.1).select("doc_id").collect()}
     assert c <= a
 
 
 def test_hash_sample_salt_redeals(spark, sf_dir):
-    from preprocessor_spark.operators.sampling import hash_sample
-
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = {r["doc_id"] for r in hash_sample(d, "doc_id", 0.3).collect()}
-    b = {r["doc_id"] for r in hash_sample(d, "doc_id", 0.3, salt="exp2").collect()}
+    a = {r["doc_id"] for r in _hash_sample(d, 0.3).collect()}
+    b = {r["doc_id"] for r in _hash_sample(d, 0.3, salt="exp2").collect()}
     assert a != b
 
 
@@ -905,18 +793,20 @@ def test_bm25_no_cartesian(spark, sf_dir):
 def test_l2_normalize_and_quantize(spark, sf_dir):
     import numpy as np
 
-    from preprocessor_spark.operators.embeddings import (
-        l2_norm_expr,
-        normalize_embeddings,
-        quantize_embeddings,
-    )
+    from preprocessor_spark.operators.embeddings import l2_norm_expr, quantize_int8_exprs
     from pyspark.sql import functions as F  # noqa: F811
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
-    norms = normalize_embeddings(e).select(l2_norm_expr(F.col("embedding")).alias("n")).toPandas()["n"]
-    assert np.allclose(norms, 1.0)
+    qe = quantize_int8_exprs(F.col("embedding"))
+    q = e.select(
+        "embedding",
+        l2_norm_expr(F.col("embedding")).alias("norm"),
+        qe["q"].alias("embedding_q8"),
+        qe["scale"].alias("embedding_scale"),
+    ).toPandas()
+    want = [np.linalg.norm(np.asarray(v, dtype=np.float64)) for v in q["embedding"]]
+    assert np.allclose(q["norm"], want)
 
-    q = quantize_embeddings(e).toPandas()
     for _, row in q.head(20).iterrows():
         x = np.asarray(row["embedding"], dtype=np.float64)
         qv = np.asarray(row["embedding_q8"])
@@ -927,13 +817,13 @@ def test_l2_normalize_and_quantize(spark, sf_dir):
 
 
 def test_zero_vector_edge_cases(spark):
-    from preprocessor_spark.operators.embeddings import normalize_embeddings, quantize_embeddings
+    from preprocessor_spark.operators.embeddings import l2_norm_expr, quantize_int8_exprs
 
     df = spark.createDataFrame([(1, [0.0, 0.0, 0.0])], "vec_id bigint, embedding array<float>")
-    n = normalize_embeddings(df).collect()[0]["embedding"]
-    assert list(n) == [0.0, 0.0, 0.0]
-    q = quantize_embeddings(df).collect()[0]
-    assert list(q["embedding_q8"]) == [0, 0, 0]
+    v = F.col("embedding")
+    row = df.select(l2_norm_expr(v).alias("n"), quantize_int8_exprs(v)["q"].alias("q")).collect()[0]
+    assert row["n"] == 0.0
+    assert list(row["q"]) == [0, 0, 0]
 
 
 def test_pca_matches_numpy(spark, sf_dir):
@@ -1099,55 +989,6 @@ def test_repetition_hand_cases(spark):
     assert got["clean"]["top_2gram_token_frac"] == pytest.approx(2 / 6)
     e = got["empty"]
     assert e["dup_line_frac"] == 0.0 and e["top_2gram_token_frac"] == 0.0
-
-
-def test_stream_stream_interval_join(spark, sf_dir, tmp_path):
-    """Stream-stream interval join drained with availableNow must equal the
-    batch interval join over the same files (views joined to purchases of
-    the same user within 1 hour after the view)."""
-    import __spark_entry__ as em
-    from preprocessor_spark.streaming import interval_join_streams, read_events_stream
-
-    events = em._t(spark, sf_dir, "events").limit(2000)
-    views = events.filter("event_type = 'view'").select("user_id", "ts", "event_id")
-    buys = (
-        events.filter("event_type = 'purchase'")
-        .select(F.col("user_id"), F.col("ts").alias("r_ts"), F.col("event_id").alias("r_event_id"))
-    )
-    lsrc, rsrc = str(tmp_path / "views"), str(tmp_path / "buys")
-    views.write.mode("overwrite").parquet(lsrc)
-    buys.write.mode("overwrite").parquet(rsrc)
-
-    ls = read_events_stream(spark, lsrc, schema="user_id bigint, ts timestamp, event_id bigint")
-    rs = read_events_stream(spark, rsrc, schema="user_id bigint, r_ts timestamp, r_event_id bigint")
-    joined = interval_join_streams(ls, rs, max_delay="1 hour")
-
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssjoin")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["event_id"], r["r_event_id"])
-        for r in spark.table("ssjoin").select("event_id", "r_event_id").collect()
-    }
-
-    want = {
-        (r["event_id"], r["r_event_id"])
-        for r in spark.read.parquet(lsrc)
-        .alias("l")
-        .join(
-            spark.read.parquet(rsrc).alias("r"),
-            F.expr("l.user_id = r.user_id AND r.r_ts >= l.ts AND r.r_ts <= l.ts + INTERVAL 1 HOUR"),
-        )
-        .select("l.event_id", "r.r_event_id")
-        .collect()
-    }
-    assert got == want
-    assert len(got) > 0
 
 
 # ---------------------------------------------------------------------------
@@ -1860,18 +1701,21 @@ def test_batch_sessionize_equals_streaming_session_window(spark, sf_dir, tmp_pat
     session count and per-session event counts must agree exactly."""
     import __spark_entry__ as em
     from preprocessor_spark.operators.sessions import session_stats
-    from preprocessor_spark.streaming import (
-        read_events_stream,
-        run_available_now,
-        session_counts,
-    )
+    from preprocessor_spark.streaming import run_available_now
 
     events = em._t(spark, sf_dir, "events")
     src = str(tmp_path / "events_sessions")
     events.write.mode("overwrite").parquet(src)
 
-    streamed_q = session_counts(
-        read_events_stream(spark, src), gap="1 hour", watermark="100 days"
+    streamed_q = (
+        spark.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+            "value double, props string"
+        )
+        .parquet(src)
+        .withWatermark("ts", "100 days")
+        .groupBy(F.session_window("ts", "1 hour").alias("s"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
     run_available_now(streamed_q, "stream_sessions", output_mode="complete")
     streamed = spark.table("stream_sessions").toPandas()
@@ -2000,10 +1844,11 @@ def test_streaming_quality_filter_equals_batch(spark, sf_dir, tmp_path):
 
 
 def test_group_hash_split_no_leakage(spark, sf_dir):
-    from preprocessor_spark.operators.splits import group_hash_split
+    """Splitting on the GROUP key keeps every row of a group together."""
+    from preprocessor_spark.operators.splits import hash_split
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = group_hash_split(d, "source", {"train": 0.8, "val": 0.1, "test": 0.1})
+    out = hash_split(d, "source", {"train": 0.8, "val": 0.1, "test": 0.1})
     # every group maps to exactly one split
     per_group = out.groupBy("source").agg(F.count_distinct("split").alias("n")).collect()
     assert all(r["n"] == 1 for r in per_group)
@@ -2011,7 +1856,7 @@ def test_group_hash_split_no_leakage(spark, sf_dir):
     # deterministic across repartition
     a = {(r["doc_id"], r["split"]) for r in out.select("doc_id", "split").collect()}
     b = {(r["doc_id"], r["split"]) for r in
-         group_hash_split(d.repartition(7), "source", {"train": 0.8, "val": 0.1, "test": 0.1})
+         hash_split(d.repartition(7), "source", {"train": 0.8, "val": 0.1, "test": 0.1})
          .select("doc_id", "split").collect()}
     assert a == b
 

@@ -78,10 +78,13 @@ def float_vectors(draw):
 @settings(**_SETTINGS)
 @given(float_vectors())
 def test_quantize_dequantize_error_bound(spark, vec):
-    from preprocessor_spark.operators.embeddings import quantize_embeddings
+    from preprocessor_spark.operators.embeddings import quantize_int8_exprs
 
     df = spark.createDataFrame([(1, vec)], "vec_id bigint, embedding array<float>")
-    row = quantize_embeddings(df).collect()[0]
+    e = quantize_int8_exprs(F.col("embedding"))
+    row = df.select(
+        "embedding", e["q"].alias("embedding_q8"), e["scale"].alias("embedding_scale")
+    ).collect()[0]
     x = np.asarray(row["embedding"], dtype=np.float64)  # float32-rounded input
     q = np.asarray(row["embedding_q8"], dtype=np.float64)
     s = row["embedding_scale"]

@@ -6,9 +6,9 @@ round-10 operator hardening work.
   DECIMAL(28,10) and would silently NULL out of the fold SSE).
 - decision_stump: empty / all-null input returns an empty frame with the
   output schema instead of a driver-side ZeroDivisionError.
-- holt_winters_stream (and the holt/cusum/MG stream twins): null
-  order_col rows are filtered exactly like the batch twins' where clause,
-  preserving the documented exact batch/stream equivalence.
+- holt_stream (and the cusum stream twin): null order_col rows are
+  filtered exactly like the batch twins' where clause, preserving the
+  documented exact batch/stream equivalence.
 """
 
 from __future__ import annotations
@@ -89,14 +89,14 @@ def test_decision_stump_empty_input_returns_empty_frame(spark):
     assert decision_stump(allnull, "x", "y").count() == 0
 
 
-def test_holt_winters_stream_drops_null_order_rows_like_batch(spark, tmp_path):
+def test_holt_stream_drops_null_order_rows_like_batch(spark, tmp_path):
     """A null-timestamp event must not enter the recursion (the batch twin
     filters both value and order nulls); equivalence must hold when the
     source contains null order_col rows."""
     import time
 
-    from preprocessor_spark.operators.holt import holt_winters_forecast
-    from preprocessor_spark.streaming import holt_winters_stream, run_available_now
+    from preprocessor_spark.operators.holt import holt_forecast
+    from preprocessor_spark.streaming import holt_stream, run_available_now
 
     rng = np.random.default_rng(41)
     m = 4
@@ -119,7 +119,7 @@ def test_holt_winters_stream_drops_null_order_rows_like_batch(spark, tmp_path):
     pdf = pd.DataFrame(
         rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    src = str(tmp_path / "hw_null_events")
+    src = str(tmp_path / "holt_null_events")
     early = pdf[pdf.ts.isna() | (pdf.ts < pd.Timestamp("2024-01-01 00:11:00"))]
     late = pdf[pdf.ts.notna() & (pdf.ts >= pd.Timestamp("2024-01-01 00:11:00"))]
     spark.createDataFrame(early).coalesce(1).write.mode("overwrite").parquet(src)
@@ -134,17 +134,15 @@ def test_holt_winters_stream_drops_null_order_rows_like_batch(spark, tmp_path):
         .parquet(src)
     )
     run_available_now(
-        holt_winters_stream(stream, "user_id", "ts", "value", season=m),
-        "hw_null_state", output_mode="update",
+        holt_stream(stream, "user_id", "ts", "value"),
+        "holt_null_state", output_mode="update",
     )
-    out = spark.table("hw_null_state").toPandas()
+    out = spark.table("holt_null_state").toPandas()
     final = (
         out.sort_values("n").groupby("user_id").last().reset_index().set_index("user_id")
     )
     batch = (
-        holt_winters_forecast(
-            spark.createDataFrame(pdf), "user_id", "ts", "value", season=m
-        )
+        holt_forecast(spark.createDataFrame(pdf), "user_id", "ts", "value")
         .toPandas()
         .set_index("user_id")
     )
@@ -152,7 +150,7 @@ def test_holt_winters_stream_drops_null_order_rows_like_batch(spark, tmp_path):
     for uid in batch.index:
         for col in ("n", "level", "trend", "rmse"):
             assert final.loc[uid, col] == batch.loc[uid, col], (uid, col)
-        assert list(final.loc[uid, "seasonal"]) == list(batch.loc[uid, "seasonal"])
+        assert list(final.loc[uid, "forecast"]) == list(batch.loc[uid, "forecast"])
 
 
 class TestPhashClusters:
@@ -375,91 +373,3 @@ def _mg_ref(seq, cap):
                 if counters[key] == 0:
                     del counters[key]
     return counters, dec
-
-
-def test_sharded_heavy_hitters_stream_merge_guarantee(spark, tmp_path):
-    """Round-10: shard-and-merge in the streaming MG path — 4 shards, each
-    shard's drained sketch equals the sequential MG over ITS value-hash
-    substream, and the merged frame keeps est <= true <= est + err per
-    item (err = the item's own shard's decrement count)."""
-    import time
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from preprocessor_spark.streaming import (
-        heavy_hitters_stream,
-        merge_sharded_heavy_hitters,
-        run_available_now,
-    )
-
-    rng = np.random.default_rng(73)
-    items = [f"hot{i}" for i in range(6)] * 150 + [
-        f"tail{int(rng.integers(0, 60))}" for _ in range(700)
-    ]
-    rng.shuffle(items)
-    t0 = pd.Timestamp("2024-01-01")
-    rows = [
-        (i, (t0 + pd.Timedelta(seconds=i)).to_pydatetime(), 1, it, 0.0, "{}")
-        for i, it in enumerate(items)
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    src = str(tmp_path / "hh4_events")
-    spark.createDataFrame(pdf[pdf.event_id < 800]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(pdf[pdf.event_id >= 800]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    cap, S = 12, 4
-    run_available_now(
-        heavy_hitters_stream(
-            stream, "event_type", capacity=cap, order_col="ts", shards=S
-        ),
-        "hh4_state", output_mode="update",
-    )
-    sink = spark.table("hh4_state")
-    # item -> shard via the same JVM hash expression the stream used
-    distinct_items = sorted(set(items))
-    shard_of = {
-        r["item"]: r["shard"]
-        for r in spark.createDataFrame([(i,) for i in distinct_items], "item string")
-        .select("item", F.pmod(F.xxhash64("item"), F.lit(S)).cast("int").alias("shard"))
-        .collect()
-    }
-    assert len(set(shard_of.values())) == S  # all 4 shards exercised
-    # per-shard exact equivalence vs the sequential MG on its substream
-    out = sink.toPandas()
-    for s in range(S):
-        sub = [v for v in items if shard_of[v] == s]
-        ref, ref_dec = _mg_ref(sub, cap)
-        srows = out[out["shard"] == s]
-        final = srows[srows["n"] == srows["n"].max()]
-        assert dict(zip(final["item"], final["est"])) == ref, s
-        assert int(final["n_decrements"].iloc[0]) == ref_dec, s
-        assert int(final["n"].iloc[0]) == len(sub), s
-    # merged drain: disjoint union with the per-item additive bound
-    merged = merge_sharded_heavy_hitters(sink).toPandas()
-    assert merged["item"].is_unique
-    assert int(merged["n_total"].iloc[0]) == len(items)
-    true = Counter(items)
-    for _, r in merged.iterrows():
-        assert r["est"] <= true[r["item"]] <= r["est"] + r["err"], dict(r)
-    # per-shard presence guarantee: true freq > N_shard/capacity is present
-    for s in range(S):
-        n_shard = sum(1 for v in items if shard_of[v] == s)
-        present = set(merged[merged["item"].map(shard_of) == s]["item"])
-        for it, c in true.items():
-            if shard_of[it] == s and c > n_shard / cap:
-                assert it in present, (it, c, n_shard)

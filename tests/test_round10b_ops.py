@@ -791,45 +791,6 @@ def test_wquantile_and_spearman_plan_shapes(spark):
     assert "CartesianProduct" not in plan_sp
 
 
-def test_single_shard_mg_merge_compatible(spark, tmp_path):
-    """shards=1 (the default) emits shard 0 and merges through the same
-    helper — back-compat for the round-9 single-sketch contract."""
-    import time
-
-    from preprocessor_spark.streaming import (
-        heavy_hitters_stream,
-        merge_sharded_heavy_hitters,
-        run_available_now,
-    )
-
-    t0 = pd.Timestamp("2024-01-01")
-    rows = [
-        (i, (t0 + pd.Timedelta(seconds=i)).to_pydatetime(), 1,
-         f"k{i % 5}", 0.0, "{}")
-        for i in range(100)
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    src = str(tmp_path / "hh1_events")
-    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(src)
-    time.sleep(0.2)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(src)
-    )
-    run_available_now(
-        heavy_hitters_stream(stream, "event_type", capacity=8, order_col="ts"),
-        "hh1_state", output_mode="update",
-    )
-    merged = merge_sharded_heavy_hitters(spark.table("hh1_state")).toPandas()
-    assert int(merged["n_total"].iloc[0]) == 100
-    assert set(merged["item"]) == {f"k{i}" for i in range(5)}
-    assert (merged["est"] == 20).all() and (merged["err"] == 0).all()
-
-
 def test_gini_negative_values_still_evaluate(spark):
     """Negatives are accepted (documented) — the identity still computes
     and the scalar reference agrees."""

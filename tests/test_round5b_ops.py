@@ -940,70 +940,3 @@ def test_url_canonical_idempotent_property(spark, scheme, host, path, params):
     c1 = once.collect()[0]["url"]
     c2 = parse_urls(once, "url").collect()[0]["url_canonical"]
     assert c1 == c2
-
-
-# ----------------------------------------------------- IVF index lifecycle
-
-
-def test_ivf_index_save_load_search_identical(tmp_path, spark):
-    """Save → load → search must equal the fresh-built search exactly
-    (float64 round-trips through parquet)."""
-    from preprocessor_spark.operators.similarity import (
-        ivf_assign,
-        ivf_cosine_topk,
-        ivf_load_index,
-        ivf_save_index,
-        ivf_search,
-        ivf_train_centroids,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 8)
-    fresh = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cosine"], 9), r["rank"])
-        for r in ivf_cosine_topk(e, q, "embedding", "vec_id", k=5, n_probe=6).collect()
-    )
-    cents = ivf_train_centroids(e, "embedding")
-    idx = ivf_assign(e, cents, "embedding", "vec_id")
-    ivf_save_index(idx, cents, str(tmp_path / "ivf"))
-    cents2, idx2 = ivf_load_index(spark, str(tmp_path / "ivf"))
-    import numpy as np
-    assert np.array_equal(cents, cents2)
-    loaded = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cosine"], 9), r["rank"])
-        for r in ivf_search(idx2, cents2, q, "embedding", "vec_id", k=5, n_probe=6).collect()
-    )
-    assert loaded == fresh and len(loaded) > 0
-
-
-def test_ivf_index_append_without_retraining(tmp_path, spark):
-    """Index new vectors under the SAME saved centroids and append: a
-    query duplicating an appended vector must retrieve it at cosine 1."""
-    from preprocessor_spark.operators.similarity import (
-        ivf_assign,
-        ivf_load_index,
-        ivf_save_index,
-        ivf_search,
-        ivf_train_centroids,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    old = e.filter(F.col("vec_id") < 150)
-    new = e.filter(F.col("vec_id") >= 150).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    cents = ivf_train_centroids(old, "embedding")
-    ivf_save_index(ivf_assign(old, cents, "embedding", "vec_id"), cents, str(tmp_path / "ix"))
-    cents2, idx = ivf_load_index(spark, str(tmp_path / "ix"))
-    combined = idx.unionByName(ivf_assign(new, cents2, "embedding", "vec_id"))
-    probe = e.filter(F.col("vec_id") >= 150).limit(3)
-    hits = ivf_search(combined, cents2, probe, "embedding", "vec_id", k=1, n_probe=2).collect()
-    assert len(hits) == 3
-    for r in hits:
-        assert r["neighbor_id"] == r["query_id"] + 1_000_000
-        assert abs(r["cosine"] - 1.0) < 1e-9
-
-
-# ------------------------------------------------------- polymorphic UDTF
-
-

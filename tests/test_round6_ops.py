@@ -8,7 +8,6 @@ import gzip
 import re
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -127,19 +126,23 @@ class TestStreamingWebPipeline:
 
 class TestIvfPartitionPruning:
     def test_probe_reads_only_probed_cell_files(self, spark, tmp_path):
-        """The saved-index claim made measurable: a 2-probe search of a
-        LOADED index must (a) return exactly the unpruned results and
-        (b) scan only the probed cells' partition directories — asserted
-        at the file level via input_file_name on the pruned scan."""
+        """An IVF-PQ index saved ``partitionBy("__cell")`` and read back:
+        a 2-probe search must (a) return exactly the in-memory index's
+        results and (b) push the probed cells into the scan as a partition
+        filter, so only those cells' directories are read — asserted at
+        the file level via input_file_name on the pruned scan."""
         import numpy as np
 
+        from preprocessor_spark.operators.pq import (
+            ivfpq_assign_encode,
+            ivfpq_search,
+            pq_train,
+        )
         from preprocessor_spark.operators.similarity import (
-            ivf_assign,
-            ivf_load_index,
-            ivf_save_index,
-            ivf_search,
+            _nearest_cells_udf,
             ivf_train_centroids,
         )
+        from preprocessor_spark.plans import formatted_plan
 
         rng = np.random.RandomState(2)
         rows = [
@@ -147,35 +150,17 @@ class TestIvfPartitionPruning:
         ]
         corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         cents = ivf_train_centroids(corpus, "embedding", n_cells=8, seed=2)
-        idx = ivf_assign(corpus, cents, "embedding", "vec_id")
-        path = str(tmp_path / "ivf")
-        ivf_save_index(idx, cents, path)
-        cents2, loaded = ivf_load_index(spark, path)
+        books = pq_train(corpus, "embedding", m=4, n_codes=16, seed=2)
+        idx = ivfpq_assign_encode(corpus, cents, books, "embedding", "vec_id")
+        path = str(tmp_path / "ivfpq")
+        idx.write.mode("overwrite").partitionBy("__cell").parquet(path)
+        loaded = spark.read.parquet(path)
 
         q = corpus.filter(F.col("vec_id") < 3)
-        got = ivf_search(loaded, cents2, q, "embedding", "vec_id", k=4, n_probe=2)
-        # reference: the same probes through a plain unpruned equi-join
-        from preprocessor_spark.operators.similarity import (
-            _dot,
-            _nearest_cells_udf,
-            _normalized,
-        )
-
-        qx = _normalized(q, "embedding", "vec_id", "query_id", "__qv").withColumn(
-            "__cell", F.explode(F.slice(_nearest_cells_udf(cents2)(F.col("__qv")), 1, 2))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.round("cosine", 6).desc(), F.col("neighbor_id").asc()
-        )
-        want = (
-            loaded.join(qx, "__cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", _dot(F.col("__qv"), F.col("__cv")).alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 4)
-        )
+        got = ivfpq_search(loaded, cents, books, q, "embedding", "vec_id", k=4, n_probe=2)
+        want = ivfpq_search(idx, cents, books, q, "embedding", "vec_id", k=4, n_probe=2)
         canon = lambda df: sorted(  # noqa: E731
-            (r["query_id"], r["rank"], r["neighbor_id"], round(r["cosine"], 9))
+            (r["query_id"], r["rank"], r["neighbor_id"], round(r["adc_score"], 9))
             for r in df.collect()
         )
         assert canon(got) == canon(want) and len(canon(got)) == 12
@@ -185,7 +170,7 @@ class TestIvfPartitionPruning:
         probe_rows = (
             q.select(
                 F.explode(
-                    F.slice(_nearest_cells_udf(cents2)(F.col("embedding")), 1, 2)
+                    F.slice(_nearest_cells_udf(cents)(F.col("embedding")), 1, 2)
                 ).alias("__cell")
             )
             .distinct()
@@ -197,8 +182,6 @@ class TestIvfPartitionPruning:
         )
         assert len(probed) < len(all_cells), "fixture must leave unprobed cells"
         # the search itself pushes exactly those cells into the scan
-        from preprocessor_spark.plans import formatted_plan
-
         cells = ",".join(str(c) for c in probed)
         assert re.search(
             rf"PartitionFilters: \[__cell#\d+ IN \({cells}\)", formatted_plan(got)
@@ -780,6 +763,11 @@ class TestDsir:
         assert (got.dsir_weight == got2.dsir_weight).all()
 
 
+def _ks_statistic(report):
+    """KS = max(d_abs) over the report (a max is order-independent)."""
+    return float(report.agg(F.max("d_abs")).collect()[0][0])
+
+
 class TestKSDrift:
     def test_ks_matches_numpy_ecdf(self, spark):
         """Exact KS report vs a numpy searchsorted ECDF oracle, including
@@ -787,7 +775,7 @@ class TestKSDrift:
         import numpy as np
         import pandas as pd
 
-        from preprocessor_spark.operators.drift import ks_report, ks_statistic
+        from preprocessor_spark.operators.drift import ks_report
 
         rng = np.random.RandomState(7)
         a = np.round(rng.normal(0.0, 1.0, 400), 2)        # ties guaranteed
@@ -804,7 +792,7 @@ class TestKSDrift:
         assert np.allclose(pdf["ecdf_ref"].values, np.round(er, 6))
         assert np.allclose(pdf["ecdf_cur"].values, np.round(ec, 6))
         want = float(np.max(np.abs(er - ec)))
-        got = ks_statistic(ks_report(ref, cur, "x", num_partitions=5))
+        got = _ks_statistic(ks_report(ref, cur, "x", num_partitions=5))
         # the report's d_abs is rounded to 6 decimals (driver-hash contract)
         assert abs(got - want) <= 5e-7
         # row count = pooled distinct values
@@ -949,16 +937,6 @@ class TestProductQuantization:
         recall = hits / tot
         assert recall >= 0.6, f"recall@10 = {recall:.3f}"
 
-    def test_pq_save_load_bit_identical(self, spark, emb, tmp_path):
-        import numpy as np
-
-        from preprocessor_spark.operators.pq import pq_load, pq_save, pq_train
-
-        books = pq_train(emb, "embedding", m=4, n_codes=32, sample_rows=256, seed=11)
-        pq_save(spark, books, str(tmp_path / "pq"))
-        back = pq_load(spark, str(tmp_path / "pq"))
-        assert back.shape == books.shape
-        assert np.array_equal(back, books)
 
     def test_pq_encode_plan_is_pure_projection(self, spark, emb):
         """Encoding is a zero-shuffle projection — no Exchange at all."""
@@ -1296,7 +1274,7 @@ class TestStreamingDriftMonitor:
         import numpy as np
         import pandas as pd
 
-        from preprocessor_spark.operators.drift import ks_report, ks_statistic
+        from preprocessor_spark.operators.drift import ks_report
 
         rng = np.random.RandomState(11)
         ref_pdf = pd.DataFrame({"x": np.round(rng.normal(0, 1, 300), 3)})
@@ -1320,7 +1298,7 @@ class TestStreamingDriftMonitor:
 
         def monitor(batch_df, _bid):
             if batch_df.count():
-                seen.append(ks_statistic(ks_report(ref, batch_df, "x")))
+                seen.append(_ks_statistic(ks_report(ref, batch_df, "x")))
 
         q = (
             spark.readStream.schema("x double")
@@ -1332,7 +1310,7 @@ class TestStreamingDriftMonitor:
         )
         q.awaitTermination(120)
 
-        want = ks_statistic(ks_report(ref, spark.createDataFrame(cur_pdf), "x"))
+        want = _ks_statistic(ks_report(ref, spark.createDataFrame(cur_pdf), "x"))
         assert seen and abs(seen[-1] - want) < 1e-12
         assert want > 0.15  # the planted mean shift is detectable
 
@@ -1687,76 +1665,36 @@ class TestDistributedKMeans:
         import numpy as np
 
         from preprocessor_spark.operators.clustering import (
-            assign_kmeans,
-            fit_kmeans,
-            kmeans_cluster_stats,
+            fit_kmeans_exact,
+            kmeans_cluster_stats_exact,
         )
 
         df, X, labels = self._blobs(spark)
-        model = fit_kmeans(df, "emb", k=3, max_iter=15, id_col="vid", seed=5)
-        # Lloyd monotonicity: SSE under successive centroid sets never rises
-        hist = model.inertia_history
-        assert all(hist[i + 1] <= hist[i] + 1e-6 for i in range(len(hist) - 1))
-        rows = assign_kmeans(df, "emb", model).select("vid", "true_label", "cluster").collect()
-        # purity: every true blob maps to one dominant fitted cluster
-        from collections import Counter
-
-        purity = 0
-        for t in range(3):
-            cnt = Counter(r["cluster"] for r in rows if r["true_label"] == t)
-            purity += cnt.most_common(1)[0][1]
-        assert purity >= 0.99 * len(rows)
-        # assignment == numpy argmin of the final centroids, exactly
-        got = {r["vid"]: r["cluster"] for r in rows}
+        model = fit_kmeans_exact(df, "emb", id_col="vid", k=3, iters=4)
         cents = model.centroids
+        # purity: each planted blob is exactly one fitted cluster
         want = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-        assert all(got[i] == want[i] for i in range(len(X)))
-        # stats: sizes sum to n, SSE close to the numpy value
-        stats = kmeans_cluster_stats(df, "emb", model).collect()
-        assert sum(r["n"] for r in stats) == len(X)
-        sse_np = float(
-            (((X - cents[want]) ** 2).sum(axis=1)).sum()
-        )
+        for t in range(3):
+            assert len(set(want[labels == t])) == 1
+        assert len(set(want)) == 3
+        # stats: sizes match the numpy assignment, SSE close to numpy's
+        stats = kmeans_cluster_stats_exact(df, "emb", model).collect()
+        assert {r["cluster"]: r["n"] for r in stats} == {
+            c: int((want == c).sum()) for c in range(3)
+        }
+        sse_np = float((((X - cents[want]) ** 2).sum(axis=1)).sum())
         assert abs(sum(r["sse"] for r in stats) - sse_np) < 1e-6 * max(1.0, sse_np)
-
-    def test_refit_bit_reproducible(self, spark):
-        import numpy as np
-
-        from preprocessor_spark.operators.clustering import fit_kmeans
-
-        df, _, _ = self._blobs(spark, n_per=60)
-        m1 = fit_kmeans(df, "emb", k=3, max_iter=6, id_col="vid", seed=9)
-        m2 = fit_kmeans(df, "emb", k=3, max_iter=6, id_col="vid", seed=9)
-        assert np.array_equal(m1.centroids, m2.centroids)
-        assert m1.inertia_history == m2.inertia_history
-
-    def test_save_load_roundtrip(self, spark, tmp_path):
-        import numpy as np
-
-        from preprocessor_spark.operators.clustering import (
-            fit_kmeans,
-            load_kmeans,
-            save_kmeans,
-        )
-
-        df, _, _ = self._blobs(spark, n_per=40)
-        m = fit_kmeans(df, "emb", k=3, max_iter=4, id_col="vid")
-        p = str(tmp_path / "km.npz")
-        save_kmeans(m, p)
-        m2 = load_kmeans(p)
-        assert np.array_equal(m.centroids, m2.centroids)
-        assert m.inertia_history == m2.inertia_history
 
     def test_more_clusters_than_points(self, spark):
         import pandas as pd
 
-        from preprocessor_spark.operators.clustering import fit_kmeans
+        from preprocessor_spark.operators.clustering import fit_kmeans_exact
 
         pdf = pd.DataFrame(
             {"vid": [0, 1], "emb": [[0.0, 0.0], [1.0, 1.0]]}
         )
-        m = fit_kmeans(spark.createDataFrame(pdf), "emb", k=5, max_iter=3, id_col="vid")
-        assert m.centroids.shape[0] == 2  # capped at n distinct sample rows
+        with pytest.raises(ValueError, match="k larger than the sample"):
+            fit_kmeans_exact(spark.createDataFrame(pdf), "emb", id_col="vid", k=5, iters=3)
 
 
 class TestPerceptualHash:
@@ -1785,13 +1723,22 @@ class TestPerceptualHash:
         assert ham(h0, h1) <= 3
         assert ham(h0, h2) >= 20
 
+    def _clusters(self, spark, pdf, **kw):
+        from preprocessor_spark.operators.phash import phash_neardup_clusters
+
+        return {
+            r["id"]: (r["cluster"], r["cluster_size"])
+            for r in phash_neardup_clusters(
+                spark.createDataFrame(pdf), "id", "dhash", **kw
+            ).collect()
+        }
+
     def test_pigeonhole_pairs_exact_vs_bruteforce(self, spark):
         """Chunk-join + bit_count recheck == numpy all-pairs popcount for
-        a deterministic hash set mixing near and far values."""
+        a deterministic hash set mixing near and far values: the clusters
+        equal the components of the brute-force pair graph."""
         import numpy as np
         import pandas as pd
-
-        from preprocessor_spark.operators.phash import phash_neardup_pairs
 
         rng = np.random.RandomState(5)
         base = rng.randint(-(2**63), 2**63, size=40, dtype=np.int64)
@@ -1802,51 +1749,51 @@ class TestPerceptualHash:
             flip = flip - (1 << 64) if flip >= 1 << 63 else flip
             rows.append((i * 10 + 1, flip))
         pdf = pd.DataFrame(rows, columns=["id", "dhash"])
-        got = sorted(
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in phash_neardup_pairs(
-                spark.createDataFrame(pdf), "id", "dhash", max_hamming=3
-            ).collect()
-        )
-        ids = pdf["id"].to_numpy()
+        got = self._clusters(spark, pdf, max_hamming=3)
+        ids = [int(i) for i in pdf["id"]]
         hs = pdf["dhash"].to_numpy().astype(np.uint64)
-        want = []
-        for i in range(len(ids)):
-            for j in range(i + 1, len(ids)):
-                d = int(bin(int(hs[i]) ^ int(hs[j])).count("1"))
-                if d <= 3:
-                    a, b = sorted((int(ids[i]), int(ids[j])))
-                    want.append((a, b, d))
-        assert got == sorted(want)
-        assert len(got) >= 40  # every planted 1-bit neighbor found
+        label = {i: i for i in ids}  # min-label propagation to a fixpoint
+        pairs = [
+            (ids[i], ids[j])
+            for i in range(len(ids))
+            for j in range(i + 1, len(ids))
+            if bin(int(hs[i]) ^ int(hs[j])).count("1") <= 3
+        ]
+        assert len(pairs) >= 40  # every planted 1-bit neighbor is a pair
+        changed = True
+        while changed:
+            changed = False
+            for a, b in pairs:
+                m = min(label[a], label[b])
+                if label[a] != m or label[b] != m:
+                    label[a] = label[b] = m
+                    changed = True
+        sizes = {}
+        for c in label.values():
+            sizes[c] = sizes.get(c, 0) + 1
+        assert got == {i: (label[i], sizes[label[i]]) for i in ids}
 
     def test_mega_clique_dedups_through_exact_collapse(self, spark):
-        """1000 identical hashes — far over max_bucket — used to vanish
-        into the degenerate-bucket drop guard (round-6 code returned zero
-        pairs); the exact-hash collapse routes them through the
-        output-sized hash self-join instead, so the full C(1000,2) clique
-        comes back at hamming 0 and the pigeonhole chunk join never sees
-        the duplication."""
+        """1000 identical hashes — far over max_bucket — collapse to ONE
+        representative before the chunk join, so the degenerate-bucket
+        guard never sees the duplication: a 1-bit neighbor of the clique
+        still joins it, and all 1001 images form one cluster."""
         import pandas as pd
 
-        from preprocessor_spark.operators.phash import phash_neardup_pairs
-
-        pdf = pd.DataFrame({"id": range(1000), "dhash": [12345] * 1000})
-        out = phash_neardup_pairs(
-            spark.createDataFrame(pdf), "id", "dhash", max_hamming=3, max_bucket=100
+        pdf = pd.DataFrame(
+            {"id": range(1001), "dhash": [12345] * 1000 + [12345 ^ 1]}
         )
-        assert out.count() == 1000 * 999 // 2
-        assert out.agg({"hamming": "max"}).first()[0] == 0
+        got = self._clusters(spark, pdf, max_hamming=3, max_bucket=100)
+        assert set(got.values()) == {(0, 1001)}
 
     def test_bucket_guard_drops_adversarial_distinct_chunk(self, spark):
         """max_bucket still bounds DISTINCT-hash chunk buckets: 200
         distinct hashes sharing three whole chunks put 200 rows in each
         shared (chunk, value) bucket — over the 100 cap — so the guard
         drops those buckets (documented recall sacrifice on adversarial
-        diversity) and no quadratic candidate join runs."""
+        diversity) and no quadratic candidate join runs: every image stays
+        its own cluster."""
         import pandas as pd
-
-        from preprocessor_spark.operators.phash import phash_neardup_pairs
 
         # distinct values that agree on chunks 0-2 (bits 0..47) and pack
         # their differences into the top 16 bits (any two differ there)
@@ -1857,10 +1804,8 @@ class TestPerceptualHash:
         pdf = pd.DataFrame(
             {"id": range(200), "dhash": [signed(i << 48) for i in range(200)]}
         )
-        out = phash_neardup_pairs(
-            spark.createDataFrame(pdf), "id", "dhash", max_hamming=3, max_bucket=100
-        )
-        assert out.count() == 0
+        got = self._clusters(spark, pdf, max_hamming=3, max_bucket=100)
+        assert got == {i: (i, 1) for i in range(200)}
 
     def test_dhash_batch_matches_scalar(self, spark):
         """Vectorized reduceat pooling is bit-identical to the scalar
@@ -1880,115 +1825,17 @@ class TestPerceptualHash:
         assert dhash64_batch(imgs) == [dhash64(a) for a in imgs]
 
     def test_no_cross_product_plan(self, spark):
+        """The rep-level pigeonhole pairing is a chunk equi-join."""
         import pandas as pd
 
-        from preprocessor_spark.operators.phash import phash_neardup_pairs
+        from preprocessor_spark.operators.phash import _rep_near_pairs
 
-        pdf = pd.DataFrame({"id": [1, 2, 3], "dhash": [7, 7, 99]})
+        pdf = pd.DataFrame({"__id": [1, 2, 3], "__h": [7, 7, 99]})
         plan = (
-            phash_neardup_pairs(spark.createDataFrame(pdf), "id", "dhash")
+            _rep_near_pairs(spark.createDataFrame(pdf), 3, 10_000)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-
-
-class TestBm25IndexLifecycle:
-    def _docs(self, spark):
-        rows = [
-            (0, "spark shuffles data across the cluster"),
-            (1, "bm25 ranks documents by term frequency"),
-            (2, "the quick brown fox jumps over the lazy dog"),
-            (3, "term frequency and inverse document frequency"),
-            (4, "spark spark spark tuning guide"),
-            (5, "an unrelated recipe for sourdough bread"),
-            (6, "frequency analysis of spark shuffle spills"),
-        ]
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    def test_index_search_equals_direct_search(self, spark, tmp_path):
-        """Saved+reloaded index answers == corpus-rescan bm25_topk,
-        row for row, for several queries."""
-        from preprocessor_spark.caching import persist_scope
-        from preprocessor_spark.operators.search import (
-            bm25_build_index,
-            bm25_load_index,
-            bm25_save_index,
-            bm25_search_index,
-            bm25_topk,
-        )
-
-        docs = self._docs(spark)
-        idx = bm25_build_index(docs, n_buckets=8)
-        p = str(tmp_path / "bm25")
-        bm25_save_index(idx, p)
-        loaded = bm25_load_index(spark, p)
-        assert (loaded.n_docs, loaded.n_buckets) == (7, 8)
-        assert abs(loaded.avgdl - idx.avgdl) == 0.0
-        for q in (["spark", "shuffle"], ["frequency"], ["lazy", "bread", "spark"]):
-            got = [
-                (r["doc_id"], r["n_matched_terms"], r["score"])
-                for r in bm25_search_index(loaded, q, k=5).collect()
-            ]
-            with persist_scope():
-                want = [
-                    (r["doc_id"], r["n_matched_terms"], r["score"])
-                    for r in bm25_topk(docs, q, k=5).collect()
-                ]
-            assert got == want, q
-
-    def test_bucket_pruning_reads_only_query_term_partitions(
-        self, spark, tmp_path
-    ):
-        """File-level proof: the pruned postings scan touches only the
-        query terms' __tb directories, and the pruned index search returns
-        the direct (unindexed) search's answer."""
-        from preprocessor_spark.caching import persist_scope
-        from preprocessor_spark.operators.search import (
-            _term_bucket,
-            bm25_build_index,
-            bm25_load_index,
-            bm25_save_index,
-            bm25_search_index,
-            bm25_topk,
-        )
-
-        docs = self._docs(spark)
-        bm25_save_index(bm25_build_index(docs, n_buckets=16), str(tmp_path / "ix"))
-        loaded = bm25_load_index(spark, str(tmp_path / "ix"))
-        q = ["spark", "frequency"]
-        cols = ("doc_id", "n_matched_terms", "score")
-        on = [tuple(r[c] for c in cols) for r in bm25_search_index(loaded, q, k=7).collect()]
-        with persist_scope():
-            off = [tuple(r[c] for c in cols) for r in bm25_topk(docs, q, k=7).collect()]
-        assert on == off and len(on) >= 4
-        bkts = sorted(
-            r["b"]
-            for r in spark.createDataFrame([(t,) for t in q], "t string")
-            .select(_term_bucket(F.col("t"), 16).alias("b"))
-            .distinct()
-            .collect()
-        )
-        # the search itself pushes exactly those buckets into both scans
-        from preprocessor_spark.plans import formatted_plan
-
-        plan = formatted_plan(bm25_search_index(loaded, q, k=7))
-        in_bkts = rf"PartitionFilters: \[__tb#\d+ IN \({','.join(str(b) for b in bkts)}\)\]"
-        assert len(re.findall(in_bkts, plan)) == 2, plan
-        pruned = loaded.postings.filter(F.col("__tb").isin(bkts))
-        files = [
-            r["f"]
-            for r in pruned.select(F.input_file_name().alias("f")).distinct().collect()
-        ]
-        assert files
-        for f in files:
-            assert any(f"__tb={bv}/" in f for bv in bkts), f
-        all_files = [
-            r["f"]
-            for r in loaded.postings.select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        ]
-        assert len(set(all_files)) > len(set(files))
